@@ -193,7 +193,7 @@ object Relational {
     * supplier key as deterministic tie-break), then the part/supplier
     * dims broadcast onto the winner rows.
     *
-    * The argmin is ONE `minByAgg(struct(price, suppkey))` aggregate
+    * The argmin is ONE `min(struct(price, suppkey))` aggregate
     * (r18, guide §2.3/§2.4): struct ordering is
     * lexicographic, so the minimum IS the window's (price ASC, suppkey
     * ASC) rank-1 row — and tied (price, suppkey) pairs carry identical

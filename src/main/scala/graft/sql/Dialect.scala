@@ -30,6 +30,15 @@ sealed trait Dialect {
   def dropTableSql(schema: String, name: String): String
   /** Map a generic DDL type to this dialect (VARCHAR(MAX) is MSSQL-only). */
   def ddlType(t: graft.types.SqlTypeMapper.SqlType): String
+  /** Non-unique index on `keys` of `schema.table`, named
+    * [[Dialect.keyIndexName]] — the index the upsert's MERGE probes
+    * (SqlSink.ensureKeyIndex). Never UNIQUE: appends may legally add
+    * duplicate keys (reference parity). */
+  def createKeyIndexSql(schema: String, table: String,
+      keys: Seq[String]): String
+  /** Make Spark's JDBC writer bind this engine's types correctly;
+    * called before every distributed write, so it must be idempotent. */
+  private[sql] def registerSparkDialect(): Unit = ()
   /** Delete every row of `schema.table` whose `attCol` is not its
     * partition's (pidCol group's) MINIMUM — the staged-upsert
     * duplicate-attempt collapse (SqlSink.dedupStagedUpsert). The
@@ -46,6 +55,27 @@ sealed trait Dialect {
       s"(SELECT MIN(m.${quote(attCol)}) FROM $t m " +
       s"WHERE m.${quote(pidCol)} = s.${quote(pidCol)})" +
       statementTerminator
+  }
+}
+
+object Dialect {
+  private val keyIndexSuffix = "__graft_key"
+  /** Identifier length limit shared by SQL Server (sysname) and Derby. */
+  private val maxIdentifier = 128
+
+  /** `<table>__graft_key`. A table name too long for the 128-character
+    * limit is cut and followed by 8 hex digits of its SHA-256, so two
+    * long names that share a prefix still get distinct index names. */
+  def keyIndexName(table: String): String = {
+    val t = table.strip()
+    if (t.length + keyIndexSuffix.length <= maxIdentifier) t + keyIndexSuffix
+    else {
+      val hash = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .take(4).map(b => f"${b & 0xff}%02x").mkString
+      t.take(maxIdentifier - keyIndexSuffix.length - hash.length - 1) +
+        "_" + hash + keyIndexSuffix
+    }
   }
 }
 
@@ -74,6 +104,11 @@ case object SqlServerDialect extends Dialect {
   def dropTableSql(schema: String, name: String): String =
     s"DROP TABLE IF EXISTS ${table(schema, name)}"
   def ddlType(t: graft.types.SqlTypeMapper.SqlType): String = t.ddl
+  // T-SQL index names are per table and may not be schema-qualified
+  def createKeyIndexSql(schema: String, table: String,
+      keys: Seq[String]): String =
+    s"CREATE INDEX ${quote(Dialect.keyIndexName(table))} ON " +
+      s"${this.table(schema, table)} (${keys.map(quote).mkString(", ")})"
   // T-SQL's alias-DELETE extension: a plain searched DELETE cannot
   // alias its target, and the unaliased target is awkward to
   // reference from the correlated subquery — `DELETE s FROM … s` is
@@ -109,4 +144,14 @@ case object DerbyDialect extends Dialect {
       case other => other.ddl
     }
   }
+  // Derby index names live in a schema: qualify with the table's, so
+  // the same table name in two schemas gets one index in each
+  def createKeyIndexSql(schema: String, table: String,
+      keys: Seq[String]): String =
+    s"CREATE INDEX ${this.table(schema, Dialect.keyIndexName(table))} ON " +
+      s"${this.table(schema, table)} (${keys.map(quote).mkString(", ")})"
+  // Spark's built-in Derby dialect binds strings as CLOB, and Derby
+  // refuses a CLOB-typed null for a VARCHAR column
+  override private[sql] def registerSparkDialect(): Unit =
+    org.apache.spark.sql.jdbc.GraftDerbyDialect.register
 }

@@ -1,5 +1,7 @@
 package graft.sql
 
+import java.sql.Connection
+
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 import graft.checks.Validations
@@ -16,8 +18,23 @@ import graft.types.SqlTypeMapper.SqlType
   *  - **append** (O13): distributed JDBC append, no DDL — the schema
   *    must already match, same trust as the reference;
   *  - **upsert** (O14): key-uniqueness assert, stage the frame into
-  *    `staging.<table>` (DDL-replaced), run the generated MERGE text
-  *    over one raw connection, then drop staging (`cleanStaging`).
+  *    `staging.<table>` (DDL-replaced), make sure the target has an
+  *    index on the `idField` columns ([[ensureKeyIndex]]), run the
+  *    generated MERGE text, then drop staging (`cleanStaging`).
+  *
+  * Side effect of upsert: the target is left with a NON-unique index
+  * `<table>__graft_key` on the key columns, so the MERGE seeks each
+  * staged key instead of reading the whole target. An existing index
+  * (PK, unique or plain) whose leading columns are the keys, in any
+  * order, is reused instead. `create` drops the index with the table
+  * and the next upsert rebuilds it. No index is made when the keys'
+  * declared width exceeds 900 bytes (VARCHAR(MAX), Derby's
+  * VARCHAR(32672)) or when CREATE INDEX fails (say, no ALTER
+  * permission): the MERGE then reads the whole target.
+  *
+  * Every driver-side statement of one `write` (schema, DDL, dedup,
+  * index, MERGE, staging drop) runs over ONE connection, each in
+  * autocommit.
   *
   * The ADF control plane (linked services, pipeline resources, 1 s
   * polling) collapses into this sequential driver code: the Spark write
@@ -65,20 +82,22 @@ object SqlSink {
     s"CREATE TABLE ${cfg.dialect.table(schema, cfg.table)} ($cols)"
   }
 
-  private def replaceTable(df: DataFrame, cfg: Config, schema: String): Unit = {
+  private def replaceTable(conn: Connection, df: DataFrame, cfg: Config,
+      schema: String): Unit = {
     cfg.dialect.createSchemaSql(schema)
-      .foreach(JdbcOps.executeIgnore(cfg.url, _))
+      .foreach(JdbcOps.executeIgnore(conn, _))
     // DDL text BEFORE the DROP: inference can throw (an unmapped dtype,
     // a failed refine scan), and a throw after the DROP would leave the
     // standing target destroyed with nothing created in its place —
     // create is drop+recreate (reference export.py:169), but never
     // drop-then-maybe-recreate
     val ddl = createTableSql(df, cfg, schema)
-    JdbcOps.executeIgnore(cfg.url, cfg.dialect.dropTableSql(schema, cfg.table))
-    JdbcOps.execute(cfg.url, ddl)
+    JdbcOps.executeIgnore(conn, cfg.dialect.dropTableSql(schema, cfg.table))
+    JdbcOps.execute(conn, ddl)
   }
 
   private def jdbcAppend(df: DataFrame, cfg: Config, schema: String): Unit = {
+    cfg.dialect.registerSparkDialect()
     val repart = cfg.numPartitions.map(df.repartition(_)).getOrElse(df)
     repart.write
       .format("jdbc")
@@ -138,11 +157,12 @@ object SqlSink {
         graft.functions.TaskAttemptId()))
   }
 
-  private[sql] def stageForAppend(norm: DataFrame, cfg: Config): Unit = {
+  private[sql] def stageForAppend(conn: Connection, norm: DataFrame,
+      cfg: Config): Unit = {
     val tagged = tagAttempts(norm, cfg)
     val scfg = cfg.copy(table = appendStagingTable(cfg),
       numPartitions = None) // already repartitioned under the tags
-    replaceTable(tagged, scfg, cfg.stagingSchema)
+    replaceTable(conn, tagged, scfg, cfg.stagingSchema)
     jdbcAppend(tagged, scfg, cfg.stagingSchema)
   }
 
@@ -155,7 +175,8 @@ object SqlSink {
     * INSERT..SELECT: the DB applies all of it or none, so a driver
     * crash leaves either an untouched target (replayable) or a
     * fully-appended one. */
-  private[sql] def finalizeAppend(norm: DataFrame, cfg: Config): Unit = {
+  private[sql] def finalizeAppend(conn: Connection, norm: DataFrame,
+      cfg: Config): Unit = {
     val d = cfg.dialect
     val cols = norm.columns.map(d.quote).mkString(", ")
     val stg = d.table(cfg.stagingSchema, appendStagingTable(cfg))
@@ -166,14 +187,14 @@ object SqlSink {
     // duplicate copy. The correlated form is collision-proof by
     // construction; the 200-trial finalize fuzz forges exactly those
     // collisions and fails the IN form at trial 2
-    JdbcOps.execute(cfg.url,
+    JdbcOps.execute(conn,
       s"INSERT INTO ${d.table(cfg.schema, cfg.table)} ($cols) " +
         s"SELECT $cols FROM $stg s WHERE s.${d.quote(attCol)} = " +
         s"(SELECT MIN(m.${d.quote(attCol)}) FROM $stg m " +
         s"WHERE m.${d.quote(pidCol)} = s.${d.quote(pidCol)})" +
         d.statementTerminator)
     if (cfg.cleanStaging)
-      JdbcOps.executeIgnore(cfg.url,
+      JdbcOps.executeIgnore(conn,
         d.dropTableSql(cfg.stagingSchema, appendStagingTable(cfg)))
   }
 
@@ -184,9 +205,25 @@ object SqlSink {
     * ride in staging, the MERGE names only data columns. Correlated to
     * the delete target by its exposed (unqualified) table name — the
     * standard-SQL outer reference both SQL Server and Derby resolve. */
-  private def dedupStagedUpsert(cfg: Config): Unit =
-    JdbcOps.execute(cfg.url, cfg.dialect.deleteLosingAttempts(
+  private def dedupStagedUpsert(conn: Connection, cfg: Config): Unit =
+    JdbcOps.execute(conn, cfg.dialect.deleteLosingAttempts(
       cfg.stagingSchema, cfg.table, pidCol, attCol))
+
+  /** Widest key the upsert indexes: SQL Server's clustered-key limit,
+    * well inside Derby's half-page limit. A wider declared key could
+    * not be stored in the index, so appends of long keys would fail. */
+  private val maxIndexedKeyBytes = 900L
+
+  /** Give the target a non-unique index on the keys unless its
+    * metadata shows one already, or the keys are too wide. A failed
+    * CREATE INDEX is swallowed: the MERGE then runs unindexed, the only
+    * path that works for a login without ALTER on the target. A missing
+    * target is left to the MERGE to report. */
+  private def ensureKeyIndex(conn: Connection, cfg: Config): Unit =
+    JdbcOps.keyIndexFacts(conn, cfg.schema, cfg.table, cfg.idField)
+      .filter(k => !k.indexed && k.keyBytes <= maxIndexedKeyBytes)
+      .foreach(_ => JdbcOps.executeIgnore(conn, cfg.dialect
+        .createKeyIndexSql(cfg.schema, cfg.table, cfg.idField)))
 
   /** Entry point: validate, normalize, route on method. Returns true if
     * anything was written (false = empty-input short-circuit, O3).
@@ -224,47 +261,50 @@ object SqlSink {
     Validations.requireIdField(cfg.method, cfg.idField)
     if (Validations.isEmpty(dfT)) return false
     val norm = SqlTypeMapper.normalizeIntervals(dfT)
-    cfg.method match {
-      case Method.Create =>
-        replaceTable(norm, cfg, cfg.schema)
-        if (cfg.exactlyOnceAppend) {
-          // the freshly-created target deserves the same retry
-          // discipline as an exactly-once append: the direct JDBC
-          // write commits per partition, so a post-commit task retry
-          // would double that partition's rows in a table whose
-          // content should be exactly `df`
-          stageForAppend(norm, cfg)
-          finalizeAppend(norm, cfg)
-        } else jdbcAppend(norm, cfg, cfg.schema)
-      case Method.Append if cfg.exactlyOnceAppend =>
-        stageForAppend(norm, cfg)
-        finalizeAppend(norm, cfg)
-      case Method.Append =>
-        jdbcAppend(norm, cfg, cfg.schema)
-      case Method.Upsert =>
-        // staging under the TARGET's own name: equal schemas would
-        // make replaceTable drop the target itself and the MERGE
-        // self-merge — every pre-existing row silently lost
-        require(cfg.schema != cfg.stagingSchema,
-          s"upsert stages under '${cfg.stagingSchema}.${cfg.table}' — " +
-            "stagingSchema must differ from the target schema, or the " +
-            "staging DDL replaces the target itself")
-        Validations.requireUniqueKeys(norm, cfg.idField)
-        // staging rides the (pid, att) tags so a post-commit task
-        // retry (at-least-once JDBC writer) cannot leave two copies
-        // of a partition for the MERGE to double-insert under new
-        // keys; dedupStagedUpsert collapses to one attempt per pid
-        val tagged = tagAttempts(norm, cfg)
-        val scfg = cfg.copy(numPartitions = None)
-        replaceTable(tagged, scfg, cfg.stagingSchema)
-        jdbcAppend(tagged, scfg, cfg.stagingSchema)
-        dedupStagedUpsert(cfg)
-        val merge = MergeBuilder(cfg.table, cfg.schema, cfg.idField,
-          norm.columns.toSeq, cfg.dialect, cfg.stagingSchema)
-        JdbcOps.execute(cfg.url, merge.mergeStatement)
-        if (cfg.cleanStaging)
-          JdbcOps.executeIgnore(cfg.url,
-            cfg.dialect.dropTableSql(cfg.stagingSchema, cfg.table))
+    if (cfg.method == Method.Append && !cfg.exactlyOnceAppend)
+      jdbcAppend(norm, cfg, cfg.schema) // no driver-side statement
+    else JdbcOps.withConnection(cfg.url) { conn =>
+      cfg.method match {
+        case Method.Create =>
+          replaceTable(conn, norm, cfg, cfg.schema)
+          if (cfg.exactlyOnceAppend) {
+            // the freshly-created target deserves the same retry
+            // discipline as an exactly-once append: the direct JDBC
+            // write commits per partition, so a post-commit task retry
+            // would double that partition's rows in a table whose
+            // content should be exactly `df`
+            stageForAppend(conn, norm, cfg)
+            finalizeAppend(conn, norm, cfg)
+          } else jdbcAppend(norm, cfg, cfg.schema)
+        case Method.Append =>
+          stageForAppend(conn, norm, cfg)
+          finalizeAppend(conn, norm, cfg)
+        case Method.Upsert =>
+          // staging under the TARGET's own name: equal schemas would
+          // make replaceTable drop the target itself and the MERGE
+          // self-merge — every pre-existing row silently lost
+          require(cfg.schema != cfg.stagingSchema,
+            s"upsert stages under '${cfg.stagingSchema}.${cfg.table}' — " +
+              "stagingSchema must differ from the target schema, or the " +
+              "staging DDL replaces the target itself")
+          Validations.requireUniqueKeys(norm, cfg.idField)
+          // staging rides the (pid, att) tags so a post-commit task
+          // retry (at-least-once JDBC writer) cannot leave two copies
+          // of a partition for the MERGE to double-insert under new
+          // keys; dedupStagedUpsert collapses to one attempt per pid
+          val tagged = tagAttempts(norm, cfg)
+          val scfg = cfg.copy(numPartitions = None)
+          replaceTable(conn, tagged, scfg, cfg.stagingSchema)
+          jdbcAppend(tagged, scfg, cfg.stagingSchema)
+          dedupStagedUpsert(conn, cfg)
+          ensureKeyIndex(conn, cfg)
+          val merge = MergeBuilder(cfg.table, cfg.schema, cfg.idField,
+            norm.columns.toSeq, cfg.dialect, cfg.stagingSchema)
+          JdbcOps.execute(conn, merge.mergeStatement)
+          if (cfg.cleanStaging)
+            JdbcOps.executeIgnore(conn,
+              cfg.dialect.dropTableSql(cfg.stagingSchema, cfg.table))
+      }
     }
     true
   }

@@ -108,4 +108,37 @@ class MergeBuilderSpec extends AnyFunSuite {
         "WHEN NOT MATCHED THEN INSERT (\"id\", \"v\") " +
         "VALUES (s.\"id\", s.\"v\")")
   }
+
+  test("key index DDL: T-SQL names the index bare, Derby qualifies it " +
+    "with the table's schema") {
+    assert(SqlServerDialect.createKeyIndexSql("dbo", "sample", Seq("id")) ===
+      "CREATE INDEX [sample__graft_key] ON [dbo].[sample] ([id])")
+    assert(DerbyDialect.createKeyIndexSql("app", "sample", Seq("k1", "k2")) ===
+      "CREATE INDEX \"app\".\"sample__graft_key\" ON \"app\".\"sample\" " +
+        "(\"k1\", \"k2\")")
+  }
+
+  test("key index DDL escapes quote characters in table and key names") {
+    assert(SqlServerDialect.createKeyIndexSql("dbo", "a]b", Seq("k]1", " k2 ")) ===
+      "CREATE INDEX [a]]b__graft_key] ON [dbo].[a]]b] ([k]]1], [k2])")
+    assert(DerbyDialect.createKeyIndexSql("s", "a\"b", Seq("k\"1")) ===
+      "CREATE INDEX \"s\".\"a\"\"b__graft_key\" ON \"s\".\"a\"\"b\" " +
+        "(\"k\"\"1\")")
+  }
+
+  test("key index name: <table>__graft_key, capped at 128 characters " +
+    "with a hash suffix") {
+    assert(Dialect.keyIndexName(" t ") === "t__graft_key")
+    val fits = "x" * (128 - "__graft_key".length)
+    assert(Dialect.keyIndexName(fits) === fits + "__graft_key")
+    // cut to 108 characters + "_" + 8 hex digits of the name's SHA-256
+    assert(Dialect.keyIndexName("y" * 200 + "a") ===
+      "y" * 108 + "_0eba8d93__graft_key")
+    assert(Dialect.keyIndexName("y" * 200 + "a").length === 128)
+    // a shared prefix does not make two long names collide
+    assert(Dialect.keyIndexName("y" * 200 + "b") !==
+      Dialect.keyIndexName("y" * 200 + "a"))
+    assert(SqlServerDialect.createKeyIndexSql("dbo", fits + "z", Seq("id"))
+      .startsWith(s"CREATE INDEX [${"x" * 108}_"))
+  }
 }

@@ -71,6 +71,17 @@ class SqlSinkMssqlSpec extends SparkSpec {
     val got = readBack(url, "t_mssql_up").as[(Int, String)].collect()
       .sortBy(_._1).toSeq
     assert(got === Seq((1, "n1"), (3, "o3"), (5, "n5")))
+    // the upsert left its non-unique key index on the target, with
+    // exactly one key column, `id`
+    def keyColumns(cond: String) = JdbcOps.queryCount(url,
+      "SELECT COUNT(*) FROM sys.indexes i JOIN sys.index_columns ic " +
+        "ON ic.object_id = i.object_id AND ic.index_id = i.index_id " +
+        "JOIN sys.columns c ON c.object_id = ic.object_id " +
+        "AND c.column_id = ic.column_id " +
+        "WHERE i.object_id = OBJECT_ID('[graft_it].[t_mssql_up]') " +
+        s"AND i.name = 't_mssql_up__graft_key' AND i.is_unique = 0 AND $cond")
+    assert(keyColumns("ic.key_ordinal > 0") === 1L)
+    assert(keyColumns("ic.key_ordinal = 1 AND c.name = 'id'") === 1L)
   }
 
   test("exactlyOnceAppend: staged T-SQL finalize collapses a forged " +
@@ -81,7 +92,7 @@ class SqlSinkMssqlSpec extends SparkSpec {
     SqlSink.write(Seq((0, "seed")).toDF("id", "v"),
       cfg(url, "t_mssql_eo", Method.Create))
     val batch = Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v")
-    SqlSink.stageForAppend(batch, eo)
+    JdbcOps.withConnection(url)(SqlSink.stageForAppend(_, batch, eo))
     val stg = "[staging].[t_mssql_eo__append]"
     // forge the post-commit-retry wreckage: a second complete attempt
     // of one partition under a fresh attempt id
@@ -91,7 +102,7 @@ class SqlSinkMssqlSpec extends SparkSpec {
       s"INSERT INTO $stg ([id], [v], [__graft_pid], [__graft_att]) " +
         s"SELECT [id], [v], [__graft_pid], [__graft_att] + 100000 " +
         s"FROM $stg WHERE [__graft_pid] = $pid")
-    SqlSink.finalizeAppend(batch, eo)
+    JdbcOps.withConnection(url)(SqlSink.finalizeAppend(_, batch, eo))
     val got = readBack(url, "t_mssql_eo").as[(Int, String)].collect()
       .sortBy(_._1).toSeq
     assert(got === Seq((0, "seed"), (1, "a"), (2, "b"), (3, "c")))
