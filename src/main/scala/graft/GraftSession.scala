@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *    (cluster spark-submit included) — extensions, aggregate
   *    threshold, UTC session time.
   *  - [[builder]]/[[local]]: the local[CPUS] harness shape the repo's
-  *    mains (Bench / Verify / ScaleProbe / Profile) share.
+  *    mains (Bench / Verify / ScaleProbe) share.
   */
 object GraftSession {
 

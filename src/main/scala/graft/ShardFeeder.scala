@@ -6,7 +6,7 @@ package graft
   * the deployment shape [[graft.operators.Sharded]]'s scaladoc
   * claims ("from K separate driver JVMs"). In that shape nothing
   * in-process arbitrates the feeders: the per-store in-JVM monitors
-  * ([[graft.operators.IndexStore.monitorFor]]) see only one feeder
+  * ([[graft.sources.StoreKernel.monitorFor]]) see only one feeder
   * each, so the file-based [[graft.sources.WriterLease]] and the
   * in-lease bootstrap-marker re-probe are the ONLY things standing
   * between two feeders and a lost first batch / torn append. The

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** CROSS-JVM concurrent-ingest probe for the sharded vector store —
   * the companion to [[ShardProbe]] that removes its one honesty
   * asterisk: ShardProbe's feeders are threads in ONE JVM, where the
-  * per-store monitors ([[graft.operators.IndexStore.monitorFor]])
+  * per-store monitors ([[graft.sources.StoreKernel.monitorFor]])
   * arbitrate alongside the leases. Real deployments run one feeder
   * per driver process, where the monitors see one feeder each and the
   * ONLY arbiters are the file-based [[graft.sources.WriterLease]], the

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StoreKernel, StoreMeta, Tables}
 
 /** [[IndexStore.appendBatch]]'s refusal of a batch that re-adds a
   * TOMBSTONED (deleted, not yet folded) vec_id. Its prescribed
@@ -25,7 +25,7 @@ final class TombstonedReAddException(msg: String)
 private[operators] final case class AnnIndexMeta(version: Int, n: Long,
   fp: Long, nl: Int, res_norm: Double, appended_n: Long, subspaces: Int,
   pq_codes: Int, lloyd_iters: Int, pq_lloyd_iters: Int,
-  app_res_sum: Double)
+  app_res_sum: Double) extends StoreMeta
 
 /** Persisted build-once / query-many ANN index (the FAISS
   * train/add/search lifecycle, re-expressed as parquet tables + joins).
@@ -85,7 +85,7 @@ private[operators] final case class AnnIndexMeta(version: Int, n: Long,
   * store must never serve. Fingerprints xor-compose, so an index
   * maintained by [[appendBatch]] matches `ensure` of the grown corpus
   * exactly — incremental maintenance and freshness validation agree.
-  * A persisted validation token (file-listing digest, [[stateDigest]])
+  * A persisted validation token (file-listing digest, [[StoreKernel]])
   * lets repeated stateless ensures of an UNCHANGED corpus+index skip
   * the O(corpus) scan; any observable on-disk change falls back to the
   * full validation, so the token changes the cost of the unchanged
@@ -248,66 +248,11 @@ object IndexStore {
 
   // --- meta ------------------------------------------------------------------
 
-  /** Read a tiny promoted-meta table with a BOUNDED retry over the
-    * promote's two-rename window: a read landing between "live renamed
-    * aside" and "shadow renamed in" sees a missing/partial dir for a
-    * few ms — concluding "absent" there would trigger a FULL rebuild
-    * of a healthy store. Genuine absence (no dir, no in-flight promote
-    * debris) returns None on the first attempt, as before. Shared by
-    * the ANN meta, the lexical meta and the veclists meta (identical
-    * promote discipline). */
-  private[operators] def readPromotedMeta[T](spark: SparkSession,
-      metaPath: String, tag: String)(read: => T): Option[T] = {
-    var left = 3
-    while (true) {
-      val (fs, p) = graft.Scratch.fs(spark, metaPath)
-      val midPromote = fs.exists(new org.apache.hadoop.fs.Path(
-        metaPath + "__shadow")) || fs.exists(new org.apache.hadoop.fs.Path(
-        metaPath + "__old"))
-      if (!fs.exists(p)) {
-        if (!midPromote || left == 0) return None
-      } else {
-        try return Some(read)
-        catch { case e: Throwable =>
-          if (left == 0) {
-            System.err.println(s"[$tag] unreadable meta at $metaPath: " +
-              s"${e.getMessage}; treating store as absent")
-            return None
-          }
-        }
-      }
-      left -= 1
-      Thread.sleep(100)
-    }
-    None
-  }
-
-  private[operators] def readMeta(spark: SparkSession, dir: String)
-      : Option[AnnIndexMeta] = {
-    import spark.implicits._
-    readPromotedMeta(spark, s"$dir/meta", "annidx")(
-      spark.read.parquet(s"$dir/meta").as[AnnIndexMeta].head())
-  }
-
-  /** Shadow-write + promote of `<dir>/meta` (see [[graft.sources
-    * .ParquetSink.promote]] for the first-write rename caveats). */
-  private def writeMeta(spark: SparkSession, dir: String,
-      m: AnnIndexMeta): Unit = {
-    import spark.implicits._
-    val shadow = s"$dir/meta__shadow"
-    Seq(m).toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(shadow)
-    val (fs, sp) = graft.Scratch.fs(spark, shadow)
-    // fence at the COMMIT point: the shadow write above is invisible;
-    // this promote is what makes the new meta the store's truth (a
-    // no-op when this JVM holds no lease on `dir` — shadow-dir calls
-    // during build, heal paths, specs)
-    graft.sources.WriterLease.verify(spark, dir)
-    graft.sources.ParquetSink.promote(fs, sp,
-      new org.apache.hadoop.fs.Path(s"$dir/meta"))
-  }
+  private def meta(spark: SparkSession, dir: String) =
+    StoreKernel.readMeta[AnnIndexMeta](spark, dir, "annidx")
 
   /** Were `m`'s artifacts shaped by the CURRENT format + dial values?
-    * Shared by [[current]] and [[appendBatch]]'s guard: encoding a
+    * Shared by [[ensure]]'s checks and [[appendBatch]]'s guard: encoding a
     * batch against a codebook built under different dials (say,
     * pqSubspaces 8→16 — the joins would silently drop half the
     * subvectors) must be refused, not "succeed" and be discarded by
@@ -318,19 +263,6 @@ object IndexStore {
       m.pq_codes == Similarity.pqCodes &&
       m.lloyd_iters == Similarity.lloydIters &&
       m.pq_lloyd_iters == Similarity.pqLloydIters
-
-  /** Does `m` describe an index the CURRENT code + corpus would build?
-    * Any mismatch — corpus content, dial values, format — means the
-    * artifacts are stale and must not be served. `tombN`/`tombXor`
-    * fold pending deletions into the expectation (see the deletion
-    * section): the corpus legitimately reads meta MINUS the valid
-    * tombstones. The nlist check runs on the OBSERVED corpus size — a
-    * delete (or append) that crosses an nlistFor boundary makes a
-    * retrain the legitimate answer, exactly the maintenance policy. */
-  private def current(m: AnnIndexMeta, n: Long, fp: Long,
-      tombN: Long = 0L, tombXor: Long = 0L): Boolean =
-    dialsMatch(m) && (m.n - tombN) == n && (m.fp ^ tombXor) == fp &&
-      m.nl == Similarity.nlistFor(n)
 
   /** Accumulated drift of every append since the last build:
     * appended-row-weighted mean residual norm ÷ build baseline (the
@@ -347,157 +279,19 @@ object IndexStore {
 
   // --- validation token ------------------------------------------------------
 
-  private[operators] val tokenName = "vtoken"
-
-  /** Digest of the on-disk state a full `ensure` validation vouched
-    * for: the corpus's and the index dir's recursive file listings
-    * (path, length, mtime — sorted, so iteration order is irrelevant)
-    * plus the dial values and format version. Any file created,
-    * removed, resized or re-stamped under either root — a corpus
-    * append, an appendBatch, a compaction, a doctored meta — changes
-    * the digest, so a persisted token matching the CURRENT digest
-    * proves nothing observable moved since the last full validation
-    * and the O(corpus) fingerprint scan + integrity probe can be
-    * skipped. The window this cannot see — an in-place rewrite that
-    * preserves every path, length AND mtime — requires deliberately
-    * forged filesystem state, the same trust class as editing `meta`
-    * itself; any ordinary writer (Spark, the ingest sinks, a shell
-    * `cp`) lands new part-file names or new mtimes. CAVEAT for stores
-    * with coarse mtime granularity (~1 s on some object stores): a
-    * same-length in-place overwrite completed within one mtime tick of
-    * the original write is indistinguishable from "unchanged" for the
-    * BULK tables — for the `meta` table, the semantic core (dials,
-    * counters, corpus fingerprint), the digest additionally folds in
-    * the FULL FILE CONTENT (meta is one row, ~1 KB — one driver-side
-    * read per ensure, still no Spark job), so a same-length same-tick
-    * meta rewrite can never slip under the token. If the remaining
-    * codes-file trust class is too weak for a deployment, disable the
-    * token (delete `vtoken`; every ensure then re-validates in full)
-    * or front the store with one that reports sub-second mtimes.
-    * Driver-side metadata listing only: no Spark job, no data read
-    * beyond the ~1 KB meta files. */
-  private def stateDigest(spark: SparkSession, sfDir: String,
-      dir: String): String =
-    listingDigest(spark, s"$sfDir/embeddings.parquet", dir,
+  /** This store's [[StoreKernel.Store]]: only `valid` tombstones fold
+    * (invalid-norm rows were never fingerprinted); the digest folds in
+    * the format version and dials. */
+  private[operators] def kernelStore(sfDir: String, dir: String)
+      : StoreKernel.Store[AnnIndexMeta] =
+    StoreKernel.Store("annidx", dir, sfDir, s"$sfDir/embeddings.parquet",
+      "vec_id", col("valid"),
       s"v$formatVersion|${Similarity.pqSubspaces}|" +
         s"${Similarity.pqCodes}|${Similarity.lloydIters}|" +
-        s"${Similarity.pqLloydIters}")
-
-  /** The generic core of [[stateDigest]], shared with [[LexIndex]]
-    * (identical trust model, different corpus file and dial line):
-    * digests the corpus file's and the index dir's recursive listings
-    * plus the caller's dial line, folding in the CONTENT of small
-    * files under `<dir>/meta`. Both stores name their token file
-    * [[tokenName]], which the walk skips by construction. */
-  private[operators] def listingDigest(spark: SparkSession,
-      corpusFile: String, dir: String, dialsLine: String): String = {
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    def walk(root: String, contentRoot: Option[String]): Unit = {
-      val (fs, p) = graft.Scratch.fs(spark, root)
-      if (!fs.exists(p)) { entries += s"ABSENT:$root"; return }
-      val contentPrefix = contentRoot
-        .map(cr => fs.makeQualified(
-          new org.apache.hadoop.fs.Path(cr)).toString + "/")
-      // Generations.walkCurrentFiles (plain listStatus recursion), NOT
-      // fs.listFiles: the located-status iterator resolves block
-      // locations per file at ~7 ms each on LocalFileSystem — 0.55 s
-      // for a 74-file index, when the whole point of the token path is
-      // to be cheap. Generation-aware so that RETIRED generations (and
-      // their TTL GC) are digest-invisible — the digest vouches for
-      // current content, and a retention GC must never invalidate a
-      // token over state no reader serves. (Absorbed-but-retained
-      // delta files DO count until reaped — their reap forces one
-      // conservative revalidation, same class as stranded __shadow
-      // debris.) The token itself must not feed its own digest
-      // (writing it would invalidate it); everything else under the
-      // index dir — meta, codes, even stranded __old/__shadow debris —
-      // counts, conservatively forcing a full validation when present.
-      graft.sources.Generations.walkCurrentFiles(fs, p).foreach { s =>
-        if (!s.getPath.getName.startsWith(tokenName)) {
-          val line = s"${s.getPath}|${s.getLen}|${s.getModificationTime}"
-          // the 64 KiB bound keeps a pathological foreign file under
-          // meta/ from turning the cheap path into a bulk read; an
-          // oversized file still digests by listing entry, and a meta
-          // REPLACED by an oversized one changes length/name anyway
-          val content =
-            if (s.getLen <= 65536 &&
-                contentPrefix.exists(s.getPath.toString.startsWith(_)))
-              try {
-                val h = java.security.MessageDigest.getInstance("SHA-256")
-                h.update(graft.Scratch.readSmallFile(fs, s.getPath))
-                "|" + h.digest().map("%02x".format(_)).mkString
-              } catch { case scala.util.control.NonFatal(e) =>
-                // an unreadable meta file (swapped away mid-walk by a
-                // concurrent compaction, foreign permissions) must act
-                // like any other foreign state: a digest the token can
-                // never match, forcing the conservative full
-                // validation — never an ensure() that throws where the
-                // listing-only digest would have fallen back
-                s"|UNREADABLE:${e.getClass.getName}:${System.nanoTime()}"
-              }
-            else ""
-          entries += line + content
-        }
-      }
-    }
-    walk(corpusFile, None)
-    walk(dir, Some(s"$dir/meta"))
-    entries += dialsLine
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    entries.sorted.foreach(e => md.update((e + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** The token carries the digest AND a copy of the meta row: the
-    * digest covers the meta file's own listing entry, so the embedded
-    * copy is exactly as fresh as the digest match itself — and the
-    * zero-job fast path never has to launch the parquet read of
-    * `meta` (a Spark job) just to re-check dials it already vouched
-    * for. Doubles round-trip through `toString`/`toDouble` exactly. */
-  /** Token line = digest + a copy of meta + the tombstone fold terms
-    * that were live at validation time. The digest covers the sidecar
-    * files, so a matching digest vouches for the stored (tombN,
-    * tombXor) without any Spark job — the zero-job fast path stays
-    * zero-job under pending deletions. */
-  private def tokenLine(digest: String, m: AnnIndexMeta,
-      tombN: Long, tombXor: Long): String =
-    s"$digest|${m.version}|${m.n}|${m.fp}|${m.nl}|${m.res_norm}|" +
-      s"${m.appended_n}|${m.subspaces}|${m.pq_codes}|${m.lloyd_iters}|" +
-      s"${m.pq_lloyd_iters}|${m.app_res_sum}|$tombN|$tombXor"
-
-  private def readToken(spark: SparkSession, dir: String)
-      : Option[(String, AnnIndexMeta, Long, Long)] = {
-    val (fs, p) = graft.Scratch.fs(spark, s"$dir/$tokenName")
-    if (!fs.exists(p)) return None
-    val line =
-      // shared EOF-draining read (graft.Scratch.readSmallFile): a
-      // truncated one-read() line would fail the 14-part parse below
-      // and silently disable the fast path
-      try new String(graft.Scratch.readSmallFile(fs, p), "UTF-8").trim
-      catch { case scala.util.control.NonFatal(_) => "" }
-    val parts = line.split('|')
-    if (parts.length != 14) None
-    else try Some((parts(0), AnnIndexMeta(parts(1).toInt, parts(2).toLong,
-      parts(3).toLong, parts(4).toInt, parts(5).toDouble, parts(6).toLong,
-      parts(7).toInt, parts(8).toInt, parts(9).toInt, parts(10).toInt,
-      parts(11).toDouble), parts(12).toLong, parts(13).toLong))
-    catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Best-effort: a failed/torn/garbled token write degrades to a full
-    * validation on the next ensure (digest or parse mismatch), never
-    * to serving stale state — so unlike meta there is no shadow/swap
-    * ceremony. */
-  private def writeToken(spark: SparkSession, dir: String,
-      line: String): Unit =
-    try {
-      val (fs, p) = graft.Scratch.fs(spark, s"$dir/$tokenName")
-      val out = fs.create(p, true)
-      try out.write(line.getBytes("UTF-8")) finally out.close()
-    } catch { case e: Throwable =>
-      System.err.println(s"[annidx] token write failed at $dir " +
-        s"(${e.getMessage}); next ensure will re-validate in full")
-    }
+        s"${Similarity.pqLloydIters}",
+      f => AnnIndexMeta(f(0).toInt, f(1).toLong, f(2).toLong, f(3).toInt,
+        f(4).toDouble, f(5).toLong, f(6).toInt, f(7).toInt, f(8).toInt,
+        f(9).toInt, f(10).toDouble))
 
   /** Are the codes tables present and consistent with `m`? Catches the
     * three states the corpus fingerprint CANNOT see, because the rows
@@ -554,7 +348,7 @@ object IndexStore {
           countDistinct(when(!col("c"), col("vec_id"))))
         .head()
       r.getLong(0) == r.getLong(1) && r.getLong(0) == m.n
-    } catch { case e: Throwable =>
+    } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[annidx] codes tables unreadable at $dir " +
         s"(${e.getMessage}); rebuilding")
       false
@@ -630,18 +424,7 @@ object IndexStore {
         .select(col("vec_id"), col("cell"), col("sub"), col("code")))
     }
     val baseline = baselineT()
-
-    // per-attempt-unique shadow: two builders (different JVMs share no
-    // lock) must never interleave their parquet output inside one
-    // shadow dir — each writes a complete candidate, last promote
-    // wins. Crashed attempts strand their shadow, so sweep stale ones
-    // first (quiesced-maintenance contract: nothing else is mid-build
-    // here; a swept CONCURRENT builder fails loudly at write/promote,
-    // never corrupts the live index).
-    val shadow = s"${dir}__shadow_${java.util.UUID.randomUUID().toString.take(8)}"
-    val (fs, sp) = graft.Scratch.fs(spark, shadow)
-    val stale = fs.globStatus(new org.apache.hadoop.fs.Path(s"${dir}__shadow_*"))
-    if (stale != null) stale.foreach(s => fs.delete(s.getPath, true))
+    val shadow = StoreKernel.buildShadow(spark, dir)
     cents.coalesce(1).write.parquet(s"$shadow/centroids")
     cbook.coalesce(1).write.parquet(s"$shadow/codebook")
     rcbook.coalesce(1).write.parquet(s"$shadow/rcodebook")
@@ -656,46 +439,26 @@ object IndexStore {
       Similarity.pqSubspaces, Similarity.pqCodes,
       Similarity.lloydIters, Similarity.pqLloydIters,
       app_res_sum = 0.0)
-    writeMeta(spark, shadow, m)
-    // fence before the swap that makes this candidate the live index
-    graft.sources.WriterLease.verify(spark, dir)
-    graft.sources.ParquetSink.promote(fs, sp,
-      new org.apache.hadoop.fs.Path(dir))
-    // a fresh build from the (already-rewritten) corpus makes every
-    // tombstone moot — and a surviving sidecar would fold a stale xor
-    // into the new meta's expectation, wedging ensure into a rebuild
-    // loop (see the deletion section; the promote above deleted the
-    // live dir's sidecar already, this clears a racing stamp)
-    clearTombstones(spark, dir)
-    // the build IS a full validation (artifacts freshly derived from
-    // the fingerprinted corpus), so the serving fast path starts warm
-    writeToken(spark, dir,
-      tokenLine(stateDigest(spark, sfDir, dir), m, 0L, 0L))
+    StoreKernel.promoteBuild(spark, kernelStore(sfDir, dir), shadow, m)
     BuildInfo(dir, n, nl, builtNow = true,
       buildSec = (System.nanoTime() - t0) / 1e9)
     }
 
   /** Serve-ready index dir for `sfDir`: reuse the persisted one when
-    * it is current (see [[current]]), build otherwise. In-JVM callers
-    * serialize here (Verify dumps queries from several threads; two
+    * it is current (corpus identity, dials, geometry, the
+    * [[tablesIntact]] probe), build otherwise — the
+    * [[StoreKernel.ensure]] lifecycle. In-JVM callers serialize on the
+    * store's monitor (Verify dumps queries from several threads; two
     * concurrent builds of the same dir would race the swap).
     *
     * Cost note: a FULL validation is one 2-column corpus scan (vec_id
     * + embedding feed the fingerprint) plus the [[tablesIntact]] probe
     * (one distinct-count job over the int-column codes tables) — the
     * price of NEVER serving a stale OR structurally damaged index
-    * without any session state. The persisted validation token
-    * ([[stateDigest]]) short-circuits exactly those two Spark jobs on
-    * the unchanged path: a full validation (or a build, which is one)
-    * stamps the digest of the corpus's and index dir's file listings,
-    * and a later stateless call whose CURRENT listings still match
-    * serves after only driver-side metadata work — the in-memory
-    * checks (dials, format, nlist geometry, the rebuild policy) still
-    * run every call. ANY observable change — corpus append, doctored
-    * meta, appendBatch sliver, compaction, torn write — changes the
-    * listings and falls back to the full scan + probe, which
-    * re-stamps the token on success; the doctored-state rebuild
-    * guarantees are therefore unchanged. q69/q70 (stateless driver
+    * without any session state. The kernel's validation token skips
+    * exactly those two Spark jobs while nothing observable on disk
+    * moved (the in-memory checks — dials, format, nlist geometry, the
+    * rebuild policy — still run every call). q69/q70 (stateless driver
     * contract) ride this token; a session-holding caller can still
     * keep the returned `info` and skip ensure entirely between
     * ingests.
@@ -711,7 +474,25 @@ object IndexStore {
     * [[RebuildPolicy]]. */
   def ensure(spark: SparkSession, sfDir: String,
       policy: Option[RebuildPolicy] = None): BuildInfo = {
-    val info = ensureSync(spark, sfDir, policy)
+    val dir = dirFor(spark, sfDir)
+    // the kernel compares the corpus identity against meta MINUS the
+    // pending valid tombstones (see the deletion section); the store
+    // adds its dials, geometry and policy, and the codes-table probe
+    val info = StoreKernel.ensure(spark, kernelStore(sfDir, dir))(
+      // nlist on the EFFECTIVE corpus size — a delete (or append) that
+      // crosses an nlistFor boundary makes a retrain the legitimate
+      // answer, exactly the maintenance policy
+      fastOk = (m, tombN) => dialsMatch(m) &&
+        m.nl == Similarity.nlistFor(m.n - tombN) &&
+        !policy.exists(policyViolated(m, _)),
+      identity = countAndFingerprint,
+      intact = (m, _) => tablesIntact(spark, dir, m),
+      // served size is the EFFECTIVE corpus — shortlist sizing and the
+      // n=0 delegate then match what a rebuilt-on-survivors index
+      // would report
+      serve = (m, tombN) =>
+        BuildInfo(dir, m.n - tombN, m.nl, builtNow = false, buildSec = 0.0),
+      build = known => build(spark, sfDir, dir, knownIdentity = known))
     // layout-policy compaction AFTER the monitor releases, so the
     // compaction path takes lease → monitor like every other public
     // mutator (compactAnnIndex's own order). Running it inside
@@ -723,107 +504,6 @@ object IndexStore {
     // n, nl and the dir don't move.
     if (!info.builtNow) compactIfPolicied(spark, sfDir, info.dir, policy)
     info
-  }
-
-  /** PER-STORE in-JVM monitor (VERDICT r17 #1): the store-level
-    * serve/mutate serialization that used to ride the ONE IndexStore
-    * object monitor now rides a monitor keyed by the store dir, so
-    * two threads of one JVM maintaining DIFFERENT stores (the sharded
-    * ingest's K shard bodies, the streaming sinks' several stores) no
-    * longer serialize each other — the cross-JVM arbiter was always
-    * the per-store [[graft.sources.WriterLease]]; this aligns the
-    * in-JVM one with it. Same-store callers keep exactly the old
-    * mutual exclusion (one canonical monitor object per dir string,
-    * trailing-slash-normalized — all callers obtain dirs from
-    * [[dirFor]]/listsDir, so the strings agree). The OBJECT monitor
-    * (`IndexStore.synchronized`) remains in use as a deliberate
-    * GLOBAL mutex for scratch-pipeline seeding (q78/q79–q82), which
-    * is cross-store by nature. */
-  private[graft] def monitorFor(dir: String): Object =
-    storeMonitors.computeIfAbsent(dir.stripSuffix("/"),
-      _ => new Object)
-
-  private val storeMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def ensureSync(spark: SparkSession, sfDir: String,
-      policy: Option[RebuildPolicy]): BuildInfo = {
-    val dir0 = dirFor(spark, sfDir)
-    monitorFor(dir0).synchronized {
-      val dir = dir0
-      def cheapOk(m: AnnIndexMeta, tombN: Long): Boolean =
-        dialsMatch(m) && m.nl == Similarity.nlistFor(m.n - tombN) &&
-          !policy.exists(policyViolated(m, _))
-      // served size is the EFFECTIVE corpus (meta minus pending valid
-      // tombstones) — shortlist sizing and the n=0 delegate then match
-      // what a rebuilt-on-survivors index would report
-      def serve(m: AnnIndexMeta, tombN: Long): BuildInfo =
-        BuildInfo(dir, m.n - tombN, m.nl, builtNow = false, buildSec = 0.0)
-      val digest = stateDigest(spark, sfDir, dir)
-      readToken(spark, dir) match {
-        // fast path: nothing on disk moved since the full validation
-        // that stamped the token — zero Spark jobs, only the in-memory
-        // checks (on the token's meta + tombstone-fold copy, which the
-        // digest vouches for byte-for-byte with the on-disk state)
-        case Some((d, tm, tombN, _)) if d == digest && cheapOk(tm, tombN) =>
-          serve(tm, tombN)
-        case _ =>
-          readMeta(spark, dir) match {
-            case Some(m) =>
-              // deletion heal FIRST (see the deletion section): a
-              // crashed deleteBatch left tombstones whose ids are
-              // still in the corpus — complete its rewrite before any
-              // validation or rebuild reads the corpus (the only
-              // direction that can never resurrect deleted rows)
-              val (tombRows, tombN, tombXor) = tombAggregates(spark, dir)
-              if (tombRows > 0) {
-                val tids = tombstoneFrame(spark, dir).get
-                  .select(col("vec_id")).distinct()
-                val stillIn = Tables.load(spark, sfDir, "embeddings")
-                  .join(tids.hint("broadcast"), Seq("vec_id"), "left_semi")
-                if (!stillIn.isEmpty) {
-                  System.err.println(s"[annidx] completing a crashed " +
-                    s"delete's corpus rewrite at $sfDir")
-                  // the heal MUTATES the CORPUS — take the corpus-dir
-                  // writer lease for just this rewrite (the same lease
-                  // the streaming sinks hold around their corpus
-                  // appends, so a rewrite can never swap away a file
-                  // an in-flight append just landed). Contention note:
-                  // this rare path (crashed delete) can wait out the
-                  // bounded window inside the store monitor and fail
-                  // LOUDLY to a reader — acceptable for a state that
-                  // only a crashed writer leaves behind; the retry
-                  // heals. The pending probe re-runs INSIDE the lease:
-                  // the wait may have outlasted the crashed delete's
-                  // replay, and the O(corpus) rewrite must not run as
-                  // a token-churning no-op.
-                  graft.sources.WriterLease.withWrite(spark, sfDir,
-                      "delete-heal") {
-                    if (!Tables.load(spark, sfDir, "embeddings")
-                        .join(tids.hint("broadcast"), Seq("vec_id"),
-                          "left_semi").isEmpty)
-                      rewriteTableMinus(spark,
-                        s"$sfDir/embeddings.parquet", tids, "vec_id")
-                  }
-                }
-              }
-              val (n, fp) =
-                countAndFingerprint(Tables.load(spark, sfDir, "embeddings"))
-              if (cheapOk(m, tombN) && current(m, n, fp, tombN, tombXor) &&
-                  tablesIntact(spark, dir, m)) {
-                // validation scans only READ — but the deletion heal
-                // above may have rewritten the corpus, so re-digest
-                // when tombstones are present (rare path; the digest
-                // is driver-side listing work)
-                val d2 = if (tombRows > 0) stateDigest(spark, sfDir, dir)
-                  else digest
-                writeToken(spark, dir, tokenLine(d2, m, tombN, tombXor))
-                serve(m, tombN)
-              } else build(spark, sfDir, dir, knownIdentity = Some((n, fp)))
-            case None => build(spark, sfDir, dir)
-          }
-      }
-    }
   }
 
   /** [[RebuildPolicy.compactAtFilesPerCell]] + [[RebuildPolicy
@@ -851,7 +531,7 @@ object IndexStore {
     // monitor). No current monitor-holding caller passes a policy;
     // refuse loudly if one ever does rather than deadlock-by-timeout.
     require(policy.isEmpty || (!Thread.holdsLock(IndexStore) &&
-        !Thread.holdsLock(monitorFor(dir))),
+        !Thread.holdsLock(StoreKernel.monitorFor(dir))),
       "policied ensure()/compactIfPolicied must not be called while " +
         "holding the IndexStore monitor (global or this store's) — " +
         "lease-then-monitor is the required order (see compactAnnIndex)")
@@ -879,8 +559,8 @@ object IndexStore {
         // tombstone-free store never runs the sidecar agg
         val pendingTombs =
           if (p.foldAtTombstones == Long.MaxValue) 0L
-          else if (tombstoneFrame(spark, dir).isEmpty) 0L
-          else tombAggregates(spark, dir)._2
+          else if (StoreKernel.tombstoneFrame(spark, dir).isEmpty) 0L
+          else StoreKernel.tombAggregates(spark, dir, col("valid"))._2
         ((worst.nonEmpty && worst.max >= p.compactAtFilesPerCell) ||
           pendingTombs >= p.foldAtTombstones, pendingTombs)
       }
@@ -897,29 +577,10 @@ object IndexStore {
             // the compaction may have FOLDED tombstones (meta
             // changed) — re-read meta and the (now empty) sidecar
             // for the restamp rather than vouching for stale copies
-            readMeta(spark, dir).foreach { m2 =>
-              val (_, tombN2, tombXor2) = tombAggregates(spark, dir)
-              writeToken(spark, dir,
-                tokenLine(stateDigest(spark, sfDir, dir), m2, tombN2,
-                  tombXor2))
-            }
+            StoreKernel.restamp(spark, kernelStore(sfDir, dir))
           }
         }
     }
-  }
-
-  /** Is there a persisted index at `dir`? The streaming ingest sink
-    * uses this to detect a crashed bootstrap (corpus written, build
-    * never ran) and re-ensure instead of calling [[appendBatch]] into
-    * a void. Existence probe only (driver-side, no Spark job — this
-    * runs once per micro-batch): an UNREADABLE meta dir answers true
-    * here and then fails [[appendBatch]]'s meta read loudly, which the
-    * sink's rebuild-once fallback already converts into one ensure()
-    * — the same recovery a false here would have triggered, without
-    * paying a per-batch parquet read on the healthy path. */
-  def hasIndex(spark: SparkSession, dir: String): Boolean = {
-    val (fs, p) = graft.Scratch.fs(spark, s"$dir/meta")
-    fs.exists(p)
   }
 
   /** [[BuildInfo]] from the persisted meta ALONE — NO freshness
@@ -933,13 +594,13 @@ object IndexStore {
     * when no readable index exists. */
   def infoFromMeta(spark: SparkSession, sfDir: String): Option[BuildInfo] = {
     val dir = dirFor(spark, sfDir)
-    readMeta(spark, dir).map { m =>
+    meta(spark, dir).map { m =>
       // pending tombstones fold here exactly as in ensure's serve:
       // info.n is the EFFECTIVE (survivor) size — shortlist sizing and
       // the n==0 delegate branches must agree between the two info
       // sources (driver-side probe + one small-table agg, only when a
       // sidecar exists)
-      val (_, tombN, _) = tombAggregates(spark, dir)
+      val (_, tombN, _) = StoreKernel.tombAggregates(spark, dir, col("valid"))
       BuildInfo(dir, m.n - tombN, m.nl, builtNow = false, buildSec = 0.0)
     }
   }
@@ -951,7 +612,7 @@ object IndexStore {
     * the pre-append centroids/codebooks (that amortization is the
     * point) and is gated by recall floors instead. */
   def appendedRows(spark: SparkSession, dir: String): Option[Long] =
-    try readMeta(spark, dir).map(_.appended_n)
+    try meta(spark, dir).map(_.appended_n)
     catch { case scala.util.control.NonFatal(_) => None }
 
   /** (appended_n, n) from meta. Verify's twin-exemption reads BOTH so
@@ -960,7 +621,7 @@ object IndexStore {
     * claiming more appends than indexed rows is corruption, and the
     * identity gate must not stand down for it. */
   def appendState(spark: SparkSession, dir: String): Option[(Long, Long)] =
-    try readMeta(spark, dir).map(m => (m.appended_n, m.n))
+    try meta(spark, dir).map(m => (m.appended_n, m.n))
     catch { case scala.util.control.NonFatal(_) => None }
 
   // --- incremental maintenance ----------------------------------------------
@@ -1000,10 +661,10 @@ object IndexStore {
       batch: DataFrame, corpusScreened: Boolean = false): AppendStats =
     // lease OUTSIDE the monitor: a foreign holder's bounded wait must
     // never block this JVM's readers (ensure/serve ride the monitor).
-    // PER-STORE monitor (see monitorFor): appends to different stores
-    // — the sharded ingest's K shard bodies — run concurrently
+    // PER-STORE monitor (StoreKernel.monitorFor): appends to different
+    // stores — the sharded ingest's K shard bodies — run concurrently
     graft.sources.WriterLease.withWrite(spark, dir,
-        "append") { monitorFor(dir).synchronized {
+        "append") { StoreKernel.monitorFor(dir).synchronized {
     import graft.functions.VectorFunctions.dotD
     // dev-only phase timer (-Dgraft.prof.append=true): stderr deltas
     val profT = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
@@ -1013,7 +674,7 @@ object IndexStore {
         System.err.println(
           f"[appprof] $tag%-8s ${(now - profT.getAndSet(now)) / 1e9}%6.2f")
       } else profT.set(System.nanoTime())
-    val m = readMeta(spark, dir).getOrElse(throw new IllegalStateException(
+    val m = meta(spark, dir).getOrElse(throw new IllegalStateException(
       s"no index at $dir — build() before appendBatch()"))
     // the FULL dial/format guard, not just the version: encoding the
     // batch through pqAssign/subVectors against artifacts built under
@@ -1039,7 +700,7 @@ object IndexStore {
     // would then hide BOTH copies. Driver-side existence probe on the
     // healthy (no-pending-deletes) path; one batch-sized semi-join
     // when tombstones exist.
-    tombstoneFrame(spark, dir).foreach { t =>
+    StoreKernel.tombstoneFrame(spark, dir).foreach { t =>
       val hit = batch.select(col("vec_id"))
         .join(t.select(col("vec_id")).hint("broadcast"),
           Seq("vec_id"), "left_semi")
@@ -1302,7 +963,7 @@ object IndexStore {
     rcodes.repartition(1).write
       .mode(SaveMode.Append).parquet(deltaDirOf(dir, "rcodes"))
     prof("rcodes")
-    writeMeta(spark, dir, m.copy(n = m.n + allN, fp = m.fp ^ allFp,
+    StoreKernel.writeMeta(spark, dir, m.copy(n = m.n + allN, fp = m.fp ^ allFp,
       appended_n = m.appended_n + allN,
       app_res_sum = m.app_res_sum + batchRes * allN))
     // marker LAST (meta before marker): a crash here costs one
@@ -1552,75 +1213,16 @@ object IndexStore {
     * because the corpus rewrite happened at deleteBatch time. */
   private[graft] def foldTombstonesIntoMeta(spark: SparkSession,
       dir: String): Unit = {
-    val (rows, validN, xor) = tombAggregates(spark, dir)
+    val (rows, validN, xor) =
+      StoreKernel.tombAggregates(spark, dir, col("valid"))
     if (rows == 0) return
     graft.sources.WriterLease.withWrite(spark, dir, "tombfold") {
-      val m = readMeta(spark, dir).getOrElse(throw new IllegalStateException(
+      val m = meta(spark, dir).getOrElse(throw new IllegalStateException(
         s"no readable meta at $dir — cannot fold tombstones"))
-      writeMeta(spark, dir, m.copy(n = m.n - validN, fp = m.fp ^ xor))
-      clearTombstones(spark, dir)
+      StoreKernel.writeMeta(spark, dir,
+        m.copy(n = m.n - validN, fp = m.fp ^ xor))
+      StoreKernel.clearTombstones(spark, dir)
     }
-  }
-
-  private[graft] def tombDirOf(dir: String): String = s"$dir/tombstones"
-
-  /** Tombstone rows (vec_id, rowfp, valid, cell), None when the
-    * sidecar is absent or holds no data files (driver-side probe). */
-  private[graft] def tombstoneFrame(spark: SparkSession,
-      dir: String): Option[DataFrame] = {
-    val root = tombDirOf(dir)
-    val (fs, p) = graft.Scratch.fs(spark, root)
-    if (!fs.exists(p)) return None
-    val hasData = fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (!hasData) None else Some(spark.read.parquet(root))
-  }
-
-  /** (rows, valid rows, xor of valid rowfps) of the sidecar — the
-    * fold terms of every tombstone-aware validation. One small-table
-    * agg; (0,0,0) without a sidecar (driver-side probe only). */
-  private[graft] def tombAggregates(spark: SparkSession,
-      dir: String): (Long, Long, Long) =
-    tombstoneFrame(spark, dir) match {
-      case None => (0L, 0L, 0L)
-      case Some(t) =>
-        val r = t.agg(count(lit(1)),
-          count(when(col("valid"), lit(1))),
-          expr("bit_xor(case when valid then rowfp end)")).head()
-        (r.getLong(0), r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-
-  private[graft] def clearTombstones(spark: SparkSession,
-      dir: String): Unit = {
-    val (fs, p) = graft.Scratch.fs(spark, tombDirOf(dir))
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  /** Rewrite `table` minus `ids` through a shadow + promote swap —
-    * crash-atomic (a crash leaves either the old or the new table
-    * complete, never a half-rewrite). Refuses to EMPTY the table: a
-    * zero-row parquet write emits no schema-bearing part files and
-    * every later read of the corpus would throw — deleting an entire
-    * corpus is "remove the table and its index", not a delete batch. */
-  private[graft] def rewriteTableMinus(spark: SparkSession, table: String,
-      ids: DataFrame, key: String): Long = {
-    val survivors = spark.read
-      .parquet(graft.sources.Generations.resolve(spark, table))
-      .join(ids.select(col(key)).hint("broadcast"), Seq(key), "left_anti")
-    require(!survivors.isEmpty,
-      s"delete batch would remove EVERY row of $table — deleting a " +
-        "whole corpus is table+index removal, not a delete batch")
-    // retained-generation commit (VERDICT r16 #1): the previous table
-    // copy stays byte-identical at its old paths until the TTL, so a
-    // scan that planned its splits before this forget completes
-    // correctly; new readers resolve to the survivors
-    val shadow = graft.sources.Generations.shadowFor(spark, table)
-    survivors.write.parquet(shadow)
-    graft.sources.Generations.commit(spark, table, shadow)
-    0L
   }
 
   /** Delete `kills` (a vec_id frame) from the corpus at `sfDir` and
@@ -1636,17 +1238,16 @@ object IndexStore {
     val dir = dirFor(spark, sfDir)
     // lease outside the monitor — same ordering note as appendBatch
     graft.sources.WriterLease.withWrite(spark, dir, "delete") {
-    monitorFor(dir).synchronized {
+    StoreKernel.monitorFor(dir).synchronized {
     import graft.functions.VectorFunctions.dotD
-    require(readMeta(spark, dir).nonEmpty,
+    require(meta(spark, dir).nonEmpty,
       s"no index at $dir — ensure() before deleteBatch (deletion is " +
         "index maintenance; an index-less corpus is a plain filter)")
-    val table = s"$sfDir/embeddings.parquet"
     val raw = Tables.load(spark, sfDir, "embeddings")
     val killIds = kills.select(col("vec_id")).distinct()
     val present = raw.join(killIds.hint("broadcast"),
       Seq("vec_id"), "left_semi")
-    val fresh = tombstoneFrame(spark, dir).fold(present)(t =>
+    val fresh = StoreKernel.tombstoneFrame(spark, dir).fold(present)(t =>
       present.join(t.select(col("vec_id")).hint("broadcast"),
         Seq("vec_id"), "left_anti"))
     val v = col("embedding").cast("array<double>")
@@ -1668,40 +1269,11 @@ object IndexStore {
     graft.sources.WriterLease.verify(spark, dir)
     if (freshN > 0)
       cap.repartition(1).write.mode(SaveMode.Append)
-        .parquet(tombDirOf(dir))
+        .parquet(StoreKernel.tombDirOf(dir))
     // corpus rewrite: drop EVERY tombstoned id still present — this
     // batch's and any crashed predecessor's (the replay IS the heal)
-    val removed = tombstoneFrame(spark, dir) match {
-      case None => 0L
-      case Some(t) =>
-        val tids = t.select(col("vec_id")).distinct()
-        val pendingN = raw.join(tids.hint("broadcast"),
-          Seq("vec_id"), "left_semi").count()
-        if (pendingN > 0) {
-          // hold the CORPUS-DIR lease across the rewrite: the
-          // streaming sinks take the same lease around their corpus
-          // appends, so the swap can never discard a file an
-          // in-flight append just landed (hold order index→corpus;
-          // the sinks never hold both at once, so no cycle)
-          graft.sources.WriterLease.withWrite(spark, sfDir,
-              "corpus-rewrite") {
-            // RE-verify the index lease and RE-probe the pending set
-            // INSIDE the corpus lease: the acquisition may have
-            // waited out a takeover (this writer is then stale — the
-            // rewrite must not land) or a concurrent delete that
-            // already removed the ids (the O(corpus) rewrite would
-            // be a pure no-op swap that churns every token)
-            graft.sources.WriterLease.verify(spark, dir)
-            val stillPending = spark.read
-              .parquet(graft.sources.Generations.resolve(spark, table))
-              .join(tids.hint("broadcast"), Seq("vec_id"), "left_semi")
-              .limit(1).count()
-            if (stillPending > 0)
-              rewriteTableMinus(spark, table, tids, "vec_id")
-          }
-        }
-        pendingN
-    }
+    val removed = StoreKernel.dropTombstoned(spark,
+      kernelStore(sfDir, dir), deleting = Some(raw))
     DeleteStats(freshN, removed)
   } } }
 
@@ -1730,10 +1302,11 @@ object IndexStore {
       rcodes: Map[String, (Long, Long)])
 
   // v2 adds mtime to the per-file listing entries so the vouched fast
-  // path sits in the SAME trust class as stateDigest's name|length|mtime
-  // lines — a same-name same-length foreign rewrite of a codes file now
-  // forces the measured fallback instead of passing the vouch. A v1
-  // marker fails the header check and falls back (safe, re-stamps).
+  // path sits in the SAME trust class as the token digest's
+  // name|length|mtime lines (StoreKernel.digest) — a same-name
+  // same-length foreign rewrite of a codes file now forces the
+  // measured fallback instead of passing the vouch. A v1 marker fails
+  // the header check and falls back (safe, re-stamps).
   private val annCommitHeader = "graftanncommit|2"
 
   private def commitMarkerPath(dir: String) = s"$dir/_commit"
@@ -1742,8 +1315,8 @@ object IndexStore {
     * table's base + delta data files; `_`/`.`-led path segments
     * (committer temp dirs, crc files, the _fold sentinel) are
     * excluded. mtime rides along so the marker's exact-match vouch
-    * matches stateDigest's trust class at no extra listing cost (the
-    * same FileStatus carries both). Driver-side only. */
+    * matches the token digest's trust class at no extra listing cost
+    * (the same FileStatus carries both). Driver-side only. */
   private[operators] def annListing(spark: SparkSession, dir: String,
       table: String): Map[String, (Long, Long)] = {
     def one(root: String): Map[String, (Long, Long)] = {
@@ -1859,7 +1432,7 @@ object IndexStore {
     // ghost codes rows remain until compaction folds them), composed
     // with the caller's soft-delete set under the same anti-join
     val probed = (exclude.toSeq ++
-        tombstoneFrame(spark, dir).toSeq)
+        StoreKernel.tombstoneFrame(spark, dir).toSeq)
       .foldLeft(probed0)((d, x) =>
         d.join(x.select(col("vec_id")), Seq("vec_id"), "left_anti"))
     val lut = Similarity.pqLut(Similarity.subVectors(qe),
@@ -1895,7 +1468,7 @@ object IndexStore {
       .join(broadcast(cents.select(col("cell"), col("cn"))), Seq("cell"))
       .select(col("vec_id").as("query_id"), col("cell"),
         (col("cd") + col("cn")).as("ct"))
-    val probed = tombstoneFrame(spark, dir)
+    val probed = StoreKernel.tombstoneFrame(spark, dir)
       .foldLeft(withDeltaOf(spark, dir, "rcodes")(
         _.join(broadcast(probesCt), Seq("cell"))))((d, t) =>
         d.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti"))
@@ -1951,7 +1524,7 @@ object IndexStore {
       .select(col("vec_id").as("query_id"), col("cell"))
     val probed0 = withDeltaOf(spark, dir, "codes")(
       _.join(broadcast(probes), Seq("cell")))
-    val probed = tombstoneFrame(spark, dir).toSeq
+    val probed = StoreKernel.tombstoneFrame(spark, dir).toSeq
       .foldLeft(probed0)((d, t) =>
         d.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti"))
     val lut = Similarity.pqLut(Similarity.subVectors(qe),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StoreKernel, Tables}
 
 /** One row of `<listsDir>/meta` — the veclists sidecar's identity
   * marker. Top-level, not nested in the object, for the same Janino
@@ -68,9 +68,10 @@ private[operators] final case class VecListsMeta(version: Int,
   * are ~1 KB and the screen itself always runs Spark jobs anyway.
   *
   * Concurrency: same contract as [[IndexStore]] — maintenance runs
-  * quiesced; in-JVM callers serialize on the IndexStore monitor (ONE
-  * lock for index + sidecar, so a concurrent index rebuild can never
-  * interleave with a lists rebuild reading its codes table).
+  * quiesced. [[ensureLists]]/[[appendLists]] lock the LISTS dir's own
+  * monitor and writer lease, not the index's: an index rebuild racing
+  * a lists rebuild that reads its codes table is excluded only by the
+  * quiesced contract.
   */
 object IngestScreen {
 
@@ -111,28 +112,6 @@ object IngestScreen {
 
   // --- meta ------------------------------------------------------------------
 
-  private def readListsMeta(spark: SparkSession, dir: String)
-      : Option[VecListsMeta] = {
-    import spark.implicits._
-    // bounded retry over the promote window — see readPromotedMeta
-    IndexStore.readPromotedMeta(spark, s"$dir/meta", "annvl")(
-      spark.read.parquet(s"$dir/meta").as[VecListsMeta].head())
-  }
-
-  private def writeListsMeta(spark: SparkSession, metaPath: String,
-      vm: VecListsMeta): Unit = {
-    import spark.implicits._
-    val shadow = s"${metaPath}__shadow"
-    Seq(vm).toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(shadow)
-    val (fs, sp) = graft.Scratch.fs(spark, shadow)
-    // commit-point fence keyed on the store dir (shadow-dir calls
-    // resolve to a key no lease is held on — no-op)
-    graft.sources.WriterLease.verify(spark,
-      new org.apache.hadoop.fs.Path(metaPath).getParent.toString)
-    graft.sources.ParquetSink.promote(fs, sp,
-      new org.apache.hadoop.fs.Path(metaPath))
-  }
-
   private def listsCurrent(vm: VecListsMeta, m: AnnIndexMeta): Boolean =
     vm.version == formatVersion &&
       vm.idx_version == m.version && vm.n == m.n && vm.fp == m.fp &&
@@ -164,11 +143,11 @@ object IngestScreen {
       info: IndexStore.BuildInfo,
       compactAtFilesPerCell: Int = 0): Double = {
     val dir = listsDir(spark, sfDir)
-    // per-store monitor (IndexStore.monitorFor): veclists stores of
-    // different corpora no longer serialize in-JVM
-    IndexStore.monitorFor(dir).synchronized {
-    val m = IndexStore.readMeta(spark, info.dir).getOrElse(
-      throw new IllegalStateException(
+    // per-store monitor: veclists stores of different corpora never
+    // serialize in-JVM
+    StoreKernel.monitorFor(dir).synchronized {
+    val m = StoreKernel.readMeta[AnnIndexMeta](spark, info.dir, "annidx")
+      .getOrElse(throw new IllegalStateException(
         s"no index meta at ${info.dir} — ensure() the index first"))
     // a pending sentinel means an appendLists died mid-flight — and a
     // MATCHING marker does not clear it: if the crashed batch's index
@@ -182,7 +161,7 @@ object IngestScreen {
     // and then fail the screen's read with a bare missing-path error
     def dataIntact(vm: VecListsMeta): Boolean =
       vm.n == 0 || fs.exists(new org.apache.hadoop.fs.Path(s"$dir/lists"))
-    readListsMeta(spark, dir) match {
+    StoreKernel.readMeta[VecListsMeta](spark, dir, "annvl") match {
       case Some(vm) if listsCurrent(vm, m) && dataIntact(vm) &&
           !fs.exists(pending) =>
         if (compactAtFilesPerCell > 0 && vm.n > 0) {
@@ -246,7 +225,7 @@ object IngestScreen {
         .repartition(col("cell"))
         .write.partitionBy("cell").parquet(s"$shadow/lists")
     }
-    writeListsMeta(spark, s"$shadow/meta",
+    StoreKernel.writeMeta(spark, shadow,
       VecListsMeta(formatVersion, m.version, m.n, m.fp, m.nl,
         Similarity.lloydIters, m.res_norm, m.appended_n))
     // fence before the swap that makes the candidate live
@@ -275,10 +254,10 @@ object IngestScreen {
     // lease OUTSIDE the monitor (see IndexStore.appendBatch's note);
     // per-store monitor — see ensureLists
     graft.sources.WriterLease.withWrite(spark, dir, "append") {
-    IndexStore.monitorFor(dir).synchronized {
+    StoreKernel.monitorFor(dir).synchronized {
     import graft.functions.VectorFunctions.dotD
-    val vm = readListsMeta(spark, dir).getOrElse(
-      throw new IllegalStateException(
+    val vm = StoreKernel.readMeta[VecListsMeta](spark, dir, "annvl")
+      .getOrElse(throw new IllegalStateException(
         s"no veclists at $dir — ensureLists() before appendLists()"))
     val idxDir = IndexStore.dirFor(spark, sfDir)
     val v = col("embedding").cast("array<double>")
@@ -326,7 +305,7 @@ object IngestScreen {
       .write.partitionBy("cell").mode(SaveMode.Append)
       // resolved inside the lease (Generations appender contract)
       .parquet(graft.sources.Generations.resolve(spark, s"$dir/lists"))
-    writeListsMeta(spark, s"$dir/meta",
+    StoreKernel.writeMeta(spark, dir,
       vm.copy(n = vm.n + n, fp = vm.fp ^ fp,
         appended_n = vm.appended_n + n))
     if (!fs.delete(pending, false))
@@ -381,7 +360,7 @@ object IngestScreen {
     // the already-rewritten corpus
     val lists0 = readLists(spark, listsDir(spark, sfDir))
       .filter(iidFilter)
-    val lists = IndexStore.tombstoneFrame(spark, info.dir)
+    val lists = StoreKernel.tombstoneFrame(spark, info.dir)
       .foldLeft(lists0)((d, t) => d.join(
         t.select(col("vec_id")).hint("broadcast"), Seq("vec_id"),
         "left_anti"))

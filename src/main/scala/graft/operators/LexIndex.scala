@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.h60
-import graft.sources.Tables
+import graft.sources.{StoreKernel, StoreMeta, Tables}
 
 /** Meta row of a persisted lexical index: corpus identity (row count +
   * xor fingerprint) and the layout dial its artifacts were built
@@ -13,6 +13,7 @@ import graft.sources.Tables
   * by a rebuild (see [[LexIndex]] doc). */
 final case class LexIndexMeta(
     version: Int, n: Long, fp: Long, pfx_parts: Int, np: Long)
+  extends StoreMeta
 
 /** Persisted inverted index serving BM25 (q74) — the amortized
   * deployment path q72's ad-hoc scan points at, structured exactly
@@ -37,17 +38,18 @@ final case class LexIndexMeta(
   *    cast the same longs to double, keeping the weight inputs
   *    bit-equal.
   *  - `meta` + `vtoken` — identity row and the listing-digest token
-  *    ([[IndexStore.listingDigest]], same trust model: any observable
-  *    corpus/index change forces a full re-validation).
+  *    ([[graft.sources.StoreKernel]], the lifecycle shared with the
+  *    ANN store: any observable corpus/index change forces a full
+  *    re-validation).
   *
   * At 100 TB the build is one map-side-combinable shuffle of the
   * corpus (the same pass q72 pays PER QUERY) and serving reads a few
   * posting directories — the classic search-engine trade. Incremental
-  * maintenance (per-batch posting appends under an [[graft.streaming
-  * .IngestCommit]]-style marker) is the same upgrade the docs ingest
-  * indexes took; not built here because the gate's corpora are
-  * immutable between rounds — a corpus change rebuilds (cost: one
-  * tokenize pass, not an ANN retrain). */
+  * maintenance is [[appendBatch]] (per-batch posting, df and stats
+  * partials behind a replay ledger) and [[deleteDocs]] (tombstones +
+  * negative partials); every persisted value is an exact additive
+  * fact, so both keep q74 bit-identical to a rebuild. Any other corpus
+  * change rebuilds (cost: one tokenize pass, not an ANN retrain). */
 object LexIndex {
 
   val formatVersion = 1
@@ -83,17 +85,6 @@ object LexIndex {
     spark.read.parquet(graft.sources.Generations.resolve(spark,
       docsPath(spark, sfDir)))
 
-  /** Driver-side existence probe (meta dir), the [[IndexStore
-    * .hasIndex]] mirror: the streaming docs sink uses it to pick
-    * appendBatch (index exists) vs a bootstrap build — an unreadable
-    * meta answers true here and then fails appendBatch's meta read
-    * loudly, which the sink's rebuild-once fallback converts into one
-    * ensure. */
-  def hasIndex(spark: SparkSession, dir: String): Boolean = {
-    val (fs, p) = graft.Scratch.fs(spark, s"$dir/meta")
-    fs.exists(p)
-  }
-
   private def pfxOf(tokenCol: org.apache.spark.sql.Column) =
     pmod(h60(tokenCol), lit(pfxParts))
 
@@ -121,66 +112,20 @@ object LexIndex {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  private def readMeta(spark: SparkSession, dir: String)
-      : Option[LexIndexMeta] = {
-    import spark.implicits._
-    // bounded retry over the promote window — see readPromotedMeta
-    IndexStore.readPromotedMeta(spark, s"$dir/meta", "lexidx")(
-      spark.read.parquet(s"$dir/meta").as[LexIndexMeta].head())
-  }
+  private def meta(spark: SparkSession, dir: String) =
+    StoreKernel.readMeta[LexIndexMeta](spark, dir, "lexidx")
 
-  private def writeMeta(spark: SparkSession, dir: String,
-      m: LexIndexMeta): Unit = {
-    import spark.implicits._
-    val shadow = s"$dir/meta__shadow"
-    Seq(m).toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(shadow)
-    val (fs, sp) = graft.Scratch.fs(spark, shadow)
-    // commit-point fence (no-op for shadow-dir calls / lease-less
-    // internal paths — see WriterLease.verify)
-    graft.sources.WriterLease.verify(spark, dir)
-    graft.sources.ParquetSink.promote(fs, sp,
-      new org.apache.hadoop.fs.Path(s"$dir/meta"))
-  }
+  private def dialsOk(m: LexIndexMeta): Boolean =
+    m.version == formatVersion && m.pfx_parts == pfxParts
 
-  private def stateDigest(spark: SparkSession, sfDir: String,
-      dir: String): String =
-    IndexStore.listingDigest(spark, docsPath(spark, sfDir), dir,
-      s"lexv$formatVersion|$pfxParts")
-
-  /** Token line = digest + meta copy + the tombstone fold terms live
-    * at validation time (same extension as the ANN token): the digest
-    * covers the sidecar files, so a match vouches for the stored
-    * (tombN, tombXor) with zero jobs. */
-  private def tokenLine(digest: String, m: LexIndexMeta,
-      tombN: Long, tombXor: Long): String =
-    s"$digest|${m.version}|${m.n}|${m.fp}|${m.pfx_parts}|${m.np}|" +
-      s"$tombN|$tombXor"
-
-  private def readToken(spark: SparkSession, dir: String)
-      : Option[(String, LexIndexMeta, Long, Long)] = {
-    val (fs, p) = graft.Scratch.fs(spark, s"$dir/${IndexStore.tokenName}")
-    if (!fs.exists(p)) return None
-    val line =
-      try new String(graft.Scratch.readSmallFile(fs, p), "UTF-8").trim
-      catch { case scala.util.control.NonFatal(_) => "" }
-    val parts = line.split('|')
-    if (parts.length != 8) None
-    else try Some((parts(0), LexIndexMeta(parts(1).toInt,
-      parts(2).toLong, parts(3).toLong, parts(4).toInt, parts(5).toLong),
-      parts(6).toLong, parts(7).toLong))
-    catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  private def writeToken(spark: SparkSession, dir: String,
-      line: String): Unit =
-    try {
-      val (fs, p) = graft.Scratch.fs(spark, s"$dir/${IndexStore.tokenName}")
-      val out = fs.create(p, true)
-      try out.write(line.getBytes("UTF-8")) finally out.close()
-    } catch { case e: Throwable =>
-      System.err.println(s"[lexidx] token write failed at $dir " +
-        s"(${e.getMessage}); next ensure will re-validate in full")
-    }
+  /** This store's [[StoreKernel.Store]]: the documents table in either
+    * layout ([[docsPath]]); every tombstone folds. */
+  private[operators] def kernelStore(spark: SparkSession, sfDir: String,
+      dir: String): StoreKernel.Store[LexIndexMeta] =
+    StoreKernel.Store("lexidx", dir, sfDir, docsPath(spark, sfDir),
+      "doc_id", lit(true), s"lexv$formatVersion|$pfxParts",
+      f => LexIndexMeta(f(0).toInt, f(1).toLong, f(2).toLong, f(3).toInt,
+        f(4).toLong))
 
   /** Structural probe for the states the corpus fingerprint cannot
     * see: a swap/compaction crash that lost a table dir, or a stats
@@ -238,35 +183,6 @@ object LexIndex {
   final case class DeleteDocsStats(tombstoned: Long,
     removedFromCorpus: Long)
 
-  private def tombDirOf(dir: String): String = s"$dir/tombstones"
-
-  private[operators] def tombstoneFrame(spark: SparkSession,
-      dir: String): Option[DataFrame] = {
-    val root = tombDirOf(dir)
-    val (fs, p) = graft.Scratch.fs(spark, root)
-    if (!fs.exists(p)) return None
-    val hasData = fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (!hasData) None else Some(spark.read.parquet(root))
-  }
-
-  /** (rows, xor of rowfps) of the sidecar; (0, 0) when absent. */
-  private def tombAggregates(spark: SparkSession,
-      dir: String): (Long, Long) =
-    tombstoneFrame(spark, dir) match {
-      case None => (0L, 0L)
-      case Some(t) =>
-        val r = t.agg(count(lit(1)), expr("bit_xor(rowfp)")).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-  private def clearTombstones(spark: SparkSession, dir: String): Unit = {
-    val (fs, p) = graft.Scratch.fs(spark, tombDirOf(dir))
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
   /** Delete `kills` (a doc_id frame) from the documents corpus at
     * `sfDir` and its persisted lexical index — see the section doc for
     * the exact-subtraction and crash contracts. Replay-idempotent.
@@ -286,18 +202,17 @@ object LexIndex {
     val dir = dirFor(spark, sfDir)
     // lease OUTSIDE the monitor (see IndexStore.appendBatch's note)
     graft.sources.WriterLease.withWrite(spark, dir, "delete") {
-    IndexStore.monitorFor(dir).synchronized {
-    require(readMeta(spark, dir).nonEmpty,
+    StoreKernel.monitorFor(dir).synchronized {
+    require(meta(spark, dir).nonEmpty,
       s"no lexical index at $dir — ensure() before deleteDocs " +
         "(deletion is index maintenance; an index-less corpus is a " +
         "plain filter)")
-    val table = docsPath(spark, sfDir)
     val docs = docsOf(spark, sfDir)
     val killIds = kills.select(col("doc_id")).distinct()
     val present = docs.join(killIds.hint("broadcast"),
       Seq("doc_id"), "left_semi")
     val fresh = graft.Materialize(
-      tombstoneFrame(spark, dir).fold(present)(t =>
+      StoreKernel.tombstoneFrame(spark, dir).fold(present)(t =>
         present.join(t.select(col("doc_id")).hint("broadcast"),
           Seq("doc_id"), "left_anti")))
     val freshN = fresh.count()
@@ -309,7 +224,7 @@ object LexIndex {
       fresh.select(col("doc_id"),
           xxhash64(col("doc_id"), col("text")).as("rowfp"))
         .repartition(1).write.mode(SaveMode.Append)
-        .parquet(tombDirOf(dir))
+        .parquet(StoreKernel.tombDirOf(dir))
       // 2. negative partials — the exact subtraction. A crash between
       //    1 and 2 under-subtracts df/stats, which the stats-sum
       //    integrity leg catches on the next ensure (→ rebuild).
@@ -327,32 +242,8 @@ object LexIndex {
     }
     // 3. corpus rewrite: drop EVERY tombstoned id still present —
     //    this batch's and any crashed predecessor's (replay = heal)
-    val removed = tombstoneFrame(spark, dir) match {
-      case None => 0L
-      case Some(t) =>
-        val tids = t.select(col("doc_id")).distinct()
-        val pendingN = docs.join(tids.hint("broadcast"),
-          Seq("doc_id"), "left_semi").count()
-        if (pendingN > 0) {
-          // CORPUS-DIR lease across the rewrite (see IndexStore
-          // .deleteBatch's note: the docs sink takes the same lease
-          // around its corpus append)
-          graft.sources.WriterLease.withWrite(spark, sfDir,
-              "corpus-rewrite") {
-            // re-verify + re-probe INSIDE the lease (the wait may
-            // have outlasted a takeover or a concurrent delete that
-            // already removed the ids — see IndexStore.deleteBatch)
-            graft.sources.WriterLease.verify(spark, dir)
-            val stillPending = spark.read
-              .parquet(graft.sources.Generations.resolve(spark, table))
-              .join(tids.hint("broadcast"), Seq("doc_id"), "left_semi")
-              .limit(1).count()
-            if (stillPending > 0)
-              IndexStore.rewriteTableMinus(spark, table, tids, "doc_id")
-          }
-        }
-        pendingN
-    }
+    val removed = StoreKernel.dropTombstoned(spark,
+      kernelStore(spark, sfDir, dir), deleting = Some(docs))
     DeleteDocsStats(freshN, removed)
   } } }
 
@@ -370,12 +261,7 @@ object LexIndex {
     val dfTab = tf.groupBy(col("pfx"), col("token"))
       .agg(count(lit(1)).as("df"))
     val stats = Retrieval.corpusStatsLong(docs)
-    val shadow =
-      s"${dir}__shadow_${java.util.UUID.randomUUID().toString.take(8)}"
-    val (fs, sp) = graft.Scratch.fs(spark, shadow)
-    val stale =
-      fs.globStatus(new org.apache.hadoop.fs.Path(s"${dir}__shadow_*"))
-    if (stale != null) stale.foreach(s => fs.delete(s.getPath, true))
+    val shadow = StoreKernel.buildShadow(spark, dir)
     // one file per pfx dir: serving opens |query-term pfx set| files,
     // not every task's slivers (same layout rule as the ANN codes)
     tf.repartition(col("pfx")).write.partitionBy("pfx")
@@ -383,36 +269,26 @@ object LexIndex {
     dfTab.repartition(col("pfx")).write.partitionBy("pfx")
       .parquet(s"$shadow/df")
     stats.coalesce(1).write.parquet(s"$shadow/stats")
-    val m = LexIndexMeta(formatVersion, n, fp, pfxParts, np)
-    writeMeta(spark, shadow, m)
     // the replay ledger SURVIVES the rebuild: every applied batch's
     // docs are in the corpus this build just re-indexed, so its
     // replays must KEEP no-opping — were the ledger reset with the
     // dir, a post-rebuild replay would re-append postings the rebuild
     // already owns (see the appendBatch crash-window doc)
-    val liveBatches = new org.apache.hadoop.fs.Path(s"$dir/batches")
+    val (fs, liveBatches) = graft.Scratch.fs(spark, s"$dir/batches")
     if (fs.exists(liveBatches))
       fs.rename(liveBatches,
         new org.apache.hadoop.fs.Path(s"$shadow/batches"))
-    // fence before the swap that makes this candidate the live index
-    graft.sources.WriterLease.verify(spark, dir)
-    graft.sources.ParquetSink.promote(fs, sp,
-      new org.apache.hadoop.fs.Path(dir))
-    // a fresh build derives from the (already-rewritten) corpus —
-    // every tombstone is moot, and a survivor would wedge ensure's
-    // folded expectation (see the deletion section; the promote above
-    // swapped the old sidecar away already, this clears a racing stamp)
-    clearTombstones(spark, dir)
-    writeToken(spark, dir,
-      tokenLine(stateDigest(spark, sfDir, dir), m, 0L, 0L))
+    val m = LexIndexMeta(formatVersion, n, fp, pfxParts, np)
+    StoreKernel.promoteBuild(spark, kernelStore(spark, sfDir, dir), shadow, m)
     BuildInfo(dir, n, np, builtNow = true,
       buildSec = (System.nanoTime() - t0) / 1e9)
   }
 
   /** Serve-ready lexical index for `sfDir`: zero-job token fast path,
     * full fingerprint validation on any observable change, rebuild on
-    * mismatch — the [[IndexStore.ensure]] contract without the
-    * append/drift axes (no append path exists to drift).
+    * mismatch — the [[IndexStore.ensure]] contract (one
+    * [[StoreKernel.ensure]]) without the drift axis: lexical appends
+    * are exact additive facts, so nothing drifts.
     *
     * `foldAtTombstones`: the [[IndexStore.RebuildPolicy
     * .foldAtTombstones]] mirror (same VERDICT r15 #5 rationale) —
@@ -426,7 +302,17 @@ object LexIndex {
     * tombN the token/validation already computed. */
   def ensure(spark: SparkSession, sfDir: String,
       foldAtTombstones: Long = Long.MaxValue): BuildInfo = {
-    val info = ensureSync(spark, sfDir)
+    val dir = dirFor(spark, sfDir)
+    val info = StoreKernel.ensure(spark, kernelStore(spark, sfDir, dir))(
+      fastOk = (m, _) => dialsOk(m),
+      identity = countAndFingerprint,
+      intact = (m, tombN) => tablesIntact(spark, dir, m, tombN),
+      // served size is the effective corpus (meta minus pending
+      // tombstones); np stays physical (it only gates the np==0
+      // part-file-less read guard, and ghost postings are still files)
+      serve = (m, tombN) =>
+        BuildInfo(dir, m.n - tombN, m.np, builtNow = false, buildSec = 0.0),
+      build = known => build(spark, sfDir, dir, knownIdentity = known))
     // policy fold AFTER the monitor releases (lease → monitor, the
     // order compact itself takes) — folding inside the synchronized
     // serve inverted it against a concurrent direct compact (lease
@@ -441,10 +327,9 @@ object LexIndex {
     // instead. A racing fold is absorbed by the re-probe: tombN
     // re-reads as 0 and nothing reruns.
     if (foldAtTombstones != Long.MaxValue && !info.builtNow) {
-      val dir = dirFor(spark, sfDir)
-      val (tombN, _) = tombAggregates(spark, dir)
+      val (tombN, _, _) = StoreKernel.tombAggregates(spark, dir)
       if (tombN > 0 && tombN >= foldAtTombstones) {
-        val survivors = tombstoneFrame(spark, dir)
+        val survivors = StoreKernel.tombstoneFrame(spark, dir)
           .map(t => spark.read.parquet(cur(spark, s"$dir/tf"))
             .join(t.select(col("doc_id")).distinct().hint("broadcast"),
               Seq("doc_id"), "left_anti").limit(1).count())
@@ -457,78 +342,14 @@ object LexIndex {
           System.err.println(s"[lexidx] policy fold at $dir: $tombN " +
             "pending tombstone(s) at/over the threshold")
           compact(spark, sfDir)
-          val m2 = readMeta(spark, dir)
-          val (tN2, _) = tombAggregates(spark, dir)
+          val m2 = meta(spark, dir)
+          val (tN2, _, _) = StoreKernel.tombAggregates(spark, dir)
           return m2.map(m => BuildInfo(dir, m.n - tN2, m.np,
             builtNow = false, buildSec = 0.0)).getOrElse(info)
         }
       }
     }
     info
-  }
-
-  private def ensureSync(spark: SparkSession, sfDir: String): BuildInfo = {
-    val dir0 = dirFor(spark, sfDir)
-    // per-store monitor (IndexStore.monitorFor, one shared registry):
-    // lexical stores of different corpora no longer serialize in-JVM
-    IndexStore.monitorFor(dir0).synchronized {
-      val dir = dir0
-      def dialsOk(m: LexIndexMeta): Boolean =
-        m.version == formatVersion && m.pfx_parts == pfxParts
-      // served size is the effective corpus (meta minus pending
-      // tombstones); np stays physical (it only gates the np==0
-      // part-file-less read guard, and ghost postings are still files)
-      def serve(m: LexIndexMeta, tombN: Long): BuildInfo =
-        BuildInfo(dir, m.n - tombN, m.np, builtNow = false,
-          buildSec = 0.0)
-      val digest = stateDigest(spark, sfDir, dir)
-      readToken(spark, dir) match {
-        case Some((d, tm, tombN, _)) if d == digest && dialsOk(tm) =>
-          serve(tm, tombN)
-        case _ =>
-          readMeta(spark, dir) match {
-            case Some(m) =>
-              // deletion heal first (see the deletion section): finish
-              // a crashed deleteDocs' corpus rewrite before validating
-              // or rebuilding — the only direction that can never
-              // resurrect deleted rows
-              val (tombN, tombXor) = tombAggregates(spark, dir)
-              if (tombN > 0) {
-                val tids = tombstoneFrame(spark, dir).get
-                  .select(col("doc_id")).distinct()
-                val stillIn = docsOf(spark, sfDir)
-                  .join(tids.hint("broadcast"), Seq("doc_id"), "left_semi")
-                if (!stillIn.isEmpty) {
-                  System.err.println(s"[lexidx] completing a crashed " +
-                    s"delete's corpus rewrite at $sfDir")
-                  // corpus-dir lease around the rewrite (the docs
-                  // sink holds the same lease for its corpus append);
-                  // pending probe re-run INSIDE the lease — see the
-                  // ANN heal's contention note
-                  graft.sources.WriterLease.withWrite(spark, sfDir,
-                      "delete-heal") {
-                    if (!docsOf(spark, sfDir)
-                        .join(tids.hint("broadcast"), Seq("doc_id"),
-                          "left_semi").isEmpty)
-                      IndexStore.rewriteTableMinus(spark,
-                        docsPath(spark, sfDir), tids, "doc_id")
-                  }
-                }
-              }
-              val docs = docsOf(spark, sfDir)
-              val (n, fp) = countAndFingerprint(docs)
-              if (dialsOk(m) && (m.n - tombN) == n &&
-                  (m.fp ^ tombXor) == fp &&
-                  tablesIntact(spark, dir, m, tombN)) {
-                val d2 = if (tombN > 0) stateDigest(spark, sfDir, dir)
-                  else digest
-                writeToken(spark, dir, tokenLine(d2, m, tombN, tombXor))
-                serve(m, tombN)
-              } else build(spark, sfDir, dir, knownIdentity = Some((n, fp)))
-            case None => build(spark, sfDir, dir)
-          }
-      }
-    }
   }
 
   /** BM25 scores for `qterms` served from a VALIDATED index — the
@@ -547,7 +368,7 @@ object LexIndex {
     // pending tombstones (deletion lifecycle): ghost postings of
     // deleted docs are excluded here; df/stats need no exclusion —
     // their negative partials already subtracted exactly
-    val pruned = tombstoneFrame(spark, info.dir)
+    val pruned = StoreKernel.tombstoneFrame(spark, info.dir)
       .foldLeft(spark.read.parquet(cur(spark, s"${info.dir}/tf"))
         .filter(col("pfx").isin(pfxes: _*))
         .join(broadcast(terms), "token"))((d, t) =>
@@ -640,17 +461,17 @@ object LexIndex {
     val dir = dirFor(spark, sfDir)
     // lease OUTSIDE the monitor (see IndexStore.appendBatch's note)
     graft.sources.WriterLease.withWrite(spark, dir, "append") {
-    IndexStore.monitorFor(dir).synchronized {
-    val m = readMeta(spark, dir).getOrElse(throw new IllegalStateException(
+    StoreKernel.monitorFor(dir).synchronized {
+    val m = meta(spark, dir).getOrElse(throw new IllegalStateException(
       s"no lexical index at $dir — ensure() before appendBatch()"))
-    require(m.version == formatVersion && m.pfx_parts == pfxParts,
+    require(dialsOk(m),
       s"index at $dir was built under different dials/format " +
         s"(meta: v${m.version}, pfx=${m.pfx_parts}) — rebuild before " +
         "appending")
     // deletion contract: a tombstoned doc_id must not re-enter before
     // compact folds its ghost postings (the tf anti-join would hide
     // BOTH copies) — same refusal as the ANN appendBatch
-    tombstoneFrame(spark, dir).foreach { t =>
+    StoreKernel.tombstoneFrame(spark, dir).foreach { t =>
       val hit = batch.select(col("doc_id"))
         .join(t.select(col("doc_id")).hint("broadcast"),
           Seq("doc_id"), "left_semi")
@@ -683,7 +504,7 @@ object LexIndex {
     Retrieval.corpusStatsLong(batch).coalesce(1)
       .write.mode(SaveMode.Append).parquet(cur(spark, s"$dir/stats"))
     val m2 = m.copy(n = m.n + bn, fp = m.fp ^ bfp, np = m.np + npB)
-    writeMeta(spark, dir, m2)
+    StoreKernel.writeMeta(spark, dir, m2)
     // NO token stamp — see the scaladoc; the next ensure validates
     // m2 against the live corpus before any zero-job serving
     AppendInfo(bn, npB, replayed = false)
@@ -695,15 +516,16 @@ object LexIndex {
     * and a merged partial sums to the same longs), so q74's answers
     * are bit-unchanged and a crash between the per-table swaps leaves
     * every table independently correct (the stale token just forces
-    * one full validation). The `batches/` ledger is kept — it resets
-    * with the next rebuild, which bounds its size by the rebuild
-    * cadence. @return (part files before, after) */
+    * one full validation). The `batches/` ledger is kept, here and
+    * across rebuilds ([[build]] carries it into the new store so that
+    * pre-rebuild replays keep no-opping): it grows by one empty file
+    * per applied batch. @return (part files before, after) */
   def compact(spark: SparkSession, sfDir: String): (Int, Int) = {
     val dir = dirFor(spark, sfDir)
     // lease OUTSIDE the monitor (see IndexStore.appendBatch's note)
     graft.sources.WriterLease.withWrite(spark, dir, "compact") {
-    IndexStore.monitorFor(dir).synchronized {
-      val m = readMeta(spark, dir).getOrElse(return (0, 0))
+    StoreKernel.monitorFor(dir).synchronized {
+      val m = meta(spark, dir).getOrElse(return (0, 0))
       if (m.np == 0) return (0, 0)
       // a content-preserving rewrite may EXTEND a voucher, never
       // create one: re-stamp the token after the rewrite only if the
@@ -712,12 +534,11 @@ object LexIndex {
       // "Content-preserving" includes the tombstone fold below: the
       // folded tables serve byte-identically to what the anti-join +
       // negative partials served before it.
-      val (tombN, tombXor) = tombAggregates(spark, dir)
-      val vouchedAtEntry = readToken(spark, dir).exists {
-        case (d, tm, tN, tX) =>
-          d == stateDigest(spark, sfDir, dir) && tm == m &&
-            tN == tombN && tX == tombXor
-      }
+      val (tombN, _, tombXor) = StoreKernel.tombAggregates(spark, dir)
+      val st = kernelStore(spark, sfDir, dir)
+      val vouchedAtEntry = StoreKernel.readToken(spark, st).exists(t =>
+        t.digest == StoreKernel.digest(spark, st) && t.meta == m &&
+          t.tombN == tombN && t.tombXor == tombXor)
       def files(): Int = {
         // current generations only: retired copies awaiting their TTL
         // are storage, not layout
@@ -752,7 +573,7 @@ object LexIndex {
       // meta folds and the sidecar clears. Crash windows converge by
       // ensure-rebuild, and can never resurrect (the corpus rewrite
       // happened at deleteDocs time).
-      val tombIds0 = tombstoneFrame(spark, dir)
+      val tombIds0 = StoreKernel.tombstoneFrame(spark, dir)
         .map(_.select(col("doc_id")).distinct())
       // folded posting count, computed BEFORE any rewrite: a zero-row
       // partitioned write leaves an unreadable shell, so when every
@@ -785,18 +606,13 @@ object LexIndex {
       rewrite("stats", _.agg(sum(col("n_docs")).as("n_docs"),
         sum(col("sum_dl")).as("sum_dl")), partitioned = false)
       if (tombN > 0 && tombIds.nonEmpty) {
-        writeMeta(spark, dir,
+        StoreKernel.writeMeta(spark, dir,
           m.copy(n = m.n - tombN, fp = m.fp ^ tombXor, np = np2.get))
-        clearTombstones(spark, dir)
+        StoreKernel.clearTombstones(spark, dir)
       }
-      if (vouchedAtEntry) {
-        val m2 = readMeta(spark, dir).getOrElse(m)
-        // re-read the fold terms rather than assuming the fold ran —
-        // the blank-survivor edge above leaves the sidecar in place
-        val (tN2, tX2) = tombAggregates(spark, dir)
-        writeToken(spark, dir,
-          tokenLine(stateDigest(spark, sfDir, dir), m2, tN2, tX2))
-      }
+      // re-reads meta and the fold terms rather than assuming the fold
+      // ran — the blank-survivor edge above leaves the sidecar in place
+      if (vouchedAtEntry) StoreKernel.restamp(spark, st)
       (before, files())
     } }
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{StoreKernel, Tables}
 
 /** The user-facing retention / right-to-be-forgotten entry point —
   * the operational form of the lifecycle the gated pipelines
@@ -65,7 +65,7 @@ import graft.sources.Tables
 object Retention {
 
   /** Index-less forget for one corpus table: rewrite it minus `ids`
-    * through [[IndexStore.rewriteTableMinus]]'s crash-atomic
+    * through [[StoreKernel.rewriteTableMinus]]'s crash-atomic
     * shadow+promote, under the corpus-dir writer lease the streaming
     * sinks hold around their appends — the swap can never discard a
     * file an in-flight ingest batch just landed, and a retention
@@ -84,7 +84,7 @@ object Retention {
         // fence immediately before the visible swap (the commit
         // point) — the acquisition may have waited out a takeover
         graft.sources.WriterLease.verify(spark, corpusDir)
-        IndexStore.rewriteTableMinus(spark, table, kids, key)
+        StoreKernel.rewriteTableMinus(spark, table, kids, key)
       }
       present
     }
@@ -105,7 +105,7 @@ object Retention {
     val lexDir = LexIndex.dirFor(spark, corpusDir)
     val annDir = IndexStore.dirFor(spark, corpusDir)
     val (dT, dR) = docIds match {
-      case Some(ids) if LexIndex.hasIndex(spark, lexDir) =>
+      case Some(ids) if StoreKernel.hasMeta(spark, lexDir) =>
         val st = LexIndex.deleteDocs(spark, corpusDir,
           ids.select(col("doc_id")))
         (st.tombstoned, st.removedFromCorpus)
@@ -121,7 +121,7 @@ object Retention {
       case None => (0L, 0L)
     }
     val (vT, vR) = vecIds match {
-      case Some(ids) if IndexStore.hasIndex(spark, annDir) =>
+      case Some(ids) if StoreKernel.hasMeta(spark, annDir) =>
         val st = IndexStore.deleteBatch(spark, corpusDir,
           ids.select(col("vec_id")))
         (st.tombstoned, st.removedFromCorpus)
@@ -142,10 +142,10 @@ object Retention {
       else (
         // index-less sides have nothing to fold: their rewrite above
         // was already the physical removal
-        docIds.nonEmpty && LexIndex.hasIndex(spark, lexDir) && {
+        docIds.nonEmpty && StoreKernel.hasMeta(spark, lexDir) && {
           LexIndex.compact(spark, corpusDir); true
         },
-        vecIds.nonEmpty && IndexStore.hasIndex(spark, annDir) && {
+        vecIds.nonEmpty && StoreKernel.hasMeta(spark, annDir) && {
           graft.sources.Maintenance.compactAnnIndex(spark, annDir); true
         })
     ForgetStats(dT, dR, vT, vR, fl, fa)

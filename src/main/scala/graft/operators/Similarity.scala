@@ -869,8 +869,7 @@ object Similarity {
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
   /** q36's candidate stage: distinct (query, neighbor) id pairs that
-    * share a probed bucket in ≥ 1 table. Shared with LshProbe, which
-    * measures the candidate fraction across corpus scales. */
+    * share a probed bucket in ≥ 1 table. */
   private[graft] def lshCandidates(e: DataFrame, bits: Int): DataFrame = {
     val buckets = lshBuckets(e, bits)
     val probes: Seq[Column] =

@@ -356,18 +356,17 @@ object Maintenance {
     // lease OUTSIDE the monitor: a foreign holder's bounded wait must
     // never block this JVM's readers on the IndexStore lock
     WriterLease.withWrite(spark, indexDir, "compact") {
-      // per-store monitor (IndexStore.monitorFor): same-store readers
+      // per-store monitor (StoreKernel.monitorFor): same-store readers
       // and appends serialize as before; other stores' maintenance
       // proceeds concurrently (the sharded ingest's fold cadence)
-      graft.operators.IndexStore.monitorFor(indexDir).synchronized {
+      StoreKernel.monitorFor(indexDir).synchronized {
       import org.apache.spark.sql.functions.col
       // deletion fold rides the same rewrite: tombstoned ids (ghost
       // rows excluded by every reader since their deleteBatch) are
       // dropped from both tables here, then meta folds the sidecar's
       // (count, xor) and the sidecar clears — the physical half of
       // the deletion lifecycle (see IndexStore's deletion section)
-      val dropIds = graft.operators.IndexStore
-        .tombstoneFrame(spark, indexDir)
+      val dropIds = StoreKernel.tombstoneFrame(spark, indexDir)
         .map(_.select(col("vec_id")).distinct())
       // set when a table's physical fold was skipped (all rows
       // tombstoned): the meta fold below must then NOT run — clearing
@@ -532,7 +531,7 @@ object Maintenance {
   def compactVecLists(spark: SparkSession, listsDir: String): (Int, Int) =
     WriterLease.withWrite(spark, listsDir, "compact") {
       // per-store monitor — see compactAnnIndex's note
-      graft.operators.IndexStore.monitorFor(listsDir).synchronized {
+      StoreKernel.monitorFor(listsDir).synchronized {
       import org.apache.spark.sql.functions.col
       val dir = s"$listsDir/lists"
       def files(): Int = {

@@ -67,8 +67,8 @@ final class StaleWriterException(msg: String)
   * one rename/create that follows can still land one stale file.
   * That residue is exactly the "foreign write" class the stores
   * already defend against: every serving path trusts state only
-  * through listings digests (name|length|mtime — [[graft.operators
-  * .IndexStore]] stateDigest / the v2 `_commit` marker / the lists
+  * through listings digests (name|length|mtime — the
+  * [[StoreKernel.digest]] token / the v2 `_commit` marker / the lists
   * marker), so a slipped stale write invalidates the tokens, forces
   * the full validation, and converges by rebuild — never silent
   * wrong answers. The lease narrows the corruption window from
@@ -112,7 +112,7 @@ final class StaleWriterException(msg: String)
   * The lease file lives OUTSIDE the store dir (sibling suffix, like
   * the `__shadow_`/`__old` family) deliberately: it survives the
   * store's own shadow-promote swap, and it never feeds
-  * stateDigest/annListing — heartbeat mtime renewals must not
+  * the token digest/annListing — heartbeat mtime renewals must not
   * invalidate validation tokens every ttl/4.
   *
   * In-JVM: [[withWrite]] is reentrant PER THREAD (composed

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
+import graft.sources.StoreKernel
+
 /** Structured Streaming operators over the `events` stream shape
   * (event_id, ts, user_id, event_type, value, props).
   *
@@ -515,7 +517,7 @@ object StreamOps {
         import graft.operators.LexIndex
         val lexBatch = admitted.select(col("doc_id"), col("text"))
         try {
-          if (LexIndex.hasIndex(spark, LexIndex.dirFor(spark, corpusDir))) {
+          if (StoreKernel.hasMeta(spark, LexIndex.dirFor(spark, corpusDir))) {
             LexIndex.appendBatch(spark, corpusDir, lexBatch)
             ()
           } else {
@@ -551,7 +553,7 @@ object StreamOps {
     * corpus append completes the pair — fingerprints agree again). The
     * reverse order would strand the index behind silently until an
     * ensure noticed. A crashed BOOTSTRAP (corpus written, build never
-    * ran) is detected by [[graft.operators.IndexStore.hasIndex]] and
+    * ran) is detected by [[StoreKernel.hasMeta]] and
     * repaired by ensure on the next batch.
     *
     * The per-batch index cost is the batch-side encode plus the
@@ -617,7 +619,7 @@ object StreamOps {
       }) {
         () // bootstrapped above
       } else {
-        if (!IndexStore.hasIndex(spark, idxDir))
+        if (!StoreKernel.hasMeta(spark, idxDir))
           IndexStore.ensure(spark, corpusDir) // crashed bootstrap replay
         // generation-resolved at read time; a concurrent rewrite
         // committing mid-batch leaves `fresh` decided on the
@@ -807,7 +809,7 @@ object StreamOps {
         val info = IndexStore.ensure(spark, corpusDir)
         IngestScreen.ensureLists(spark, corpusDir, info)
       } else {
-        if (!IndexStore.hasIndex(spark, idxDir))
+        if (!StoreKernel.hasMeta(spark, idxDir))
           IndexStore.ensure(spark, corpusDir) // crashed bootstrap replay
         // generation-resolved at read time; stale-snapshot decisions
         // are one-sided-safe — see the unscreened sink's note

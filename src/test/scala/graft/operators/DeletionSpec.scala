@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.Tables
+import graft.sources.{StoreKernel, Tables}
 
 /** Deletion lifecycle (q79/q80): tombstone serving, ensure's folded
   * validation + crash-window heal, compaction fold, re-add refusal —
@@ -96,7 +96,7 @@ class DeletionSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     // FOLD
     graft.sources.Maintenance.compactAnnIndex(spark, idxDir)
-    assert(IndexStore.tombstoneFrame(spark, idxDir).isEmpty,
+    assert(StoreKernel.tombstoneFrame(spark, idxDir).isEmpty,
       "sidecar must clear at the fold")
     val codesIds = vecIds(
       IndexStore.withDeltaOf(spark, idxDir, "codes")(identity))
@@ -127,7 +127,7 @@ class DeletionSpec extends SparkSpec {
       foldAtTombstones = kills.size + 1L)
     val infoLax = IndexStore.ensure(spark, dir, Some(lax))
     assert(!infoLax.builtNow)
-    assert(IndexStore.tombstoneFrame(spark, idxDir).nonEmpty,
+    assert(StoreKernel.tombstoneFrame(spark, idxDir).nonEmpty,
       "a below-threshold sidecar must not fold")
     val before = IndexStore.queryIvfPq(spark, dir, infoLax)
       .collect().map(_.toSeq).toSet
@@ -136,7 +136,7 @@ class DeletionSpec extends SparkSpec {
       foldAtTombstones = kills.size.toLong)
     val info = IndexStore.ensure(spark, dir, Some(strict))
     assert(!info.builtNow, "the policy fold must compact, not rebuild")
-    assert(IndexStore.tombstoneFrame(spark, idxDir).isEmpty,
+    assert(StoreKernel.tombstoneFrame(spark, idxDir).isEmpty,
       "sidecar must clear at the policy fold")
     assert(IndexStore.appendState(spark, idxDir).exists(_._2 ==
       500 - kills.size), "meta.n must fold")
@@ -165,7 +165,7 @@ class DeletionSpec extends SparkSpec {
     val infoLax = LexIndex.ensure(spark, dir,
       foldAtTombstones = kills.size + 1L)
     assert(!infoLax.builtNow && infoLax.n == 500 - kills.size)
-    assert(LexIndex.tombstoneFrame(spark, lexDir).nonEmpty,
+    assert(StoreKernel.tombstoneFrame(spark, lexDir).nonEmpty,
       "a below-threshold sidecar must not fold")
     val before = LexIndex.q74Bm25TopKIdx(spark, dir)
       .collect().map(_.toSeq).toSet
@@ -174,7 +174,7 @@ class DeletionSpec extends SparkSpec {
       foldAtTombstones = kills.size.toLong)
     assert(!info.builtNow && info.n == 500 - kills.size,
       "the policy fold must compact, not rebuild")
-    assert(LexIndex.tombstoneFrame(spark, lexDir).isEmpty,
+    assert(StoreKernel.tombstoneFrame(spark, lexDir).isEmpty,
       "sidecar must clear at the policy fold")
     val after = LexIndex.q74Bm25TopKIdx(spark, dir)
       .collect().map(_.toSeq).toSet
@@ -206,7 +206,7 @@ class DeletionSpec extends SparkSpec {
         (nrm > 0 && nrm < Double.PositiveInfinity).as("valid"))
       .join(homes, Seq("vec_id"), "left")
       .repartition(1).write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(IndexStore.tombDirOf(idxDir))
+      .parquet(StoreKernel.tombDirOf(idxDir))
     // the window: corpus still carries the killed rows
     assert((vecIds(Tables.load(spark, dir, "embeddings")) & kills)
       == kills)
@@ -252,7 +252,7 @@ class DeletionSpec extends SparkSpec {
       q.processAllAvailable()
       assert(q.exception.isEmpty,
         s"stream died on the tombstoned re-add: ${q.exception}")
-      assert(IndexStore.tombstoneFrame(spark, idxDir).isEmpty,
+      assert(StoreKernel.tombstoneFrame(spark, idxDir).isEmpty,
         "the recovery fold did not clear the tombstone")
       val served = IndexStore.queryIvfPq(spark, corpusDir,
         IndexStore.ensure(spark, corpusDir))
@@ -374,7 +374,7 @@ class DeletionSpec extends SparkSpec {
     assert(ex.getMessage.contains("tombstoned"))
     // FOLD: physical removal, sidecar cleared, serving unchanged
     LexIndex.compact(spark, dir)
-    assert(LexIndex.tombstoneFrame(spark, lexDir).isEmpty)
+    assert(StoreKernel.tombstoneFrame(spark, lexDir).isEmpty)
     assert(bm25Rows(LexIndex.q74Bm25TopKIdx(spark, dir)) == want,
       "serving changed across the lexical fold")
     // re-add now legal
@@ -403,7 +403,7 @@ class DeletionSpec extends SparkSpec {
     assert((docIds(Tables.load(spark, dir, "documents")) & kills)
       .isEmpty, "ensure did not complete the crashed corpus rewrite")
     // the rebuild cleared the sidecar and serves the survivors
-    assert(LexIndex.tombstoneFrame(spark, lexDir).isEmpty)
+    assert(StoreKernel.tombstoneFrame(spark, lexDir).isEmpty)
     assert(info.n == 500 - kills.size)
   }
 
@@ -436,7 +436,7 @@ class DeletionSpec extends SparkSpec {
       // the refusal point is the corpus rewrite: tombstones + negative
       // partials landed (the crash-equivalent state ensure can heal),
       // the corpus itself is untouched
-      assert(LexIndex.tombstoneFrame(spark, lexDir).nonEmpty,
+      assert(StoreKernel.tombstoneFrame(spark, lexDir).nonEmpty,
         "refusal happened before the tombstone commit point")
       assert((docIds(Tables.load(spark, dir, "documents")) & kills)
         == kills, "corpus rewrite ran under a foreign corpus lease")
@@ -456,6 +456,70 @@ class DeletionSpec extends SparkSpec {
     assert(!info.builtNow,
       "ensure rebuilt after a completed replayed delete")
     assert(info.n == 500 - kills.size)
+  }
+
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(500) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
+  test("lexical crash window (tombstones + negative partials landed, " +
+    "corpus rewrite refused by a held corpus-dir lease): ensure " +
+    "completes the rewrite and serves WITHOUT rebuild, bit-identical " +
+    "to a survivor rebuild, and the next ensure runs zero jobs") {
+    import graft.sources.{LeaseHeldException, WriterLease}
+    val dir = freshCorpus()
+    val lexDir = LexIndex.dirFor(spark, dir)
+    deleteDir(lexDir)
+    LexIndex.ensure(spark, dir)
+    val kills = docIds(killDocs(dir))
+    assert(kills.nonEmpty)
+    // the same foreign corpus-dir lease as the replay test above: the
+    // delete stops after its tombstones and negative partials
+    val oldW = System.getProperty("graft.lease.waitMs")
+    System.setProperty("graft.lease.waitMs", "300")
+    try {
+      val (fs, p) =
+        graft.Scratch.fs(spark, WriterLease.leasePathOf(dir))
+      val out = fs.create(p, true)
+      try out.write("graftlease|1|4|foreign-owner|ingest"
+        .getBytes("UTF-8")) finally out.close()
+      intercept[LeaseHeldException] {
+        LexIndex.deleteDocs(spark, dir, kills.toSeq.toDF("doc_id"))
+      }
+      assert(StoreKernel.tombstoneFrame(spark, lexDir).nonEmpty)
+      assert((docIds(Tables.load(spark, dir, "documents")) & kills)
+        == kills)
+      fs.delete(p, false)
+    } finally {
+      if (oldW == null) System.clearProperty("graft.lease.waitMs")
+      else System.setProperty("graft.lease.waitMs", oldW)
+    }
+    // no replay: ensure itself heals the corpus and validates
+    val info = LexIndex.ensure(spark, dir)
+    assert(!info.builtNow,
+      "ensure rebuilt a crashed delete whose partials had landed")
+    assert(info.n == 500 - kills.size)
+    assert((docIds(Tables.load(spark, dir, "documents")) & kills)
+      .isEmpty, "ensure did not complete the crashed corpus rewrite")
+    assert(jobsDuring(LexIndex.ensure(spark, dir)) == 0,
+      "the ensure after the heal missed the token fast path")
+    val twinDir = java.nio.file.Files
+      .createTempDirectory("del_lex_heal_twin").toString
+    Tables.load(spark, dir, "documents")
+      .write.parquet(s"$twinDir/documents.parquet")
+    deleteDir(LexIndex.dirFor(spark, twinDir))
+    assert(bm25Rows(LexIndex.q74Bm25TopKIdx(spark, dir)) ==
+      bm25Rows(LexIndex.q74Bm25TopKIdx(spark, twinDir)),
+      "healed-index BM25 diverged from the survivor rebuild")
   }
 
   test("q81 correction lifecycle: erase → fold → corrected " +
@@ -483,9 +547,9 @@ class DeletionSpec extends SparkSpec {
     assert(docs.count() ==
       Tables.load(spark, sfDir, "documents").count())
     // physically folded: no tombstones pending after the sequence
-    assert(LexIndex.tombstoneFrame(spark,
+    assert(StoreKernel.tombstoneFrame(spark,
       LexIndex.dirFor(spark, corpusDir)).isEmpty)
-    assert(IndexStore.tombstoneFrame(spark,
+    assert(StoreKernel.tombstoneFrame(spark,
       IndexStore.dirFor(spark, corpusDir)).isEmpty)
     // the ANN leg's xor fingerprint composes EXACTLY across
     // erase → fold → corrected re-admission: ensure validates the

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.Tables
+import graft.sources.{StoreKernel, Tables}
 
 /** [[Retention.forget]]/[[Retention.forgetWhere]] — the user-facing
   * multi-store forget: predicate kill sets removed from both corpora
@@ -74,9 +74,9 @@ class RetentionSpec extends SparkSpec {
     val st3 = Retention.forgetWhere(spark, dir,
       Some(docPred), Some(vecPred), foldNow = true)
     assert(st3.foldedLex && st3.foldedAnn)
-    assert(LexIndex.tombstoneFrame(spark,
+    assert(StoreKernel.tombstoneFrame(spark,
       LexIndex.dirFor(spark, dir)).isEmpty)
-    assert(IndexStore.tombstoneFrame(spark,
+    assert(StoreKernel.tombstoneFrame(spark,
       IndexStore.dirFor(spark, dir)).isEmpty)
     // folded serving still excludes (now physically) and validates
     // with no rebuild

@@ -442,7 +442,7 @@ class StreamOpsSpec extends SparkSpec {
       q.processAllAvailable()
       val table = s"$corpusDir/embeddings.parquet"
       assert(spark.read.parquet(table).count() === boot.size.toLong)
-      assert(IndexStore.hasIndex(spark, idxDir))
+      assert(graft.sources.StoreKernel.hasMeta(spark, idxDir))
       // growth batch, then the SAME batch replayed, then another batch
       ms.addData(b1); q.processAllAvailable()
       ms.addData(b1); q.processAllAvailable() // replay → no-op
