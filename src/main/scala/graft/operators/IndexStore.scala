@@ -478,7 +478,7 @@ object IndexStore {
     // the kernel compares the corpus identity against meta MINUS the
     // pending valid tombstones (see the deletion section); the store
     // adds its dials, geometry and policy, and the codes-table probe
-    val info = StoreKernel.ensure(spark, kernelStore(sfDir, dir))(
+    val (info, pending) = StoreKernel.ensure(spark, kernelStore(sfDir, dir))(
       // nlist on the EFFECTIVE corpus size — a delete (or append) that
       // crosses an nlistFor boundary makes a retrain the legitimate
       // answer, exactly the maintenance policy
@@ -489,10 +489,11 @@ object IndexStore {
       intact = (m, _) => tablesIntact(spark, dir, m),
       // served size is the EFFECTIVE corpus — shortlist sizing and the
       // n=0 delegate then match what a rebuilt-on-survivors index
-      // would report
-      serve = (m, tombN) =>
-        BuildInfo(dir, m.n - tombN, m.nl, builtNow = false, buildSec = 0.0),
-      build = known => build(spark, sfDir, dir, knownIdentity = known))
+      // would report; the pending count rides along as the policy's
+      // tombstone hint
+      serve = (m, tombN) => (BuildInfo(dir, m.n - tombN, m.nl,
+        builtNow = false, buildSec = 0.0), tombN),
+      build = known => (build(spark, sfDir, dir, knownIdentity = known), 0L))
     // layout-policy compaction AFTER the monitor releases, so the
     // compaction path takes lease → monitor like every other public
     // mutator (compactAnnIndex's own order). Running it inside
@@ -502,7 +503,8 @@ object IndexStore {
     // out of a SERVE path after waitMs. Content-preserving either
     // way, so info (computed pre-compaction) stays valid: effective
     // n, nl and the dir don't move.
-    if (!info.builtNow) compactIfPolicied(spark, sfDir, info.dir, policy)
+    if (!info.builtNow)
+      compactIfPolicied(spark, sfDir, info.dir, policy, pending)
     info
   }
 
@@ -520,9 +522,13 @@ object IndexStore {
     * The trigger is probed twice — once unguarded (cheap, skips the
     * lease entirely on the quiet path) and again INSIDE the lease
     * (a racing policied ensure may have just compacted; the rewrite
-    * must not run twice). */
+    * must not run twice). The unguarded probe takes its pending
+    * tombstone count from `tombHint` — the valid tombN the ensure just
+    * validated or read from its token — instead of aggregating the
+    * sidecar again; a delete landing in between is seen by the next
+    * ensure. The in-lease probe aggregates the sidecar itself. */
   private def compactIfPolicied(spark: SparkSession, sfDir: String,
-      dir: String, policy: Option[RebuildPolicy]): Unit = {
+      dir: String, policy: Option[RebuildPolicy], tombHint: Long): Unit = {
     // LOCK-ORDER GUARD (ADVICE r16): this path takes lease → monitor.
     // A caller that wraps a POLICIED ensure() in IndexStore
     // .synchronized would enter here monitor-first and re-create the
@@ -537,7 +543,7 @@ object IndexStore {
         "lease-then-monitor is the required order (see compactAnnIndex)")
     policy.filter(p => p.compactAtFilesPerCell < Int.MaxValue ||
         p.foldAtTombstones < Long.MaxValue).foreach { p =>
-      def triggered(): (Boolean, Long) = {
+      def triggered(tombN: => Long): (Boolean, Long) = {
         val worst =
           if (p.compactAtFilesPerCell == Int.MaxValue) Nil
           else Seq("codes", "rcodes").flatMap { t =>
@@ -555,18 +561,18 @@ object IndexStore {
              else st.groupBy(_.getPath.getParent).values.map(_.length)) ++
               (if (deltaN > 0) Seq(deltaN) else Nil)
           }
-        // tombstone-cadence axis: exists() probe first, so the common
-        // tombstone-free store never runs the sidecar agg
         val pendingTombs =
-          if (p.foldAtTombstones == Long.MaxValue) 0L
-          else if (StoreKernel.tombstoneFrame(spark, dir).isEmpty) 0L
-          else StoreKernel.tombAggregates(spark, dir, col("valid"))._2
+          if (p.foldAtTombstones == Long.MaxValue) 0L else tombN
         ((worst.nonEmpty && worst.max >= p.compactAtFilesPerCell) ||
           pendingTombs >= p.foldAtTombstones, pendingTombs)
       }
-      if (triggered()._1)
+      if (triggered(tombHint)._1)
         graft.sources.WriterLease.withWrite(spark, dir, "policy-compact") {
-          val (go, pendingTombs) = triggered()
+          // tombstone-cadence axis: exists() probe first, so the common
+          // tombstone-free store never runs the sidecar agg
+          val (go, pendingTombs) = triggered(
+            if (StoreKernel.tombstoneFrame(spark, dir).isEmpty) 0L
+            else StoreKernel.tombAggregates(spark, dir, col("valid"))._2)
           if (go) {
             val (before, after) =
               graft.sources.Maintenance.compactAnnIndex(spark, dir)
@@ -718,7 +724,7 @@ object IndexStore {
     // Home cells FIRST (cost ∝ batch): the trained centroids never
     // change on an append, so a replayed row maps to the SAME cell —
     // which is what licenses the cell-pruned membership scan below.
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = StoreKernel.readStore(spark, s"$dir/centroids")
     val home0 = Similarity.homeCells(
       pe0.select(col("vec_id"), col("v"), col("nrm")), cents)
     // Membership, and TORN-state detection. Codes are written before
@@ -880,7 +886,7 @@ object IndexStore {
       val mEnc = Similarity.pqAssign(
         Similarity.subVectors(pe.filter(col("cls") === "m")
           .select(col("vec_id"), col("v"), col("nrm"))),
-        spark.read.parquet(s"$dir/codebook"))
+        StoreKernel.readStore(spark, s"$dir/codebook"))
         .select(col("vec_id"), col("nrm"), col("sub"), col("code"))
       val stored = withDeltaOf(spark, dir, "codes")(
         _.join(home0.select(col("cell")).distinct().hint("broadcast"),
@@ -934,7 +940,7 @@ object IndexStore {
         .select(col("vec_id"), col("v"), col("nrm"))
       val codes = Similarity
         .pqAssign(Similarity.subVectors(eFresh),
-          spark.read.parquet(s"$dir/codebook"))
+          StoreKernel.readStore(spark, s"$dir/codebook"))
         .select(col("vec_id"), col("nrm"), col("sub"), col("code"))
         .join(home, Seq("vec_id"))
       // ONE delta file, not one file per touched cell= dir — the √N
@@ -954,7 +960,7 @@ object IndexStore {
     val rsv = graft.Materialize(
       Similarity.residualSubVectors(e.join(home, Seq("vec_id")), cents))
     val rcodes = Similarity
-      .pqAssign(rsv, spark.read.parquet(s"$dir/rcodebook"))
+      .pqAssign(rsv, StoreKernel.readStore(spark, s"$dir/rcodebook"))
       .select(col("vec_id"), col("cell"), col("sub"), col("code"))
     prof("rsv")
     val batchRes = meanResNorm(rsv)
@@ -975,11 +981,13 @@ object IndexStore {
 
   // --- query-only paths ------------------------------------------------------
 
-  /** Query batch (vec_id < knnQueries) as (vec_id, v, nrm) — the only
-    * corpus rows the query paths read outside the final re-rank. */
-  private def queryVecs(spark: SparkSession, sfDir: String,
+  /** Query batch (vec_id < knnQueries) of the embeddings frame `raw` as
+    * (vec_id, v, nrm) — the only corpus rows the query paths read
+    * outside the final re-rank, which re-ranks against the same `raw`
+    * (one corpus read per request). */
+  private def queryVecs(raw: DataFrame,
       maxQuery: Long = Similarity.knnQueries): DataFrame =
-    Similarity.prepped(spark, sfDir)
+    Similarity.prepped(raw)
       .filter(Similarity.validNorm && col("vec_id") < maxQuery)
 
   /** Disk partition columns come back as the inferred partition type;
@@ -988,7 +996,8 @@ object IndexStore {
     * codes table serves its newest committed generation while retired
     * ones idle out their TTL (see [[graft.sources.Generations]]). */
   private[operators] def readCodes(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(graft.sources.Generations.resolve(spark, path))
+    StoreKernel.readStore(spark,
+      graft.sources.Generations.resolve(spark, path))
       .withColumn("cell", col("cell").cast("long"))
 
   // --- delta buffer (LSM L0 for the codes tables) ---------------------------
@@ -1135,7 +1144,7 @@ object IndexStore {
     if (names.isEmpty) None
     else {
       val dd = deltaDirOf(dir, table)
-      Some(spark.read.parquet(names.sorted.map(n => s"$dd/$n"): _*))
+      Some(StoreKernel.readStore(spark, names.sorted.map(n => s"$dd/$n"): _*))
     }
   }
 
@@ -1273,7 +1282,7 @@ object IndexStore {
     // corpus rewrite: drop EVERY tombstoned id still present — this
     // batch's and any crashed predecessor's (the replay IS the heal)
     val removed = StoreKernel.dropTombstoned(spark,
-      kernelStore(sfDir, dir), deleting = Some(raw))
+      kernelStore(sfDir, dir), raw, heal = false)
     DeleteStats(freshN, removed)
   } } }
 
@@ -1416,8 +1425,9 @@ object IndexStore {
     // set is vacuous against zero candidates)
     if (info.n == 0) return Similarity.q65KnnIvfPq(spark, sfDir)
     val dir = info.dir
-    val qe = queryVecs(spark, sfDir, maxQuery)
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val raw = Tables.load(spark, sfDir, "embeddings")
+    val qe = queryVecs(raw, maxQuery)
+    val cents = StoreKernel.readStore(spark, s"$dir/centroids")
     val probes = Similarity.topCells(qe, cents,
         Similarity.nprobeFor(info.nl))
       .select(col("vec_id").as("query_id"), col("cell"))
@@ -1436,11 +1446,10 @@ object IndexStore {
       .foldLeft(probed0)((d, x) =>
         d.join(x.select(col("vec_id")), Seq("vec_id"), "left_anti"))
     val lut = Similarity.pqLut(Similarity.subVectors(qe),
-      spark.read.parquet(s"$dir/codebook"))
+      StoreKernel.readStore(spark, s"$dir/codebook"))
     val cand = Similarity.adcShortlist(probed, lut,
       Seq("query_id", "sub", "code"), Similarity.shortlistFor(info.n))
-    Similarity.rerankTopK(Tables.load(spark, sfDir, "embeddings"), cand,
-      kk, maxQuery)
+    Similarity.rerankTopK(raw, cand, kk, maxQuery)
   }
 
   /** q69: [[Similarity.q65KnnIvfPq]] served from the persisted index —
@@ -1461,8 +1470,9 @@ object IndexStore {
     // see queryIvfPq: n=0 → the twin, free and identical by construction
     if (info.n == 0) return Similarity.q68KnnIvfPqRes(spark, sfDir)
     val dir = info.dir
-    val qe = queryVecs(spark, sfDir)
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val raw = Tables.load(spark, sfDir, "embeddings")
+    val qe = queryVecs(raw)
+    val cents = StoreKernel.readStore(spark, s"$dir/centroids")
     val probesCt = Similarity.topCells(qe, cents,
         Similarity.nprobeFor(info.nl))
       .join(broadcast(cents.select(col("cell"), col("cn"))), Seq("cell"))
@@ -1473,11 +1483,11 @@ object IndexStore {
         _.join(broadcast(probesCt), Seq("cell"))))((d, t) =>
         d.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti"))
     val lut = Similarity.pqLut(Similarity.subVectors(qe),
-      spark.read.parquet(s"$dir/rcodebook"))
+      StoreKernel.readStore(spark, s"$dir/rcodebook"))
     val cand = Similarity.adcShortlist(probed, lut,
       Seq("query_id", "sub", "code"), Similarity.shortlistFor(info.n),
       approxScore = max(col("ct")) + Similarity.adcSum)
-    Similarity.rerankTopK(Tables.load(spark, sfDir, "embeddings"), cand)
+    Similarity.rerankTopK(raw, cand)
   }
 
   /** q70: [[Similarity.q68KnnIvfPqRes]] served from the persisted
@@ -1518,7 +1528,7 @@ object IndexStore {
     val qe = qRaw
       .select(col("vec_id"), v.as("v"), sqrt(dotD(v, v)).as("nrm"))
       .filter(Similarity.validNorm)
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = StoreKernel.readStore(spark, s"$dir/centroids")
     val probes = Similarity.topCells(qe, cents,
         Similarity.nprobeFor(info.nl))
       .select(col("vec_id").as("query_id"), col("cell"))
@@ -1528,7 +1538,7 @@ object IndexStore {
       .foldLeft(probed0)((d, t) =>
         d.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti"))
     val lut = Similarity.pqLut(Similarity.subVectors(qe),
-      spark.read.parquet(s"$dir/codebook"))
+      StoreKernel.readStore(spark, s"$dir/codebook"))
     val cand = Similarity.adcShortlist(probed, lut,
       Seq("query_id", "sub", "code"), Similarity.shortlistFor(info.n))
     val e = Tables.load(spark, shardDir, "embeddings")
@@ -1611,8 +1621,9 @@ object IndexStore {
     // "everything survives" answer with the same schema
     if (info.n == 0) return Similarity.q45EmbedDedup(spark, sfDir)
     val dir = info.dir
-    val e = Similarity.prepped(spark, sfDir).filter(Similarity.validNorm)
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val raw = Tables.load(spark, sfDir, "embeddings")
+    val e = Similarity.prepped(raw).filter(Similarity.validNorm)
+    val cents = StoreKernel.readStore(spark, s"$dir/centroids")
     // Vectors ride INTO the cell join and the exact cosine evaluates
     // inside it (the q34 discipline): an earlier shape materialized
     // bare id pairs, distinct'ed them, and re-joined vectors twice —
@@ -1659,8 +1670,7 @@ object IndexStore {
           Similarity.pairThreshold)
       .select(greatest(col("pid"), col("iid")).as("vec_id"))
       .distinct()
-    Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("label"))
+    raw.select(col("vec_id"), col("label"))
       .join(dropped, Seq("vec_id"), "left_anti")
       .orderBy(col("vec_id"))
   }

@@ -265,7 +265,7 @@ object IngestScreen {
       .select(col("vec_id"), col("embedding"), v.as("v"),
         sqrt(dotD(v, v)).as("nrm"))
       .filter(Similarity.validNorm)
-    val cents = spark.read.parquet(s"$idxDir/centroids")
+    val cents = StoreKernel.readStore(spark, s"$idxDir/centroids")
     val home = Similarity.homeCells(
       pe.select(col("vec_id"), col("v"), col("nrm")), cents)
     val withCell = pe.join(home, Seq("vec_id"))
@@ -320,7 +320,7 @@ object IngestScreen {
     * Generation-resolved (compactVecLists commits retained
     * generations — see [[graft.sources.Generations]]). */
   private def readLists(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(
+    StoreKernel.readStore(spark,
       graft.sources.Generations.resolve(spark, s"$dir/lists"))
       .withColumn("cell", col("cell").cast("long"))
 
@@ -348,7 +348,7 @@ object IngestScreen {
       iidFilter: Column = lit(true),
       broadcastProbes: Boolean = false): DataFrame = {
     import graft.functions.VectorFunctions.dotD
-    val cents = spark.read.parquet(s"${info.dir}/centroids")
+    val cents = StoreKernel.readStore(spark, s"${info.dir}/centroids")
     val probes = Similarity.topCells(batch, cents, np)
       .select(col("vec_id").as("pid"), col("cell"))
       .join(batch.select(col("vec_id").as("pid"), col("v").as("vp"),

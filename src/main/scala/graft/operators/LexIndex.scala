@@ -96,6 +96,11 @@ object LexIndex {
   private def cur(spark: SparkSession, path: String): String =
     graft.sources.Generations.resolve(spark, path)
 
+  /** The current generation of the store table at `path`, planned
+    * without a Spark job ([[StoreKernel.readStore]]). */
+  private def readCur(spark: SparkSession, path: String): DataFrame =
+    StoreKernel.readStore(spark, cur(spark, path))
+
   /** (row count, xor fingerprint) of the documents corpus in one scan
     * — same xor rationale as [[IndexStore]] (order-independent,
     * incrementally maintainable). doc_id is the posting key, so a
@@ -148,7 +153,7 @@ object LexIndex {
         // that wrote data but no stats row, a crashed delete that
         // stamped tombstones but not its negative partial, or a
         // foreign stats table all break it
-        val s = spark.read.parquet(cur(spark, s"$dir/stats"))
+        val s = readCur(spark, s"$dir/stats")
           .agg(sum(col("n_docs"))).head()
         !s.isNullAt(0) && s.getLong(0) == m.n - tombN
       }
@@ -243,7 +248,7 @@ object LexIndex {
     // 3. corpus rewrite: drop EVERY tombstoned id still present —
     //    this batch's and any crashed predecessor's (replay = heal)
     val removed = StoreKernel.dropTombstoned(spark,
-      kernelStore(spark, sfDir, dir), deleting = Some(docs))
+      kernelStore(spark, sfDir, dir), docs, heal = false)
     DeleteDocsStats(freshN, removed)
   } } }
 
@@ -330,7 +335,7 @@ object LexIndex {
       val (tombN, _, _) = StoreKernel.tombAggregates(spark, dir)
       if (tombN > 0 && tombN >= foldAtTombstones) {
         val survivors = StoreKernel.tombstoneFrame(spark, dir)
-          .map(t => spark.read.parquet(cur(spark, s"$dir/tf"))
+          .map(t => readCur(spark, s"$dir/tf")
             .join(t.select(col("doc_id")).distinct().hint("broadcast"),
               Seq("doc_id"), "left_anti").limit(1).count())
           .getOrElse(1L)
@@ -369,7 +374,7 @@ object LexIndex {
     // deleted docs are excluded here; df/stats need no exclusion —
     // their negative partials already subtracted exactly
     val pruned = StoreKernel.tombstoneFrame(spark, info.dir)
-      .foldLeft(spark.read.parquet(cur(spark, s"${info.dir}/tf"))
+      .foldLeft(readCur(spark, s"${info.dir}/tf")
         .filter(col("pfx").isin(pfxes: _*))
         .join(broadcast(terms), "token"))((d, t) =>
         d.join(t.select(col("doc_id")).hint("broadcast"),
@@ -381,11 +386,11 @@ object LexIndex {
     // computation over the grown corpus: append preserves q74's
     // bit-identity, not just its recall (postings/df/stats are exact
     // facts, unlike the ANN index's trained artifacts).
-    val dfq = spark.read.parquet(cur(spark, s"${info.dir}/df"))
+    val dfq = readCur(spark, s"${info.dir}/df")
       .filter(col("pfx").isin(pfxes: _*))
       .join(broadcast(terms), "token")
       .groupBy(col("token")).agg(sum(col("df")).as("df"))
-    val statsLong = spark.read.parquet(cur(spark, s"${info.dir}/stats"))
+    val statsLong = readCur(spark, s"${info.dir}/stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
     Retrieval.scoreAgainst(pruned, qterms, dfq, statsLong, excludeSelf)
   }
@@ -556,7 +561,7 @@ object LexIndex {
         // previous table generation stays at its planned paths until
         // the Generations TTL, so a mid-compaction BM25 scan completes
         val shadow = graft.sources.Generations.shadowFor(spark, path)
-        val w = transform(spark.read.parquet(cur(spark, path)))
+        val w = transform(readCur(spark, path))
         val writer =
           if (partitioned)
             w.repartition(col("pfx")).write.mode(SaveMode.Overwrite)
@@ -580,7 +585,7 @@ object LexIndex {
       // surviving doc is blank the fold is SKIPPED (sidecar stays;
       // the anti-join + negative partials keep serving correct) —
       // the np==0 read guard can then never meet a shell it can't read
-      val np2 = tombIds0.map(t => spark.read.parquet(cur(spark, s"$dir/tf"))
+      val np2 = tombIds0.map(t => readCur(spark, s"$dir/tf")
         .join(t.hint("broadcast"), Seq("doc_id"), "left_anti").count())
       val tombIds = if (np2.contains(0L)) {
         System.err.println(s"[lexidx] tombstone fold skipped at $dir: " +

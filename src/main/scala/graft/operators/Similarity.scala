@@ -47,10 +47,14 @@ object Similarity {
     * before any pairwise join — the pair-level work drops to a single
     * codegen'd dot product + one division. Bit-identical to computing
     * the norm per pair (same expression over the same data). */
-  private[operators] def prepped(spark: SparkSession, sfDir: String): DataFrame = {
+  private[operators] def prepped(spark: SparkSession, sfDir: String): DataFrame =
+    prepped(emb(spark, sfDir))
+
+  /** [[prepped]] over an embeddings frame the caller already read (a
+    * request that also re-ranks against it reads the corpus once). */
+  private[operators] def prepped(raw: DataFrame): DataFrame = {
     val v = col("embedding").cast("array<double>")
-    emb(spark, sfDir).select(col("vec_id"), v.as("v"),
-      sqrt(dotD(v, v)).as("nrm"))
+    raw.select(col("vec_id"), v.as("v"), sqrt(dotD(v, v)).as("nrm"))
   }
 
   /** The indexable/query-able predicate over the precomputed norm:

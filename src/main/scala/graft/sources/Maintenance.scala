@@ -246,7 +246,7 @@ object Maintenance {
       val df =
         if (graft.streaming.IngestCommit.listing(spark, dir).isEmpty)
           graft.streaming.IngestCommit.readFiles(spark, dir, Nil, schema)
-        else spark.read.parquet(Generations.resolve(spark, dir))
+        else StoreKernel.readStore(spark, Generations.resolve(spark, dir))
       val before = df.count()
       val kept = clean(df.join(committed, Seq("doc_id"), "left_semi"))
       val lost = corpus.join(df.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -273,7 +273,7 @@ object Maintenance {
         write(full, shadow)
         // count the written shadow, not the plan — one pass over the
         // data
-        val after = spark.read.parquet(shadow).count()
+        val after = StoreKernel.readStore(spark, shadow).count()
         WriterLease.verify(spark, corpusDir)
         // retained-generation commit: readers that planned splits on
         // the previous index files keep them until the TTL
@@ -548,7 +548,7 @@ object Maintenance {
       // maintenance entry must no-op on engine-written states, not
       // crash on them
       if (before == 0) return (before, before)
-      val df = spark.read.parquet(Generations.resolve(spark, dir))
+      val df = StoreKernel.readStore(spark, Generations.resolve(spark, dir))
       // zero-row guard (same class as compact's totalFiles==0 skip and
       // compactIngestIndexes' full.isEmpty branch): a partitionBy
       // write of zero rows emits NO part files, and swapping that

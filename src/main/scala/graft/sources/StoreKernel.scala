@@ -3,9 +3,10 @@ package graft.sources
 import scala.reflect.runtime.universe.TypeTag
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode,
   SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.functions._
 
 /** A store meta row the validate-or-build lifecycle can check corpus
@@ -65,6 +66,46 @@ object StoreKernel {
   private val storeMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  // --- store-table reads -----------------------------------------------------
+
+  /** `paths` read as parquet under the schema of one footer read on the
+    * driver: the data file Spark's own inference opens (the first by
+    * path of the leaf files under `paths`, hidden `_`/`.` names
+    * skipped), converted by Spark's own footer conversion
+    * ([[GraftFooterSchema]]). Same schema and rows as
+    * `spark.read.parquet(paths: _*)` — partition columns (`cell`,
+    * `pfx`) are still inferred from the paths — but building the frame
+    * launches no Spark job, where the plain read runs a one-task job
+    * per table just to read that footer. For the tables the stores
+    * write themselves, all files of one table under one schema (meta,
+    * tombstones, trained tables, codes, lists, postings): user tables
+    * keep Spark's inference. No data file (an absent path, a dir
+    * holding only `_SUCCESS` or hidden debris) or an unreadable footer:
+    * the plain read, which fails exactly as it always did. */
+  def readStore(spark: SparkSession, paths: String*): DataFrame =
+    schemaFile(spark, paths).flatMap { f =>
+      try GraftFooterSchema.read(spark, f)
+      catch { case NonFatal(_) => None }
+    }.fold(spark.read.parquet(paths: _*))(
+      spark.read.schema(_).parquet(paths: _*))
+
+  /** The data file Spark's parquet inference reads the schema of (its
+    * `ParquetUtils.splitFiles` choice over the file index's leaves;
+    * parquet summary files are not data files). */
+  private def schemaFile(spark: SparkSession,
+      paths: Seq[String]): Option[FileStatus] = {
+    def leaves(fs: FileSystem, p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq
+        .filterNot(st => GraftFooterSchema.hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(fs, st.getPath) else Seq(st))
+    val summaries = Set("_common_metadata", "_metadata")
+    paths.flatMap { path =>
+      val (fs, p) = graft.Scratch.fs(spark, path)
+      try leaves(fs, p) catch { case _: java.io.FileNotFoundException => Nil }
+    }.filterNot(st => summaries(st.getPath.getName))
+      .minByOption(_.getPath.toString)
+  }
+
   // --- meta ------------------------------------------------------------------
 
   /** Does `dir` hold a store? Existence probe of its meta only
@@ -82,8 +123,8 @@ object StoreKernel {
     * [[readPromotedMeta]]). */
   def readMeta[M <: Product : TypeTag](spark: SparkSession, dir: String,
       tag: String): Option[M] =
-    readPromotedMeta(spark, s"$dir/meta", tag)(spark.read
-      .parquet(s"$dir/meta").as[M](Encoders.product[M]).head())
+    readPromotedMeta(spark, s"$dir/meta", tag)(readStore(spark,
+      s"$dir/meta").as[M](Encoders.product[M]).head())
 
   /** Read a tiny promoted-meta table with a BOUNDED retry over the
     * promote's two-rename window: a read landing between "live renamed
@@ -304,7 +345,7 @@ object StoreKernel {
       val n = s.getPath.getName
       s.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
-    if (!hasData) None else Some(spark.read.parquet(root))
+    if (!hasData) None else Some(readStore(spark, root))
   }
 
   /** (rows, valid rows, xor of valid rowfps) of the sidecar — the fold
@@ -357,31 +398,32 @@ object StoreKernel {
   }
 
   /** Drop EVERY tombstoned id still in `s`'s corpus — a delete batch's
-    * and any crashed predecessor's. A delete passes the corpus frame it
-    * read as `deleting` and gets the pending row count back;
-    * [[ensure]]'s crashed-delete heal passes None and probes a fresh
-    * read for emptiness. The rewrite holds the CORPUS-DIR writer lease,
-    * which the streaming sinks hold around their corpus appends, so the
-    * swap never discards a file an in-flight append just landed (a
-    * delete holds index → corpus; the sinks never hold both). A heal
-    * can wait out the bounded lease window and fail LOUDLY to a reader
-    * — acceptable for a state only a crashed writer leaves; the retry
-    * heals. Inside the lease the store lease is RE-verified (a takeover
-    * makes this writer stale) and the pending set RE-probed (a racing
-    * delete or replay may have removed the ids — no O(corpus) no-op
-    * swap that churns every token). */
+    * and any crashed predecessor's — probing the `corpus` frame the
+    * caller read. A delete gets the pending row count back;
+    * [[ensure]]'s crashed-delete `heal` only probes for emptiness (1
+    * when rows were pending, else 0). The rewrite holds the CORPUS-DIR
+    * writer lease, which the streaming sinks hold around their corpus
+    * appends, so the swap never discards a file an in-flight append
+    * just landed (a delete holds index → corpus; the sinks never hold
+    * both). A heal can wait out the bounded lease window and fail
+    * LOUDLY to a reader — acceptable for a state only a crashed writer
+    * leaves; the retry heals. Inside the lease the store lease is
+    * RE-verified (a takeover makes this writer stale) and the pending
+    * set RE-probed on a fresh read (a racing delete or replay may have
+    * removed the ids — no O(corpus) no-op swap that churns every
+    * token). */
   def dropTombstoned(spark: SparkSession, s: Store[_ <: StoreMeta],
-      deleting: Option[DataFrame]): Long =
+      corpus: DataFrame, heal: Boolean): Long =
     tombstoneFrame(spark, s.dir) match {
       case None => 0L
       case Some(t) =>
-        val heal = deleting.isEmpty
         val tids = t.select(col(s.key)).distinct()
-        def pending(corpus: DataFrame): DataFrame =
-          corpus.join(tids.hint("broadcast"), Seq(s.key), "left_semi")
-        val pendingN = deleting.fold(
-          if (pending(readTable(spark, s.corpus)).isEmpty) 0L else 1L)(
-          pending(_).count())
+        def pending(c: DataFrame): DataFrame =
+          c.join(tids.hint("broadcast"), Seq(s.key), "left_semi")
+        val pendingN =
+          if (!heal) pending(corpus).count()
+          else if (pending(corpus).isEmpty) 0L
+          else 1L
         if (pendingN > 0) {
           if (heal) System.err.println(s"[${s.tag}] completing a crashed " +
             s"delete's corpus rewrite at ${s.corpusDir}")
@@ -440,7 +482,10 @@ object StoreKernel {
     *  2. else read meta (absent → build) and heal FIRST: finish a
     *     crashed delete's corpus rewrite ([[dropTombstoned]]) before
     *     any validation or rebuild reads the corpus — the only
-    *     direction that can never resurrect deleted rows;
+    *     direction that can never resurrect deleted rows. The heal
+    *     probes the same corpus frame the fingerprint scans; the
+    *     corpus is read again only when the heal found rows to drop
+    *     (then it, or a racing delete, rewrote the corpus);
     *  3. `identity` scans the corpus for (n, fp): current when `fastOk`
     *     holds, the corpus reads meta MINUS the valid tombstones and
     *     `intact` (the store's probe of what the fingerprint cannot
@@ -461,8 +506,11 @@ object StoreKernel {
             case Some(m) =>
               val (tombRows, tombN, tombXor) =
                 tombAggregates(spark, s.dir, s.valid)
-              if (tombRows > 0) dropTombstoned(spark, s, deleting = None)
-              val (n, fp) = identity(readTable(spark, s.corpus))
+              val corpus = readTable(spark, s.corpus)
+              val healed = tombRows > 0 &&
+                dropTombstoned(spark, s, corpus, heal = true) > 0
+              val (n, fp) = identity(
+                if (healed) readTable(spark, s.corpus) else corpus)
               if (fastOk(m, tombN) && m.n - tombN == n &&
                   (m.fp ^ tombXor) == fp && intact(m, tombN)) {
                 // validation scans only READ — but the heal above may

@@ -362,13 +362,13 @@ object StreamOps {
                 if (shBefore.isEmpty)
                   IngestCommit.readFiles(spark, shDir, Nil,
                     IngestCommit.shSchema(false))
-                else spark.read.parquet(
+                else StoreKernel.readStore(spark,
                   graft.sources.Generations.resolve(spark, shDir))
               val bandsFull =
                 if (bandsBefore.isEmpty)
                   IngestCommit.readFiles(spark, bandsDir, Nil,
                     IngestCommit.bandsSchema)
-                else spark.read.parquet(
+                else StoreKernel.readStore(spark,
                   graft.sources.Generations.resolve(spark, bandsDir))
               (shFull.join(committed, Seq("doc_id"), "left_semi"),
                bandsFull.join(committed, Seq("doc_id"), "left_semi"))

@@ -1,0 +1,37 @@
+package org.apache.spark.sql.execution.datasources.parquet
+
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.HadoopFSUtils
+
+/** Spark's parquet schema inference for one known file, run on the
+  * driver. Inference through `spark.read.parquet` reads the same footer
+  * inside a one-task Spark job; here the footer is read directly and
+  * converted by Spark's own `ParquetFileFormat.readSchema`, which is
+  * package-private — hence this object in Spark's package (the pattern
+  * of [[org.apache.spark.sql.graftbridge.Bridge]]). Nothing of Spark's
+  * conversion is re-implemented. */
+object GraftFooterSchema {
+
+  /** Does Spark's file listing skip a file or directory of this name
+    * (`_`/`.`-prefixed names other than partition dirs and parquet
+    * summary files, `._COPYING_` uploads)? */
+  def hidden(name: String): Boolean =
+    HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The schema Spark's inference derives from `file`'s footer: the
+    * Spark schema the writer stored in the footer's key-value metadata,
+    * else the converted parquet schema. Only the footer is read (row
+    * groups skipped). */
+  def read(spark: SparkSession, file: FileStatus): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchema(Seq(new Footer(file.getPath, footer)), spark)
+  }
+}

@@ -8,6 +8,22 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   /** Smallest scale factor — correctness fixtures, not perf. */
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs launched while `body` runs — the crisp form of "this
+    * path ran no cluster work". onJobStart is posted async, so a short
+    * grace wait makes a would-be failure reliably visible. */
+  protected def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(500) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 }
 
 object SparkSpec {

@@ -458,19 +458,6 @@ class DeletionSpec extends SparkSpec {
     assert(info.n == 500 - kills.size)
   }
 
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
-
   test("lexical crash window (tombstones + negative partials landed, " +
     "corpus rewrite refused by a held corpus-dir lease): ensure " +
     "completes the rewrite and serves WITHOUT rebuild, bit-identical " +

@@ -488,22 +488,6 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs launched while `body` runs — the crisp form of "the
-    * token path ran no cluster work". onJobStart is posted async, so
-    * a short grace wait makes a would-be failure reliably visible. */
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
-
   test("validation token: an unchanged corpus+index serves with ZERO " +
     "Spark jobs; a missing or corrupt token falls back to the full " +
     "validation and restores itself") {
@@ -580,6 +564,45 @@ class IndexStoreSpec extends SparkSpec {
       }
       assert(jobs > 0 || threw,
         "a forged same-length same-mtime meta rewrite was served zero-job")
+    } finally {
+      deleteDir(idxDir)
+      deleteDir(corpus)
+    }
+  }
+
+  test("serve job counts on a warm store: the token-path ensure runs 0 " +
+    "jobs, building a query frame runs exactly 1 (the corpus schema " +
+    "read) — every store table is planned without a job") {
+    // pins the planning cost of a serve: any store-table read that
+    // falls back to Spark's schema inference (one job per table) or a
+    // second corpus read shows up here as an extra job
+    val all = graft.sources.Tables.load(spark, sfDir, "embeddings")
+    val corpus = writeCorpus(all.filter(col("vec_id") < 300))
+    val idxDir = IndexStore.dirFor(spark, corpus)
+    try {
+      var info = IndexStore.ensure(spark, corpus)
+      assert(info.builtNow)
+      assert(jobsDuring { info = IndexStore.ensure(spark, corpus) } === 0)
+      assert(jobsDuring { IndexStore.queryIvfPq(spark, corpus, info) } === 1)
+      assert(jobsDuring { IndexStore.queryIvfPqRes(spark, corpus, info) } === 1)
+      // the same with a delta buffer and a tombstone sidecar to read
+      val batch = all.filter(col("vec_id") >= 300 && col("vec_id") < 320)
+      IndexStore.appendBatch(spark, idxDir, batch)
+      batch.write.mode("append").parquet(s"$corpus/embeddings.parquet")
+      IndexStore.deleteBatch(spark, corpus,
+        all.filter(col("vec_id") === 17).select(col("vec_id")))
+      assert(!IndexStore.ensure(spark, corpus).builtNow)
+      assert(IndexStore.deltaFrame(spark, idxDir, "codes").nonEmpty &&
+        graft.sources.StoreKernel.tombstoneFrame(spark, idxDir).nonEmpty)
+      // a policied ensure under its tombstone threshold takes the
+      // pending count from the token instead of aggregating the sidecar
+      val policy = Some(IndexStore.RebuildPolicy(
+        driftAt = Double.PositiveInfinity, foldAtTombstones = 1000L))
+      assert(jobsDuring {
+        info = IndexStore.ensure(spark, corpus, policy) } === 0)
+      assert(!info.builtNow)
+      assert(jobsDuring { IndexStore.queryIvfPq(spark, corpus, info) } === 1)
+      assert(jobsDuring { IndexStore.queryIvfPqRes(spark, corpus, info) } === 1)
     } finally {
       deleteDir(idxDir)
       deleteDir(corpus)

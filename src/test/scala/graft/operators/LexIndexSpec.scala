@@ -27,19 +27,6 @@ class LexIndexSpec extends SparkSpec {
     dir
   }
 
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
-
   test("q74 (persisted inverted index) is bit-identical to q72 " +
     "(ad-hoc scan)") {
     deleteDir(LexIndex.dirFor(spark, sfDir)) // force a fresh build

@@ -1,12 +1,15 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
-import graft.sources.StoreKernel
+import graft.sources.{Generations, StoreKernel, Tables}
 
 /** The persisted-store kernel ([[StoreKernel]]) under both indexed
-  * stores: its meta read's failure classes and the on-disk token
-  * format (byte goldens, so a store stamped by an earlier build keeps
-  * its zero-job fast path). */
+  * stores: its store-table reader, its meta read's failure classes and
+  * the on-disk token format (byte goldens, so a store stamped by an
+  * earlier build keeps its zero-job fast path). */
 class StoreKernelSpec extends SparkSpec {
 
   private def tempDir(prefix: String): String =
@@ -67,5 +70,101 @@ class StoreKernelSpec extends SparkSpec {
       "vtoken"), "cd34|1|470|4611686018427387904|32|30|-77"
       .getBytes("UTF-8"))
     assert(StoreKernel.readToken(spark, lexStore).isEmpty)
+  }
+
+  private def deleteDir(path: String): Unit = {
+    val (fs, p) = graft.Scratch.fs(spark, path)
+    if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("readStore plans every artifact of the ANN, lexical and veclists " +
+    "stores with zero jobs, with the schema and rows of the plain read") {
+    val corpus = tempDir("kernel_read")
+    val all = Tables.load(spark, sfDir, "embeddings")
+    all.filter(col("vec_id") < 450).write
+      .parquet(s"$corpus/embeddings.parquet")
+    Tables.load(spark, sfDir, "documents")
+      .write.parquet(s"$corpus/documents.parquet")
+    val ann = IndexStore.dirFor(spark, corpus)
+    val lex = LexIndex.dirFor(spark, corpus)
+    val vl = IngestScreen.listsDir(spark, corpus)
+    try {
+      val info = IndexStore.ensure(spark, corpus)
+      IngestScreen.ensureLists(spark, corpus, info)
+      val batch = all.filter(col("vec_id") >= 450 && col("vec_id") < 470)
+      IndexStore.appendBatch(spark, ann, batch)
+      IndexStore.deleteBatch(spark, corpus,
+        all.filter(col("vec_id") % 17 === 3).select(col("vec_id")))
+      LexIndex.ensure(spark, corpus)
+      LexIndex.deleteDocs(spark, corpus, Tables.load(spark, corpus,
+        "documents").filter(col("doc_id") % 13 === 5).select(col("doc_id")))
+      def delta(t: String): Seq[String] =
+        IndexStore.deltaFileNames(spark, ann, t).sorted
+          .map(n => s"${IndexStore.deltaDirOf(ann, t)}/$n")
+      val kinds: Seq[(String, Seq[String])] = Seq(
+        "ann meta" -> Seq(s"$ann/meta"),
+        "centroids" -> Seq(s"$ann/centroids"),
+        "codebook" -> Seq(s"$ann/codebook"),
+        "rcodebook" -> Seq(s"$ann/rcodebook"),
+        "codes" -> Seq(Generations.resolve(spark, s"$ann/codes")),
+        "rcodes" -> Seq(Generations.resolve(spark, s"$ann/rcodes")),
+        "codes delta" -> delta("codes"),
+        "rcodes delta" -> delta("rcodes"),
+        "ann tombstones" -> Seq(StoreKernel.tombDirOf(ann)),
+        "lex meta" -> Seq(s"$lex/meta"),
+        "tf" -> Seq(Generations.resolve(spark, s"$lex/tf")),
+        "df" -> Seq(Generations.resolve(spark, s"$lex/df")),
+        "stats" -> Seq(Generations.resolve(spark, s"$lex/stats")),
+        "lex tombstones" -> Seq(StoreKernel.tombDirOf(lex)),
+        "veclists meta" -> Seq(s"$vl/meta"),
+        "lists" -> Seq(Generations.resolve(spark, s"$vl/lists")))
+      assert(delta("codes").nonEmpty && delta("rcodes").nonEmpty)
+      var frames: Seq[DataFrame] = Nil
+      assert(jobsDuring {
+        frames = kinds.map { case (_, paths) =>
+          StoreKernel.readStore(spark, paths: _*) }
+      } === 0, "building a store-table frame ran a Spark job")
+      kinds.zip(frames).foreach { case ((kind, paths), got) =>
+        val want = spark.read.parquet(paths: _*)
+        // the whole schema, so the inferred type of a partition column
+        // (`cell`, `pfx`) is compared too
+        assert(got.schema === want.schema, s"$kind schema")
+        val rows = sortedRows(got)
+        assert(rows.nonEmpty && rows === sortedRows(want), s"$kind rows")
+      }
+    } finally {
+      Seq(ann, lex, vl, corpus).foreach(deleteDir)
+    }
+  }
+
+  test("readStore fails like the plain read where there is no data " +
+    "file: an absent path, a _SUCCESS-only dir, hidden debris only") {
+    val root = tempDir("kernel_read_empty")
+    val marker = s"$root/marker"
+    val debris = s"$root/debris"
+    val (fs, _) = graft.Scratch.fs(spark, root)
+    fs.create(new org.apache.hadoop.fs.Path(s"$marker/_SUCCESS")).close()
+    fs.create(new org.apache.hadoop.fs.Path(s"$debris/_SUCCESS")).close()
+    // a crashed rewrite's hidden shadow holding a READABLE parquet file
+    // (copied bare, without checksum siblings, so it sorts first): the
+    // reader must skip it exactly as Spark's listing does
+    spark.range(3).coalesce(1).write.parquet(s"$root/src")
+    val part = graft.Scratch.walkFiles(fs, new org.apache.hadoop.fs.Path(
+      s"$root/src")).map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    val shadow = java.nio.file.Paths.get(debris, ".gen_tmp_1")
+    java.nio.file.Files.createDirectories(shadow)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(part.toUri),
+      shadow.resolve("part-0.parquet"))
+    try {
+      Seq(s"$root/absent", marker, debris).foreach { p =>
+        val want = intercept[Exception](spark.read.parquet(p))
+        val got = intercept[Exception](StoreKernel.readStore(spark, p))
+        assert(got.getClass === want.getClass, p)
+        assert(got.getMessage === want.getMessage, p)
+      }
+    } finally deleteDir(root)
   }
 }
