@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{StoreKernel, StoreMeta, Tables}
+import graft.sources.{Maintenance, StoreKernel, StoreMeta, Tables}
 
 /** [[IndexStore.appendBatch]]'s refusal of a batch that re-adds a
   * TOMBSTONED (deleted, not yet folded) vec_id. Its prescribed
@@ -430,11 +430,10 @@ object IndexStore {
     rcbook.coalesce(1).write.parquet(s"$shadow/rcodebook")
     // one file per cell partition: the probed-cell read path opens
     // exactly nprobe files per query batch instead of every task's
-    // per-cell slivers
-    codes.repartition(col("cell")).write.partitionBy("cell")
-      .parquet(s"$shadow/codes")
-    rcodes.repartition(col("cell")).write.partitionBy("cell")
-      .parquet(s"$shadow/rcodes")
+    // per-cell slivers. An n=0 build writes no cell file — an intact
+    // empty table (see tablesIntact), so the zero-row answer is moot
+    Maintenance.writeCells(spark, codes, s"$shadow/codes", nl)
+    Maintenance.writeCells(spark, rcodes, s"$shadow/rcodes", nl)
     val m = AnnIndexMeta(formatVersion, n, fp, nl, baseline, 0L,
       Similarity.pqSubspaces, Similarity.pqCodes,
       Similarity.lloydIters, Similarity.pqLloydIters,
@@ -548,17 +547,13 @@ object IndexStore {
           if (p.compactAtFilesPerCell == Int.MaxValue) Nil
           else Seq("codes", "rcodes").flatMap { t =>
             // current generation only — retired copies are not layout
-            val cur = graft.sources.Generations.resolve(spark, s"$dir/$t")
-            val (fs, _) = graft.Scratch.fs(spark, cur)
-            val st = fs.globStatus(
-              new org.apache.hadoop.fs.Path(s"$cur/cell=*/*.parquet"))
+            val st = Maintenance.cellFiles(spark, s"$dir/$t")
             // the delta buffer counts against the same threshold:
             // every reader scans ALL delta files unpruned, so an
             // unbounded delta is the new form of the sliver problem
             // the policy exists for
             val deltaN = deltaFileNames(spark, dir, t).size
-            (if (st == null) Nil
-             else st.groupBy(_.getPath.getParent).values.map(_.length)) ++
+            st.groupBy(_.getPath.getParent).values.map(_.length) ++
               (if (deltaN > 0) Seq(deltaN) else Nil)
           }
         val pendingTombs =
@@ -569,13 +564,17 @@ object IndexStore {
       if (triggered(tombHint)._1)
         graft.sources.WriterLease.withWrite(spark, dir, "policy-compact") {
           // tombstone-cadence axis: exists() probe first, so the common
-          // tombstone-free store never runs the sidecar agg
-          val (go, pendingTombs) = triggered(
-            if (StoreKernel.tombstoneFrame(spark, dir).isEmpty) 0L
-            else StoreKernel.tombAggregates(spark, dir, col("valid"))._2)
+          // tombstone-free store never runs the sidecar agg. The
+          // aggregates are handed on to the compaction's meta fold:
+          // deleteBatch takes this same lease, so the sidecar cannot
+          // change in between
+          val tombs =
+            if (StoreKernel.tombstoneFrame(spark, dir).isEmpty) (0L, 0L, 0L)
+            else StoreKernel.tombAggregates(spark, dir, col("valid"))
+          val (go, pendingTombs) = triggered(tombs._2)
           if (go) {
             val (before, after) =
-              graft.sources.Maintenance.compactAnnIndex(spark, dir)
+              Maintenance.compactAnnIndex(spark, dir, Some(tombs))
             System.err.println(s"[annidx] policy compaction at $dir: " +
               s"$before part files -> $after" +
               (if (pendingTombs >= p.foldAtTombstones)
@@ -1221,9 +1220,11 @@ object IndexStore {
     * and fails the fingerprint leg — and neither can resurrect rows,
     * because the corpus rewrite happened at deleteBatch time. */
   private[graft] def foldTombstonesIntoMeta(spark: SparkSession,
-      dir: String): Unit = {
-    val (rows, validN, xor) =
-      StoreKernel.tombAggregates(spark, dir, col("valid"))
+      dir: String, tombs: Option[(Long, Long, Long)] = None): Unit = {
+    // `tombs`: the sidecar's (rows, valid rows, xor) when the caller
+    // aggregated it under the lease it still holds
+    val (rows, validN, xor) = tombs.getOrElse(
+      StoreKernel.tombAggregates(spark, dir, col("valid")))
     if (rows == 0) return
     graft.sources.WriterLease.withWrite(spark, dir, "tombfold") {
       val m = meta(spark, dir).getOrElse(throw new IllegalStateException(

@@ -166,13 +166,9 @@ object IngestScreen {
           !fs.exists(pending) =>
         if (compactAtFilesPerCell > 0 && vm.n > 0) {
           // current generation only (see compactVecLists)
-          val listsCur = graft.sources.Generations
-            .resolve(spark, s"$dir/lists")
-          val st = fs.globStatus(
-            new org.apache.hadoop.fs.Path(s"$listsCur/cell=*/*.parquet"))
-          val worst =
-            if (st == null || st.isEmpty) 0
-            else st.groupBy(_.getPath.getParent).values.map(_.length).max
+          val worst = graft.sources.Maintenance.cellFiles(spark, s"$dir/lists")
+            .groupBy(_.getPath.getParent).values.map(_.length)
+            .maxOption.getOrElse(0)
           if (worst >= compactAtFilesPerCell) {
             val (before, after) =
               graft.sources.Maintenance.compactVecLists(spark, dir)

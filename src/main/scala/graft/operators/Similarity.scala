@@ -527,7 +527,7 @@ object Similarity {
     * are cancelled and the future observed before the rethrow, so a
     * failed build never leaves orphan jobs racing the cluster (or a
     * silently dropped background failure). */
-  private[operators] final class Overlap[T](
+  private[graft] final class Overlap[T](
       sc: org.apache.spark.SparkContext, group: String,
       fut: scala.concurrent.Future[T]) extends (() => T) {
     def apply(): T = scala.concurrent.Await.result(fut,
@@ -548,7 +548,7 @@ object Similarity {
       }
   }
 
-  private[operators] def overlapped[T](body: => T): Overlap[T] = {
+  private[graft] def overlapped[T](body: => T): Overlap[T] = {
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     val group = s"graft-overlap-${java.util.UUID.randomUUID().toString.take(8)}"
     val fut = scala.concurrent.Future {

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Table maintenance: small-file compaction. Long-running append
   * pipelines accumulate part files until scan planning and footer reads
@@ -229,7 +230,6 @@ object Maintenance {
   def compactIngestIndexes(spark: SparkSession, corpusDir: String)
       : (Long, Long) = WriterLease.withWrite(spark, corpusDir,
         "idxcompact") {
-    import org.apache.spark.sql.DataFrame
     import graft.operators.Dedup
     val corpus = spark.read
       .parquet(Generations.resolve(spark, corpusDir))
@@ -323,44 +323,100 @@ object Maintenance {
     (shDropped, bandsDropped)
   }
 
+  /** Current-generation cell files (`cell=<v>/<part>.parquet`) of the
+    * cell-partitioned table at `dir` (retired generations idle out
+    * their TTL); empty when the table is absent. */
+  private[graft] def cellFiles(spark: SparkSession, dir: String)
+      : Seq[FileStatus] = {
+    val cur = Generations.resolve(spark, dir)
+    val (fs, _) = graft.Scratch.fs(spark, cur)
+    Option(fs.globStatus(new Path(cur + "/cell=*/*.parquet")))
+      .fold(Seq.empty[FileStatus])(_.toSeq)
+  }
+
+  /** Write `df` as a `cell`-partitioned table at `out` with ONE file per
+    * cell (the codes and lists layout the probed-cell read path opens
+    * nprobe files of), spread over min(`cells`, defaultParallelism)
+    * tasks: an explicit-count `repartition(n, cell)` still sends each
+    * cell's rows to one task, and AQE never coalesces an explicit-count
+    * exchange — a bare `repartition(cell)` coalesces to ONE task that
+    * writes every cell file in turn. Returns whether any cell file
+    * landed: a partitioned write of zero rows emits no schema-bearing
+    * file, and the listing says so without the count job a
+    * `df.isEmpty` guard costs. The caller decides what a file-less `out`
+    * means (a compaction must not commit it; an n=0 build's empty table
+    * is legitimate). */
+  private[graft] def writeCells(spark: SparkSession, df: DataFrame,
+      out: String, cells: Int): Boolean = {
+    val n = math.max(1,
+      math.min(cells, spark.sparkContext.defaultParallelism))
+    df.repartition(n, col("cell")).write.mode(SaveMode.Overwrite)
+      .partitionBy("cell").parquet(out)
+    val (fs, _) = graft.Scratch.fs(spark, out)
+    Option(fs.globStatus(new Path(out + "/cell=*/*.parquet")))
+      .exists(_.nonEmpty)
+  }
+
+  private def distinctCells(files: Seq[FileStatus]): Int =
+    files.map(_.getPath.getParent).distinct.size
+
+  /** Delete a shadow that must not commit (a file-less rewrite). */
+  private def dropShadow(spark: SparkSession, shadow: String): Unit = {
+    val (fs, sp) = graft.Scratch.fs(spark, shadow)
+    fs.delete(sp, true)
+  }
+
   /** Compact the persisted ANN index's cell-partitioned codes tables
-    * ([[graft.operators.IndexStore]] at `indexDir`). Every
-    * `appendBatch` lands new part files into each touched `cell=`
-    * partition; hundreds of batches accumulate slivers exactly where
-    * the DPP-pruned q69/q70 read path opens files — the classic
-    * long-lived-index degradation. This rewrites `codes` and `rcodes`
-    * back to ONE file per cell (the build-time layout: `repartition
-    * (cell)` + `partitionBy(cell)`) through a shadow directory +
-    * recoverable swap per table.
+    * ([[graft.operators.IndexStore]] at `indexDir`): fold each table's
+    * delta buffer (one file per append batch) and any per-cell slivers
+    * back into ONE file per cell (the build-time layout), dropping the
+    * tombstoned ids on the way, then fold the tombstone sidecar into
+    * meta. Each table is rewritten into a shadow and committed as its
+    * next retained generation ([[Generations.commit]]), so in-flight
+    * scans keep the files they planned.
     *
-    * Content is untouched — rows, schema and `cell=` directory names
-    * are exactly what build/append wrote — so q69/q70 results are
-    * bit-identical pre/post and `meta` (fingerprint, counters) stays
-    * valid without modification.
+    * Content is untouched apart from the tombstoned rows — rows, schema
+    * and `cell=` directory names are exactly what build/append wrote —
+    * so q69/q70 results are bit-identical pre/post.
     *
-    * Concurrency contract: in-JVM this SERIALIZES on IndexStore's lock
-    * (the one ensure/appendBatch use), so a same-process append can
-    * never land part files into a directory mid-swap. Cross-JVM the
-    * quiesced-maintenance contract applies as everywhere here — an
-    * append that raced the swap from another process would be deleted
-    * with the swapped-away dir, a loss `meta`'s fingerprint cannot see
-    * (the appended rows ARE in meta and the corpus). A crash between
-    * the two table swaps leaves one table compacted and one not (both
-    * complete and correct); a crash INSIDE a swap can leave a codes
-    * dir missing entirely — ensure's integrity probe detects exactly
-    * that (missing/inconsistent codes tables) and rebuilds, so the
-    * index self-heals instead of serving FileNotFoundException.
+    * Write-then-commit: both shadows are written (side by side — the
+    * `rcodes` one on a second driver thread, [[graft.operators
+    * .Similarity.overlapped]], under its own job group, so a failed
+    * `codes` write cancels it) before either commits. A failed or
+    * zero-row write commits neither table; the commits then run on the
+    * caller thread in a fixed order — fence, `codes`; fence, `rcodes`;
+    * the meta fold last. The helper thread only reads and writes its
+    * shadow: it never enters [[WriterLease.withWrite]] or the store
+    * monitor, which are reentrant per THREAD only (the helper would
+    * wait on its own caller), and [[WriterLease.verify]] fences only
+    * the lease-holding thread.
+    *
+    * Concurrency contract: the store's writer lease, then its per-store
+    * monitor ([[StoreKernel.monitorFor]]) — the order every public
+    * mutator takes — so same-store readers and appends serialize
+    * against the rewrite and other stores' maintenance proceeds. A
+    * crash between the two commits leaves `codes` folded and `rcodes`
+    * not (both complete and readable); the integrity probe's count leg
+    * sees the difference when tombstones were dropped and the next
+    * ensure rebuilds, so the index self-heals instead of serving a torn
+    * pair. A crash between the commits and the meta fold converges the
+    * same way (see [[graft.operators.IndexStore.foldTombstonesIntoMeta]]).
     *
     * @return (part files before, part files after) across both tables */
   def compactAnnIndex(spark: SparkSession, indexDir: String): (Int, Int) =
+    compactAnnIndex(spark, indexDir, None)
+
+  /** [[compactAnnIndex]] whose meta fold takes `tombs`, the sidecar's
+    * (rows, valid rows, xor), from a caller that aggregated it under
+    * the writer lease it still holds (deletes take the same lease, so
+    * the sidecar cannot change in between); None aggregates it here. */
+  private[graft] def compactAnnIndex(spark: SparkSession, indexDir: String,
+      tombs: Option[(Long, Long, Long)]): (Int, Int) =
     // lease OUTSIDE the monitor: a foreign holder's bounded wait must
-    // never block this JVM's readers on the IndexStore lock
+    // never block this JVM's readers on the store monitor
     WriterLease.withWrite(spark, indexDir, "compact") {
-      // per-store monitor (StoreKernel.monitorFor): same-store readers
-      // and appends serialize as before; other stores' maintenance
-      // proceeds concurrently (the sharded ingest's fold cadence)
       StoreKernel.monitorFor(indexDir).synchronized {
-      import org.apache.spark.sql.functions.col
+      import graft.operators.{IndexStore, Similarity}
       // deletion fold rides the same rewrite: tombstoned ids (ghost
       // rows excluded by every reader since their deleteBatch) are
       // dropped from both tables here, then meta folds the sidecar's
@@ -368,92 +424,90 @@ object Maintenance {
       // the deletion lifecycle (see IndexStore's deletion section)
       val dropIds = StoreKernel.tombstoneFrame(spark, indexDir)
         .map(_.select(col("vec_id")).distinct())
-      // set when a table's physical fold was skipped (all rows
-      // tombstoned): the meta fold below must then NOT run — clearing
-      // the sidecar while the ghost rows are still on disk would let
-      // every reader serve them
-      var skippedFold = false
-      def one(name: String): (Int, Int) = {
+      final class Table(val name: String) {
         val dir = s"$indexDir/$name"
-        // delta files count as part files here: folding them away IS
-        // part of this compaction's contract (see IndexStore's delta
-        // buffer doc — appends land one delta file per batch instead
-        // of per-cell slivers, and the fold restores the cell layout)
-        def files(deltaN: Int): Int = {
-          // current generation only (retired gens idle out their TTL);
-          // globStatus returns NULL (not empty) when the parent path is
-          // missing — e.g. compaction pointed at a never-built indexDir;
-          // let the parquet read below fail with its meaningful error
-          val cur = Generations.resolve(spark, dir)
-          val (fs, _) = graft.Scratch.fs(spark, cur)
-          val st = fs.globStatus(new Path(cur + "/cell=*/*.parquet"))
-          (if (st == null) 0 else st.length) + deltaN
+        // ONE delta listing (reaping TTL-expired absorbed files — this
+        // path holds the lease) serves the before-count and the fold
+        // sentinel; delta files count as part files, folding them away
+        // IS this compaction's contract (see IndexStore's delta doc)
+        val absorbed = IndexStore.absorbedDelta(spark, indexDir, name)
+        val deltaNames =
+          IndexStore.deltaFileNames(spark, indexDir, name, reap = true)
+        val base = cellFiles(spark, dir)
+        def before: Int = base.size + deltaNames.size
+        /** This table minus the tombstoned ids, written to a fresh
+          * shadow (fold sentinel stamped in): Some(shadow), or None when
+          * no row survives — the shadow is then deleted. */
+        def rewrite(): Option[String] = {
+          val df0 = IndexStore.withDeltaOf(spark, indexDir, name)(identity)
+          val df = dropIds.fold(df0)(t =>
+            df0.join(t.hint("broadcast"), Seq("vec_id"), "left_anti"))
+          val shadow = Generations.shadowFor(spark, dir)
+          if (!writeCells(spark, df, shadow, distinctCells(base))) {
+            dropShadow(spark, shadow)
+            None
+          } else {
+            // fold sentinel INTO the shadow, BEFORE the commit: once the
+            // shadow is the live generation its base owns the delta
+            // rows, and the sentinel excludes the absorbed files from
+            // every delta read until their TTL reap (see IndexStore's
+            // delta doc). Carried forward: the PREVIOUS generation's
+            // absorbed entries whose files are still on disk (not yet
+            // reaped) must stay excluded under the new generation too;
+            // fully-reaped entries are pruned here. A crash at any point
+            // leaves either the old generation live (this sentinel
+            // unborn — delta still served) or the new one (delta
+            // excluded) — never doubled rows.
+            val (dfs, ddp) = graft.Scratch.fs(spark,
+              IndexStore.deltaDirOf(indexDir, name))
+            val now = System.currentTimeMillis()
+            val carried =
+              absorbed.filter { case (n, _) =>
+                dfs.exists(new Path(ddp, n)) } ++
+              deltaNames.map(_ -> now).toMap
+            if (carried.nonEmpty) IndexStore.stampFold(spark, shadow, carried)
+            Some(shadow)
+          }
         }
-        // ONE delta listing serves the before-count, the fold
-        // sentinel, and (as zero) the after-count — the lock held
-        // in-JVM quiesces the file set, and each deltaFileNames call
-        // is a sentinel probe + listStatus round-trip worth not
-        // repeating on object stores
-        val absorbed = graft.operators.IndexStore
-          .absorbedDelta(spark, indexDir, name)
-        val deltaNames = graft.operators.IndexStore
-          .deltaFileNames(spark, indexDir, name, reap = true)
-        val before = files(deltaNames.size)
-        val df0 = graft.operators.IndexStore
-          .withDeltaOf(spark, indexDir, name)(identity)
-        val df = dropIds.fold(df0)(t =>
-          df0.join(t.hint("broadcast"), Seq("vec_id"), "left_anti"))
-        // zero-row guard (the sibling compactions' standing rule,
-        // review r17): a partitionBy write of ZERO rows emits no
-        // schema-bearing part files, and committing that shell as the
-        // live generation would make every later codes read throw.
-        // Reachable when tombstones cover every indexed row while an
-        // invalid-norm row keeps the corpus-table rewrite legal — skip
-        // the fold; the sidecar's anti-join keeps serving correct and
-        // the next rebuild converges physically.
-        if (df.isEmpty) {
-          System.err.println(s"[annidx] fold skipped at $dir: every " +
+      }
+      val codes = new Table("codes")
+      val rcodes = new Table("rcodes")
+      val before = codes.before + rcodes.before
+      val rcodesT = Similarity.overlapped(rcodes.rewrite())
+      val codesShadow = rcodesT.guarded(codes.rewrite())
+      val rcodesShadow = rcodesT()
+      (codesShadow, rcodesShadow) match {
+        case (Some(cs), Some(rs)) =>
+          // fence at each COMMIT point: a compactor stalled past the
+          // lease TTL and taken over must not commit pre-takeover
+          // shadows over the new owner's appends
+          WriterLease.verify(spark, indexDir)
+          Generations.commit(spark, codes.dir, cs)
+          WriterLease.verify(spark, indexDir)
+          Generations.commit(spark, rcodes.dir, rs)
+          // AFTER both commits: meta folds the sidecar and the sidecar
+          // clears
+          if (dropIds.nonEmpty)
+            IndexStore.foldTombstonesIntoMeta(spark, indexDir, tombs)
+          (before,
+            Seq(codes, rcodes).map(t => cellFiles(spark, t.dir).size).sum)
+        case (cs, rs) =>
+          // zero-row guard (the sibling compactions' standing rule): a
+          // file-less shadow committed as the live generation would make
+          // every later codes read throw. Reachable when tombstones
+          // cover every indexed row while an invalid-norm row keeps the
+          // corpus-table rewrite legal. Commit neither table and keep
+          // the sidecar (clearing it while the ghost rows are still on
+          // disk would let every reader serve them): the tombstone
+          // anti-join keeps serving exact and the next rebuild converges
+          // physically.
+          (cs ++ rs).foreach(dropShadow(spark, _))
+          System.err.println(s"[annidx] fold skipped at $indexDir: every " +
             "row is tombstoned — a zero-row rewrite would commit an " +
             "unreadable generation; the tombstone anti-join keeps " +
             "serving exact until a rebuild")
-          skippedFold = true
-          return (before, before)
-        }
-        val shadow = Generations.shadowFor(spark, dir)
-        df.repartition(col("cell")).write.mode(SaveMode.Overwrite)
-          .partitionBy("cell").parquet(shadow)
-        // fold sentinel INTO the shadow, BEFORE the commit: once the
-        // shadow is the live generation its base owns the delta rows,
-        // and the sentinel excludes the absorbed files from every
-        // delta read until their TTL reap (see IndexStore's delta
-        // doc). Carried forward: the PREVIOUS generation's absorbed
-        // entries whose files are still on disk (not yet reaped) must
-        // stay excluded under the new generation too; fully-reaped
-        // entries are pruned here. A crash at any point leaves either
-        // the old generation live (this sentinel unborn — delta still
-        // served) or the new one (delta excluded) — never doubled rows.
-        val (dfs, ddp) = graft.Scratch.fs(spark,
-          graft.operators.IndexStore.deltaDirOf(indexDir, name))
-        val now = System.currentTimeMillis()
-        val carried =
-          absorbed.filter { case (n, _) =>
-            dfs.exists(new Path(ddp, n)) } ++
-          deltaNames.map(_ -> now).toMap
-        if (carried.nonEmpty)
-          graft.operators.IndexStore.stampFold(spark, shadow, carried)
-        WriterLease.verify(spark, indexDir)
-        Generations.commit(spark, dir, shadow)
-        (before, files(0))
+          (before, before)
       }
-      val codes = one("codes")
-      val rcodes = one("rcodes")
-      // AFTER both swaps: meta folds the sidecar and the sidecar
-      // clears (crash windows converge by ensure-rebuild — see
-      // IndexStore.foldTombstonesIntoMeta). Never after a skipped
-      // physical fold (see skippedFold).
-      if (dropIds.nonEmpty && !skippedFold)
-        graft.operators.IndexStore.foldTombstonesIntoMeta(spark, indexDir)
-      (codes._1 + rcodes._1, codes._2 + rcodes._2)
       }
     }
 
@@ -524,46 +578,44 @@ object Maintenance {
     * ([[graft.operators.IngestScreen]]): every appendLists lands a
     * part-file sliver into each touched `cell=` partition — exactly
     * where the DPP-pruned screen read opens files. Content-preserving
-    * rewrite to one file per cell; the identity marker (fp/n vs the
-    * index meta) is untouched because no ROW moved. Same
-    * run-quiesced + IndexStore-lock contract as [[compactAnnIndex]].
-    * Returns (files before, files after) for the `lists` table. */
+    * rewrite to one file per cell ([[writeCells]]); the identity marker
+    * (fp/n vs the index meta) is untouched because no ROW moved. Same
+    * lease → monitor contract as [[compactAnnIndex]]. Returns (files
+    * before, files after) for the `lists` table. */
   def compactVecLists(spark: SparkSession, listsDir: String): (Int, Int) =
     WriterLease.withWrite(spark, listsDir, "compact") {
       // per-store monitor — see compactAnnIndex's note
       StoreKernel.monitorFor(listsDir).synchronized {
-      import org.apache.spark.sql.functions.col
       val dir = s"$listsDir/lists"
-      def files(): Int = {
-        val cur = Generations.resolve(spark, dir)
-        val (fs, _) = graft.Scratch.fs(spark, cur)
-        val st = fs.globStatus(new Path(cur + "/cell=*/*.parquet"))
-        if (st == null) 0 else st.length
-      }
-      val before = files()
+      val files = cellFiles(spark, dir)
+      val before = files.size
       // zero-FILE guard FIRST, before constructing the read (review
       // r17): rebuildLists at n=0 legitimately writes a marker-only
       // store with NO lists table, and an eager spark.read.parquet of
       // that path throws before any later guard could run — a public
       // maintenance entry must no-op on engine-written states, not
       // crash on them
-      if (before == 0) return (before, before)
-      val df = StoreKernel.readStore(spark, Generations.resolve(spark, dir))
-      // zero-row guard (same class as compact's totalFiles==0 skip and
-      // compactIngestIndexes' full.isEmpty branch): a partitionBy
-      // write of zero rows emits NO part files, and swapping that
-      // shell in would leave a footer-less dir every later read
-      // throws on. Unreachable from the ensureLists policy path (it
-      // only fires past a files-per-cell threshold), but this is a
-      // public maintenance entry callable on foreign-written layouts.
-      if (df.isEmpty) return (before, before)
-      val shadow = Generations.shadowFor(spark, dir)
-      df.repartition(col("cell")).write.mode(SaveMode.Overwrite)
-        .partitionBy("cell").parquet(shadow)
-      WriterLease.verify(spark, listsDir)
-      // retained-generation commit (reader snapshot isolation)
-      Generations.commit(spark, dir, shadow)
-      (before, files())
+      if (before == 0) (before, before)
+      else {
+        val df = StoreKernel.readStore(spark, Generations.resolve(spark, dir))
+        val shadow = Generations.shadowFor(spark, dir)
+        // zero-row guard (same class as compact's totalFiles==0 skip and
+        // compactIngestIndexes' full.isEmpty branch): a file-less
+        // shadow swapped in would leave a footer-less dir every later
+        // read throws on. Unreachable from the ensureLists policy path
+        // (it only fires past a files-per-cell threshold), but this is
+        // a public maintenance entry callable on foreign-written
+        // layouts.
+        if (!writeCells(spark, df, shadow, distinctCells(files))) {
+          dropShadow(spark, shadow)
+          (before, before)
+        } else {
+          WriterLease.verify(spark, listsDir)
+          // retained-generation commit (reader snapshot isolation)
+          Generations.commit(spark, dir, shadow)
+          (before, cellFiles(spark, dir).size)
+        }
+      }
       }
     }
 }

@@ -6,8 +6,12 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode,
   SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.functions._
+
+import graft.operators.Similarity
 
 /** A store meta row the validate-or-build lifecycle can check corpus
   * identity against: the indexable row count and xor fingerprint the
@@ -83,17 +87,18 @@ object StoreKernel {
     * holding only `_SUCCESS` or hidden debris) or an unreadable footer:
     * the plain read, which fails exactly as it always did. */
   def readStore(spark: SparkSession, paths: String*): DataFrame =
-    schemaFile(spark, paths).flatMap { f =>
+    dataFiles(spark, paths).headOption.flatMap { f =>
       try GraftFooterSchema.read(spark, f)
       catch { case NonFatal(_) => None }
     }.fold(spark.read.parquet(paths: _*))(
       spark.read.schema(_).parquet(paths: _*))
 
-  /** The data file Spark's parquet inference reads the schema of (its
-    * `ParquetUtils.splitFiles` choice over the file index's leaves;
-    * parquet summary files are not data files). */
-  private def schemaFile(spark: SparkSession,
-      paths: Seq[String]): Option[FileStatus] = {
+  /** The data files under `paths` by path: the leaves of Spark's file
+    * index (hidden names skipped; parquet summary files are not data
+    * files). The first is the file Spark's parquet inference reads the
+    * schema of (its `ParquetUtils.splitFiles` choice). */
+  private def dataFiles(spark: SparkSession,
+      paths: Seq[String]): Seq[FileStatus] = {
     def leaves(fs: FileSystem, p: Path): Seq[FileStatus] =
       fs.listStatus(p).toSeq
         .filterNot(st => GraftFooterSchema.hidden(st.getPath.getName))
@@ -103,7 +108,7 @@ object StoreKernel {
       val (fs, p) = graft.Scratch.fs(spark, path)
       try leaves(fs, p) catch { case _: java.io.FileNotFoundException => Nil }
     }.filterNot(st => summaries(st.getPath.getName))
-      .minByOption(_.getPath.toString)
+      .sortBy(_.getPath.toString)
   }
 
   // --- meta ------------------------------------------------------------------
@@ -120,11 +125,27 @@ object StoreKernel {
   }
 
   /** `<dir>/meta` as an `M` row, None when the store is absent (see
-    * [[readPromotedMeta]]). */
+    * [[readPromotedMeta]]). Read on the driver, no Spark job: the
+    * schema of the meta file's footer, its rows by Spark's own parquet
+    * reader ([[GraftFooterSchema.rows]]), decoded by `M`'s encoder
+    * resolved against that schema by name — the row
+    * `readStore(..).as[M].head()` returns. No data file or no row is a
+    * non-fatal read failure, as the Spark read's was. */
   def readMeta[M <: Product : TypeTag](spark: SparkSession, dir: String,
       tag: String): Option[M] =
-    readPromotedMeta(spark, s"$dir/meta", tag)(readStore(spark,
-      s"$dir/meta").as[M](Encoders.product[M]).head())
+    readPromotedMeta(spark, s"$dir/meta", tag) {
+      val path = s"$dir/meta"
+      val files = dataFiles(spark, Seq(path))
+      val schema = files.headOption.flatMap(GraftFooterSchema.read(spark, _))
+        .getOrElse(throw new java.io.FileNotFoundException(
+          s"no parquet data file under $path"))
+      val decode = ExpressionEncoder[M]()
+        .resolveAndBind(DataTypeUtils.toAttributes(schema))
+        .createDeserializer()
+      files.iterator.flatMap(GraftFooterSchema.rows(spark, _, schema))
+        .nextOption().map(decode)
+        .getOrElse(throw new NoSuchElementException(s"no row in $path"))
+    }
 
   /** Read a tiny promoted-meta table with a BOUNDED retry over the
     * promote's two-rename window: a read landing between "live renamed
@@ -489,8 +510,10 @@ object StoreKernel {
     *  3. `identity` scans the corpus for (n, fp): current when `fastOk`
     *     holds, the corpus reads meta MINUS the valid tombstones and
     *     `intact` (the store's probe of what the fingerprint cannot
-    *     see) passes → re-stamp and serve; else build with the scanned
-    *     identity. `serve` gets the meta and the pending tombN. */
+    *     see — it reads store tables only, and runs beside the heal and
+    *     the scan when `fastOk` holds) passes → re-stamp and serve; else
+    *     build with the scanned identity. `serve` gets the meta and the
+    *     pending tombN. */
   def ensure[M <: StoreMeta : TypeTag, I](spark: SparkSession,
       s: Store[M])(fastOk: (M, Long) => Boolean,
       identity: DataFrame => (Long, Long), intact: (M, Long) => Boolean,
@@ -506,13 +529,26 @@ object StoreKernel {
             case Some(m) =>
               val (tombRows, tombN, tombXor) =
                 tombAggregates(spark, s.dir, s.valid)
-              val corpus = readTable(spark, s.corpus)
-              val healed = tombRows > 0 &&
-                dropTombstoned(spark, s, corpus, heal = true) > 0
-              val (n, fp) = identity(
-                if (healed) readTable(spark, s.corpus) else corpus)
-              if (fastOk(m, tombN) && m.n - tombN == n &&
-                  (m.fp ^ tombXor) == fp && intact(m, tombN)) {
+              def healAndScan(): (Long, Long) = {
+                val corpus = readTable(spark, s.corpus)
+                val healed = tombRows > 0 &&
+                  dropTombstoned(spark, s, corpus, heal = true) > 0
+                identity(if (healed) readTable(spark, s.corpus) else corpus)
+              }
+              // `intact` reads only store tables, which neither the heal
+              // (a corpus rewrite) nor the scan touches: it runs beside
+              // them on a second driver thread, and only when the
+              // in-memory checks pass (otherwise the store rebuilds
+              // whatever it says)
+              val ok = fastOk(m, tombN)
+              val intactT =
+                if (ok) Some(Similarity.overlapped(intact(m, tombN)))
+                else None
+              val (n, fp) =
+                intactT.fold(healAndScan())(_.guarded(healAndScan()))
+              val isIntact = intactT.exists(_())
+              if (ok && m.n - tombN == n && (m.fp ^ tombXor) == fp &&
+                  isIntact) {
                 // validation scans only READ — but the heal above may
                 // have rewritten the corpus, so re-digest when
                 // tombstones are present (rare path; the digest is

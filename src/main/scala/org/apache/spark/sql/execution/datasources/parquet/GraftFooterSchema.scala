@@ -1,10 +1,15 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileFormat,
+  PartitionedFile}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
 
@@ -33,5 +38,22 @@ object GraftFooterSchema {
       HadoopInputFile.fromStatus(file, conf),
       ParquetMetadataConverter.SKIP_ROW_GROUPS)
     ParquetFileFormat.readSchema(Seq(new Footer(file.getPath, footer)), spark)
+  }
+
+  /** Every row of `file` under `schema`, read on the driver by the
+    * reader a scan task builds (`buildReaderWithPartitionValues`, row
+    * at a time): the values a `spark.read` of the file returns, without
+    * a Spark job. Materialized (rows copied, the reader drained and so
+    * closed) — for the stores' one-row tables, never bulk data. */
+  def rows(spark: SparkSession, file: FileStatus,
+      schema: StructType): Seq[InternalRow] = {
+    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    reader(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPath(file.getPath), 0L, file.getLen,
+        fileSize = file.getLen))
+      .map(_.copy()).toList
   }
 }

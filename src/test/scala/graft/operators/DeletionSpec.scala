@@ -220,6 +220,71 @@ class DeletionSpec extends SparkSpec {
       .filter(col("neighbor_id").isin(kills.toSeq: _*)).isEmpty)
   }
 
+  test("ANN compaction commits neither codes table when either shadow " +
+    "write fails, and skips the fold when every indexed row is " +
+    "tombstoned — serving stays exact and a rebuild converges") {
+    // 40 indexable rows plus one zero-norm row: the zero-norm row is
+    // never indexed, so deleting all 40 keeps the corpus rewrite legal
+    // while tombstones cover every indexed row
+    val dir = java.nio.file.Files.createTempDirectory("del_fold").toString
+    val fixture = Tables.load(spark, sfDir, "embeddings")
+    fixture.filter(col("vec_id") < 40)
+      .unionByName(fixture.filter(col("vec_id") === 40).select(
+        lit(1000000L).as("vec_id"),
+        transform(col("embedding"), x => x * 0.0f).as("embedding"),
+        col("label")))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val idxDir = IndexStore.dirFor(spark, dir)
+    try {
+      assert(IndexStore.ensure(spark, dir).builtNow)
+      def gens = Seq("codes", "rcodes").map(t =>
+        graft.sources.Generations.resolve(spark, s"$idxDir/$t"))
+      val gens0 = gens
+      val firstKills = (0L until 20L).toSet
+      IndexStore.deleteBatch(spark, dir, firstKills.toSeq.toDF("vec_id"))
+      // a shadow write that fails, on the caller's table (codes) and on
+      // the helper thread's (rcodes): a cell file that is not the
+      // schema file is garbled for the one attempt, then restored
+      for (t <- Seq("codes", "rcodes")) {
+        val f = graft.sources.Maintenance.cellFiles(spark, s"$idxDir/$t")
+          .map(_.getPath.toUri).sortBy(_.toString).last
+        val p = java.nio.file.Paths.get(f)
+        val bytes = java.nio.file.Files.readAllBytes(p)
+        java.nio.file.Files.write(p, "not parquet".getBytes("UTF-8"))
+        try intercept[Exception](
+          graft.sources.Maintenance.compactAnnIndex(spark, idxDir))
+        finally java.nio.file.Files.write(p, bytes)
+        assert(gens == gens0, s"a failed $t write committed a table")
+        assert(StoreKernel.tombstoneFrame(spark, idxDir).nonEmpty)
+        assert(IndexStore.appendState(spark, idxDir).contains((0L, 40L)))
+      }
+      // every indexed row tombstoned: no generation, sidecar kept
+      val rest = (20L until 40L).toSet
+      IndexStore.deleteBatch(spark, dir, rest.toSeq.toDF("vec_id"))
+      val (before, after) =
+        graft.sources.Maintenance.compactAnnIndex(spark, idxDir)
+      assert(before == after)
+      assert(gens == gens0, "a zero-row rewrite committed a generation")
+      assert(StoreKernel.tombstoneFrame(spark, idxDir).nonEmpty,
+        "the sidecar must survive a skipped fold")
+      assert(IndexStore.appendState(spark, idxDir).contains((0L, 40L)))
+      val info = IndexStore.ensure(spark, dir)
+      assert(!info.builtNow && info.n == 0)
+      assert(IndexStore.queryIvfPq(spark, dir, info)
+        .filter(col("neighbor_id").isin((firstKills ++ rest).toSeq: _*))
+        .isEmpty, "a deleted id was served after the skipped fold")
+      // the next rebuild converges physically: empty index, no sidecar,
+      // and ensure validates it
+      IndexStore.build(spark, dir, idxDir)
+      assert(StoreKernel.tombstoneFrame(spark, idxDir).isEmpty)
+      assert(IndexStore.appendState(spark, idxDir).contains((0L, 0L)))
+      assert(!IndexStore.ensure(spark, dir).builtNow)
+    } finally {
+      deleteDir(idxDir)
+      deleteDir(dir)
+    }
+  }
+
   test("streaming re-add of a tombstoned id converges: the sink folds " +
     "once and retries instead of crash-looping the replay") {
     implicit val ctx = spark.sqlContext

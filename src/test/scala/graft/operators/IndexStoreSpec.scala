@@ -659,6 +659,40 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
+  test("a policied ensure that validates and then compacts runs at most " +
+    "23 jobs: zero-job meta reads, the integrity probe beside the corpus " +
+    "scan, both codes tables written at once") {
+    // the compacting serve of the store benchmark, on a small corpus:
+    // a delta batch to fold, tombstones at the policy threshold, and a
+    // corpus rewrite that moved the token's digest (full validation)
+    val all = graft.sources.Tables.load(spark, sfDir, "embeddings")
+    val corpus = writeCorpus(all.filter(col("vec_id") < 300))
+    val idxDir = IndexStore.dirFor(spark, corpus)
+    try {
+      assert(IndexStore.ensure(spark, corpus).builtNow)
+      val batch = all.filter(col("vec_id") >= 300 && col("vec_id") < 320)
+      batch.write.mode("append").parquet(s"$corpus/embeddings.parquet")
+      IndexStore.appendBatch(spark, idxDir, batch)
+      val kills = (100L until 120L).toDF("vec_id")
+      IndexStore.deleteBatch(spark, corpus, kills)
+      val gen = graft.sources.Generations.resolve(spark, s"$idxDir/codes")
+      val policy = Some(IndexStore.RebuildPolicy(
+        driftAt = Double.PositiveInfinity, foldAtTombstones = 20L))
+      var info: IndexStore.BuildInfo = null
+      val jobs = jobsDuring { info = IndexStore.ensure(spark, corpus, policy) }
+      assert(!info.builtNow && info.n == 300)
+      assert(graft.sources.Generations.resolve(spark, s"$idxDir/codes") != gen,
+        "the policy did not compact")
+      assert(graft.sources.StoreKernel.tombstoneFrame(spark, idxDir).isEmpty)
+      assert(jobs <= 23, s"$jobs jobs")
+      // folded and re-stamped: the next policied ensure takes the token
+      assert(jobsDuring { IndexStore.ensure(spark, corpus, policy) } === 0)
+    } finally {
+      deleteDir(idxDir)
+      deleteDir(corpus)
+    }
+  }
+
   test("compactAnnIndex collapses per-cell append slivers; results and " +
     "fingerprint are untouched") {
     val all = graft.sources.Tables.load(spark, sfDir, "embeddings")

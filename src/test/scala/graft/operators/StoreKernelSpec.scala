@@ -32,6 +32,31 @@ class StoreKernelSpec extends SparkSpec {
       throw new IllegalStateException("torn meta")).isEmpty)
   }
 
+  test("readMeta reads an ANN, a lexical and a veclists meta with zero " +
+    "jobs, returning the row of the Spark read") {
+    val root = tempDir("kernel_meta_read")
+    val vl = VecListsMeta(2, 3, 480L, -77L, 16, 10, 0.25, 12L)
+    try {
+      StoreKernel.writeMeta(spark, s"$root/ann", ann)
+      StoreKernel.writeMeta(spark, s"$root/lex", lex)
+      StoreKernel.writeMeta(spark, s"$root/vl", vl)
+      var got: Seq[Option[Product]] = Nil
+      assert(jobsDuring {
+        got = Seq(
+          StoreKernel.readMeta[AnnIndexMeta](spark, s"$root/ann", "test"),
+          StoreKernel.readMeta[LexIndexMeta](spark, s"$root/lex", "test"),
+          StoreKernel.readMeta[VecListsMeta](spark, s"$root/vl", "test"))
+      } === 0, "a meta read ran a Spark job")
+      import spark.implicits._
+      def sparkRead[M <: Product : org.apache.spark.sql.Encoder](
+          store: String): Option[Product] =
+        Some(spark.read.parquet(s"$root/$store/meta").as[M].head())
+      assert(got == Seq(sparkRead[AnnIndexMeta]("ann"),
+        sparkRead[LexIndexMeta]("lex"), sparkRead[VecListsMeta]("vl")))
+      assert(got == Seq(Some(ann), Some(lex), Some(vl)))
+    } finally deleteDir(root)
+  }
+
   // the token lines the stores wrote before the kernel, spelled out:
   // digest | meta fields in declaration order | tombN | tombXor
   private val ann = AnnIndexMeta(3, 500L, -8070450532247928832L, 16,
