@@ -2,6 +2,7 @@
 """Where each request of a traced benchmark run spent its time.
 
 Usage: python3 scripts/store_requests.py <trace.json> [--top N]
+           [--budget KIND=JOBS,...]
 
 <trace.json> is the record a traced run keeps, e.g.
 `.bench_build/perfbench/traces/store-7.json` after
@@ -23,6 +24,10 @@ job's start), so a frame whose jobs are short but preceded by long
 gaps is a frame of driver-side planning or bookkeeping.
 
 A job belongs to the request whose window holds its start time.
+
+`--budget serve=25,delete=18,append=36` gives each request kind a job
+budget: every traced request over its kind's budget is listed on
+stderr and the script exits 1. Kinds without a budget are not checked.
 """
 import argparse
 import json
@@ -114,12 +119,38 @@ def report(rec, top):
         print(f"  {'':>4} {'':>7} {tail:>7.3f}  (after the last job)")
 
 
-def main():
+def parse_budget(text):
+    """{kind: max jobs} from `kind=jobs,kind=jobs`."""
+    budget = {}
+    for item in filter(None, text.split(",")):
+        kind, sep, jobs = item.partition("=")
+        if not sep or not kind.strip() or not jobs.strip().isdigit():
+            raise ValueError(f"bad budget entry {item!r}: want KIND=JOBS")
+        budget[kind.strip()] = int(jobs)
+    return budget
+
+
+def over_budget(rec, budget):
+    """(request id, kind, jobs, budget) of every request whose job count
+    exceeds its kind's budget."""
+    over = []
+    for req, jobs in requests(rec):
+        kind = req["tags"].get("kind", "?")
+        if kind in budget and len(jobs) > budget[kind]:
+            over.append((req["req"], kind, len(jobs), budget[kind]))
+    return over
+
+
+def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("trace")
     ap.add_argument("--top", type=int, default=0,
                     help="show only the N costliest frames per request")
-    args = ap.parse_args()
+    ap.add_argument("--budget", type=parse_budget, default={},
+                    help="job budget per request kind, e.g. "
+                         "serve=25,delete=18,append=36; exit 1 when a "
+                         "request exceeds its kind's")
+    args = ap.parse_args(argv)
     try:
         with open(args.trace) as f:
             rec = json.load(f)
@@ -127,7 +158,11 @@ def main():
         print(f"cannot read {args.trace}: {e}", file=sys.stderr)
         return 2
     report(rec, args.top)
-    return 0
+    over = over_budget(rec, args.budget)
+    for req, kind, jobs, limit in over:
+        print(f"over budget: request {req} {kind}: {jobs} jobs > {limit}",
+              file=sys.stderr)
+    return 1 if over else 0
 
 
 if __name__ == "__main__":

@@ -285,13 +285,20 @@ object IndexStore {
   private[operators] def kernelStore(sfDir: String, dir: String)
       : StoreKernel.Store[AnnIndexMeta] =
     StoreKernel.Store("annidx", dir, sfDir, s"$sfDir/embeddings.parquet",
-      "vec_id", col("valid"),
+      "vec_id", Some("valid"),
       s"v$formatVersion|${Similarity.pqSubspaces}|" +
         s"${Similarity.pqCodes}|${Similarity.lloydIters}|" +
         s"${Similarity.pqLloydIters}",
       f => AnnIndexMeta(f(0).toInt, f(1).toLong, f(2).toLong, f(3).toInt,
         f(4).toDouble, f(5).toLong, f(6).toInt, f(7).toInt, f(8).toInt,
         f(9).toInt, f(10).toDouble))
+
+  /** The tombstone sidecar at `dir`, read on the driver
+    * ([[StoreKernel.tombs]] under [[kernelStore]]'s key and valid
+    * column). */
+  private[graft] def tombsOf(spark: SparkSession,
+      dir: String): StoreKernel.Tombs =
+    StoreKernel.tombs(spark, dir, "vec_id", Some("valid"))
 
   /** Are the codes tables present and consistent with `m`? Catches the
     * three states the corpus fingerprint CANNOT see, because the rows
@@ -509,8 +516,8 @@ object IndexStore {
 
   /** [[RebuildPolicy.compactAtFilesPerCell]] + [[RebuildPolicy
     * .foldAtTombstones]] enforcement: glob the two codes tables'
-    * `cell=` dirs / probe the tombstone sidecar (driver-side metadata
-    * + one small-table agg) and run [[graft.sources.Maintenance
+    * `cell=` dirs / read the tombstone sidecar (driver-side, no Spark
+    * job) and run [[graft.sources.Maintenance
     * .compactAnnIndex]] at a threshold, then re-stamp the token (the
     * rewrite is content-preserving — only layout moves and tombstones
     * fold — and the index was JUST validated by the caller).
@@ -525,7 +532,7 @@ object IndexStore {
     * tombstone count from `tombHint` — the valid tombN the ensure just
     * validated or read from its token — instead of aggregating the
     * sidecar again; a delete landing in between is seen by the next
-    * ensure. The in-lease probe aggregates the sidecar itself. */
+    * ensure. The in-lease probe reads the sidecar itself. */
   private def compactIfPolicied(spark: SparkSession, sfDir: String,
       dir: String, policy: Option[RebuildPolicy], tombHint: Long): Unit = {
     // LOCK-ORDER GUARD (ADVICE r16): this path takes lease → monitor.
@@ -563,15 +570,11 @@ object IndexStore {
       }
       if (triggered(tombHint)._1)
         graft.sources.WriterLease.withWrite(spark, dir, "policy-compact") {
-          // tombstone-cadence axis: exists() probe first, so the common
-          // tombstone-free store never runs the sidecar agg. The
-          // aggregates are handed on to the compaction's meta fold:
-          // deleteBatch takes this same lease, so the sidecar cannot
-          // change in between
-          val tombs =
-            if (StoreKernel.tombstoneFrame(spark, dir).isEmpty) (0L, 0L, 0L)
-            else StoreKernel.tombAggregates(spark, dir, col("valid"))
-          val (go, pendingTombs) = triggered(tombs._2)
+          // tombstone-cadence axis: the sidecar read is handed on to
+          // the compaction's id drop and meta fold: deleteBatch takes
+          // this same lease, so the sidecar cannot change in between
+          val tombs = tombsOf(spark, dir)
+          val (go, pendingTombs) = triggered(tombs.validN)
           if (go) {
             val (before, after) =
               Maintenance.compactAnnIndex(spark, dir, Some(tombs))
@@ -603,10 +606,9 @@ object IndexStore {
       // pending tombstones fold here exactly as in ensure's serve:
       // info.n is the EFFECTIVE (survivor) size — shortlist sizing and
       // the n==0 delegate branches must agree between the two info
-      // sources (driver-side probe + one small-table agg, only when a
-      // sidecar exists)
-      val (_, tombN, _) = StoreKernel.tombAggregates(spark, dir, col("valid"))
-      BuildInfo(dir, m.n - tombN, m.nl, builtNow = false, buildSec = 0.0)
+      // sources (a driver-side sidecar read, no Spark job)
+      BuildInfo(dir, m.n - tombsOf(spark, dir).validN, m.nl,
+        builtNow = false, buildSec = 0.0)
     }
   }
 
@@ -702,14 +704,12 @@ object IndexStore {
     // DELETION CONTRACT (see the deletion section): a tombstoned id
     // must not re-enter before compaction folds its ghost codes rows —
     // appending would double-key the id and the serve-side anti-join
-    // would then hide BOTH copies. Driver-side existence probe on the
-    // healthy (no-pending-deletes) path; one batch-sized semi-join
-    // when tombstones exist.
-    StoreKernel.tombstoneFrame(spark, dir).foreach { t =>
-      val hit = batch.select(col("vec_id"))
-        .join(t.select(col("vec_id")).hint("broadcast"),
-          Seq("vec_id"), "left_semi")
-        .limit(1).count()
+    // would then hide BOTH copies. Driver-side sidecar read on the
+    // healthy (no-pending-deletes) path; one batch-sized probe when
+    // tombstones exist.
+    val tombs = tombsOf(spark, dir)
+    if (!tombs.isEmpty) {
+      val hit = tombs.pending(batch.select(col("vec_id"))).limit(1).count()
       if (hit > 0) throw new TombstonedReAddException(
         s"batch re-adds tombstoned (deleted) vec_id(s) at $dir — " +
           "re-adding a deleted id is legal only after a compaction " +
@@ -1203,7 +1203,9 @@ object IndexStore {
   //    AFTER a compaction folds the tombstone.
   //
   // 100 TB note: the tombstone sidecar is bounded by the fold cadence
-  // (anti-joins broadcast it); the corpus rewrite is one distributed
+  // (every request reads it on the driver, StoreKernel.tombs, and its
+  // readers filter by the driver-held keys); the corpus rewrite is one
+  // distributed
   // scan-and-copy per delete batch — on a partitioned production
   // corpus the same swap applies per affected partition. The INDEX
   // side never rewrites outside compaction, which it was paying
@@ -1220,17 +1222,16 @@ object IndexStore {
     * and fails the fingerprint leg — and neither can resurrect rows,
     * because the corpus rewrite happened at deleteBatch time. */
   private[graft] def foldTombstonesIntoMeta(spark: SparkSession,
-      dir: String, tombs: Option[(Long, Long, Long)] = None): Unit = {
-    // `tombs`: the sidecar's (rows, valid rows, xor) when the caller
-    // aggregated it under the lease it still holds
-    val (rows, validN, xor) = tombs.getOrElse(
-      StoreKernel.tombAggregates(spark, dir, col("valid")))
-    if (rows == 0) return
+      dir: String, tombs: Option[StoreKernel.Tombs] = None): Unit = {
+    // `tombs`: the sidecar when the caller read it under the lease it
+    // still holds
+    val t = tombs.getOrElse(tombsOf(spark, dir))
+    if (t.isEmpty) return
     graft.sources.WriterLease.withWrite(spark, dir, "tombfold") {
       val m = meta(spark, dir).getOrElse(throw new IllegalStateException(
         s"no readable meta at $dir — cannot fold tombstones"))
       StoreKernel.writeMeta(spark, dir,
-        m.copy(n = m.n - validN, fp = m.fp ^ xor))
+        m.copy(n = m.n - t.validN, fp = m.fp ^ t.xor))
       StoreKernel.clearTombstones(spark, dir)
     }
   }
@@ -1257,9 +1258,7 @@ object IndexStore {
     val killIds = kills.select(col("vec_id")).distinct()
     val present = raw.join(killIds.hint("broadcast"),
       Seq("vec_id"), "left_semi")
-    val fresh = StoreKernel.tombstoneFrame(spark, dir).fold(present)(t =>
-      present.join(t.select(col("vec_id")).hint("broadcast"),
-        Seq("vec_id"), "left_anti"))
+    val fresh = tombsOf(spark, dir).drop(present)
     val v = col("embedding").cast("array<double>")
     val nrm = sqrt(dotD(v, v))
     // home cell from the INDEX's own sub-0 rows (the one definition of
@@ -1281,9 +1280,10 @@ object IndexStore {
       cap.repartition(1).write.mode(SaveMode.Append)
         .parquet(StoreKernel.tombDirOf(dir))
     // corpus rewrite: drop EVERY tombstoned id still present — this
-    // batch's and any crashed predecessor's (the replay IS the heal)
+    // batch's and any crashed predecessor's (the replay IS the heal),
+    // the sidecar read again now that this batch's rows landed
     val removed = StoreKernel.dropTombstoned(spark,
-      kernelStore(sfDir, dir), raw, heal = false)
+      kernelStore(sfDir, dir), raw, tombsOf(spark, dir), heal = false)
     DeleteStats(freshN, removed)
   } } }
 
@@ -1441,11 +1441,9 @@ object IndexStore {
       _.join(broadcast(probes), Seq("cell")))
     // persisted tombstones are a standing exclusion (deleted ids'
     // ghost codes rows remain until compaction folds them), composed
-    // with the caller's soft-delete set under the same anti-join
-    val probed = (exclude.toSeq ++
-        StoreKernel.tombstoneFrame(spark, dir).toSeq)
-      .foldLeft(probed0)((d, x) =>
-        d.join(x.select(col("vec_id")), Seq("vec_id"), "left_anti"))
+    // with the caller's soft-delete set
+    val probed = exclude.foldLeft(tombsOf(spark, dir).drop(probed0))(
+      (d, x) => d.join(x.select(col("vec_id")), Seq("vec_id"), "left_anti"))
     val lut = Similarity.pqLut(Similarity.subVectors(qe),
       StoreKernel.readStore(spark, s"$dir/codebook"))
     val cand = Similarity.adcShortlist(probed, lut,
@@ -1479,10 +1477,8 @@ object IndexStore {
       .join(broadcast(cents.select(col("cell"), col("cn"))), Seq("cell"))
       .select(col("vec_id").as("query_id"), col("cell"),
         (col("cd") + col("cn")).as("ct"))
-    val probed = StoreKernel.tombstoneFrame(spark, dir)
-      .foldLeft(withDeltaOf(spark, dir, "rcodes")(
-        _.join(broadcast(probesCt), Seq("cell"))))((d, t) =>
-        d.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti"))
+    val probed = tombsOf(spark, dir).drop(withDeltaOf(spark, dir, "rcodes")(
+      _.join(broadcast(probesCt), Seq("cell"))))
     val lut = Similarity.pqLut(Similarity.subVectors(qe),
       StoreKernel.readStore(spark, s"$dir/rcodebook"))
     val cand = Similarity.adcShortlist(probed, lut,
@@ -1535,9 +1531,7 @@ object IndexStore {
       .select(col("vec_id").as("query_id"), col("cell"))
     val probed0 = withDeltaOf(spark, dir, "codes")(
       _.join(broadcast(probes), Seq("cell")))
-    val probed = StoreKernel.tombstoneFrame(spark, dir).toSeq
-      .foldLeft(probed0)((d, t) =>
-        d.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti"))
+    val probed = tombsOf(spark, dir).drop(probed0)
     val lut = Similarity.pqLut(Similarity.subVectors(qe),
       StoreKernel.readStore(spark, s"$dir/codebook"))
     val cand = Similarity.adcShortlist(probed, lut,

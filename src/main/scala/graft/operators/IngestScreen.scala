@@ -356,10 +356,7 @@ object IngestScreen {
     // the already-rewritten corpus
     val lists0 = readLists(spark, listsDir(spark, sfDir))
       .filter(iidFilter)
-    val lists = StoreKernel.tombstoneFrame(spark, info.dir)
-      .foldLeft(lists0)((d, t) => d.join(
-        t.select(col("vec_id")).hint("broadcast"), Seq("vec_id"),
-        "left_anti"))
+    val lists = IndexStore.tombsOf(spark, info.dir).drop(lists0)
       .select(col("cell"), col("vec_id").as("iid"), col("v").as("vi"),
         col("nrm").as("ni"))
     val joined =

@@ -82,7 +82,7 @@ object LexIndex {
   }
 
   private def docsOf(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(graft.sources.Generations.resolve(spark,
+    StoreKernel.readTable(spark, graft.sources.Generations.resolve(spark,
       docsPath(spark, sfDir)))
 
   private def pfxOf(tokenCol: org.apache.spark.sql.Column) =
@@ -128,9 +128,14 @@ object LexIndex {
   private[operators] def kernelStore(spark: SparkSession, sfDir: String,
       dir: String): StoreKernel.Store[LexIndexMeta] =
     StoreKernel.Store("lexidx", dir, sfDir, docsPath(spark, sfDir),
-      "doc_id", lit(true), s"lexv$formatVersion|$pfxParts",
+      "doc_id", None, s"lexv$formatVersion|$pfxParts",
       f => LexIndexMeta(f(0).toInt, f(1).toLong, f(2).toLong, f(3).toInt,
         f(4).toLong))
+
+  /** The tombstone sidecar at `dir`, read on the driver
+    * ([[StoreKernel.tombs]]; every tombstone folds). */
+  private def tombsOf(spark: SparkSession, dir: String): StoreKernel.Tombs =
+    StoreKernel.tombs(spark, dir, "doc_id", None)
 
   /** Structural probe for the states the corpus fingerprint cannot
     * see: a swap/compaction crash that lost a table dir, or a stats
@@ -216,10 +221,7 @@ object LexIndex {
     val killIds = kills.select(col("doc_id")).distinct()
     val present = docs.join(killIds.hint("broadcast"),
       Seq("doc_id"), "left_semi")
-    val fresh = graft.Materialize(
-      StoreKernel.tombstoneFrame(spark, dir).fold(present)(t =>
-        present.join(t.select(col("doc_id")).hint("broadcast"),
-          Seq("doc_id"), "left_anti")))
+    val fresh = graft.Materialize(tombsOf(spark, dir).drop(present))
     val freshN = fresh.count()
     // fence before the commit point below
     graft.sources.WriterLease.verify(spark, dir)
@@ -248,7 +250,7 @@ object LexIndex {
     // 3. corpus rewrite: drop EVERY tombstoned id still present —
     //    this batch's and any crashed predecessor's (replay = heal)
     val removed = StoreKernel.dropTombstoned(spark,
-      kernelStore(spark, sfDir, dir), docs, heal = false)
+      kernelStore(spark, sfDir, dir), docs, tombsOf(spark, dir), heal = false)
     DeleteDocsStats(freshN, removed)
   } } }
 
@@ -332,13 +334,11 @@ object LexIndex {
     // instead. A racing fold is absorbed by the re-probe: tombN
     // re-reads as 0 and nothing reruns.
     if (foldAtTombstones != Long.MaxValue && !info.builtNow) {
-      val (tombN, _, _) = StoreKernel.tombAggregates(spark, dir)
+      val tombs = tombsOf(spark, dir)
+      val tombN = tombs.rows
       if (tombN > 0 && tombN >= foldAtTombstones) {
-        val survivors = StoreKernel.tombstoneFrame(spark, dir)
-          .map(t => readCur(spark, s"$dir/tf")
-            .join(t.select(col("doc_id")).distinct().hint("broadcast"),
-              Seq("doc_id"), "left_anti").limit(1).count())
-          .getOrElse(1L)
+        val survivors =
+          tombs.drop(readCur(spark, s"$dir/tf")).limit(1).count()
         if (survivors == 0)
           System.err.println(s"[lexidx] policy fold at $dir stood " +
             "down: blank survivors (compact would skip the fold); " +
@@ -348,7 +348,7 @@ object LexIndex {
             "pending tombstone(s) at/over the threshold")
           compact(spark, sfDir)
           val m2 = meta(spark, dir)
-          val (tN2, _, _) = StoreKernel.tombAggregates(spark, dir)
+          val tN2 = tombsOf(spark, dir).rows
           return m2.map(m => BuildInfo(dir, m.n - tN2, m.np,
             builtNow = false, buildSec = 0.0)).getOrElse(info)
         }
@@ -373,12 +373,9 @@ object LexIndex {
     // pending tombstones (deletion lifecycle): ghost postings of
     // deleted docs are excluded here; df/stats need no exclusion —
     // their negative partials already subtracted exactly
-    val pruned = StoreKernel.tombstoneFrame(spark, info.dir)
-      .foldLeft(readCur(spark, s"${info.dir}/tf")
+    val pruned = tombsOf(spark, info.dir).drop(readCur(spark, s"${info.dir}/tf")
         .filter(col("pfx").isin(pfxes: _*))
-        .join(broadcast(terms), "token"))((d, t) =>
-        d.join(t.select(col("doc_id")).hint("broadcast"),
-          Seq("doc_id"), "left_anti"))
+        .join(broadcast(terms), "token"))
     // df and stats are stored ADDITIVELY — the build writes one
     // partial, each appendBatch adds another — so the read path sums.
     // Integer sums are order-free, so a pure build (one partial) and
@@ -476,11 +473,9 @@ object LexIndex {
     // deletion contract: a tombstoned doc_id must not re-enter before
     // compact folds its ghost postings (the tf anti-join would hide
     // BOTH copies) — same refusal as the ANN appendBatch
-    StoreKernel.tombstoneFrame(spark, dir).foreach { t =>
-      val hit = batch.select(col("doc_id"))
-        .join(t.select(col("doc_id")).hint("broadcast"),
-          Seq("doc_id"), "left_semi")
-        .limit(1).count()
+    val tombs = tombsOf(spark, dir)
+    if (!tombs.isEmpty) {
+      val hit = tombs.pending(batch.select(col("doc_id"))).limit(1).count()
       if (hit > 0) throw new IllegalStateException(
         s"batch re-adds tombstoned (deleted) doc_id(s) at $dir — " +
           "re-adding a deleted id is legal only after compact() folds " +
@@ -539,7 +534,8 @@ object LexIndex {
       // "Content-preserving" includes the tombstone fold below: the
       // folded tables serve byte-identically to what the anti-join +
       // negative partials served before it.
-      val (tombN, _, tombXor) = StoreKernel.tombAggregates(spark, dir)
+      val tombs = tombsOf(spark, dir)
+      val (tombN, tombXor) = (tombs.rows, tombs.xor)
       val st = kernelStore(spark, sfDir, dir)
       val vouchedAtEntry = StoreKernel.readToken(spark, st).exists(t =>
         t.digest == StoreKernel.digest(spark, st) && t.meta == m &&
@@ -578,23 +574,19 @@ object LexIndex {
       // meta folds and the sidecar clears. Crash windows converge by
       // ensure-rebuild, and can never resurrect (the corpus rewrite
       // happened at deleteDocs time).
-      val tombIds0 = StoreKernel.tombstoneFrame(spark, dir)
-        .map(_.select(col("doc_id")).distinct())
+      val tombIds0 = Some(tombs).filterNot(_.isEmpty)
       // folded posting count, computed BEFORE any rewrite: a zero-row
       // partitioned write leaves an unreadable shell, so when every
       // surviving doc is blank the fold is SKIPPED (sidecar stays;
       // the anti-join + negative partials keep serving correct) —
       // the np==0 read guard can then never meet a shell it can't read
-      val np2 = tombIds0.map(t => readCur(spark, s"$dir/tf")
-        .join(t.hint("broadcast"), Seq("doc_id"), "left_anti").count())
+      val np2 = tombIds0.map(_.drop(readCur(spark, s"$dir/tf")).count())
       val tombIds = if (np2.contains(0L)) {
         System.err.println(s"[lexidx] tombstone fold skipped at $dir: " +
           "every surviving posting row would vanish (blank survivors)")
         None
       } else tombIds0
-      rewrite("tf", d => tombIds.fold(d)(t =>
-        d.join(t.hint("broadcast"), Seq("doc_id"), "left_anti")),
-        partitioned = true)
+      rewrite("tf", d => tombIds.fold(d)(_.drop(d)), partitioned = true)
       // the zero-sum drop runs ONLY when the tombstone fold does: in
       // the skipped (blank-survivor) state every token can net to 0 —
       // filtering would then write a zero-row partitioned shell that

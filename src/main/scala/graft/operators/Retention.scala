@@ -84,7 +84,8 @@ object Retention {
         // fence immediately before the visible swap (the commit
         // point) — the acquisition may have waited out a takeover
         graft.sources.WriterLease.verify(spark, corpusDir)
-        StoreKernel.rewriteTableMinus(spark, table, kids, key)
+        StoreKernel.rewriteTableMinus(spark, table,
+          _.join(kids.hint("broadcast"), Seq(key), "left_anti"))
       }
       present
     }

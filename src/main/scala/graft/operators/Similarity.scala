@@ -793,7 +793,12 @@ object Similarity {
     * variants (q35 applies the same rule to the exact baseline).
     * Shared by [[q36KnnLsh]], [[q41KnnIvf]], [[q61KnnPq]],
     * [[q65KnnIvfPq]] and [[q68KnnIvfPqRes]] — every ANN variant
-    * surfaces exact cosines through this one rule. */
+    * surfaces exact cosines through this one rule.
+    *
+    * The output is ONE partition sorted by (query_id, rank): at most
+    * `maxQuery` × `kk` rows, so `coalesce(1)` + `sortWithinPartitions`
+    * gives the order a global `orderBy` gave without its range
+    * exchange (a sampling job plus a shuffle per execution). */
   private[operators] def rerankTopK(e: DataFrame, cand: DataFrame,
       kk: Int = k, maxQuery: Long = knnQueries): DataFrame = {
     val qv = e.filter(col("vec_id") < maxQuery)
@@ -812,7 +817,8 @@ object Similarity {
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         col("col.score").as("cosine"),
         (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
+      .coalesce(1)
+      .sortWithinPartitions(col("query_id"), col("rank"))
   }
 
   /** q36: ANN top-k — candidates share an LSH bucket in ≥ 1 table with

@@ -406,12 +406,12 @@ object Maintenance {
   def compactAnnIndex(spark: SparkSession, indexDir: String): (Int, Int) =
     compactAnnIndex(spark, indexDir, None)
 
-  /** [[compactAnnIndex]] whose meta fold takes `tombs`, the sidecar's
-    * (rows, valid rows, xor), from a caller that aggregated it under
-    * the writer lease it still holds (deletes take the same lease, so
-    * the sidecar cannot change in between); None aggregates it here. */
+  /** [[compactAnnIndex]] whose id drop and meta fold take `tombs`, the
+    * tombstone sidecar, from a caller that read it under the writer
+    * lease it still holds (deletes take the same lease, so the sidecar
+    * cannot change in between); None reads it here. */
   private[graft] def compactAnnIndex(spark: SparkSession, indexDir: String,
-      tombs: Option[(Long, Long, Long)]): (Int, Int) =
+      tombs: Option[StoreKernel.Tombs]): (Int, Int) =
     // lease OUTSIDE the monitor: a foreign holder's bounded wait must
     // never block this JVM's readers on the store monitor
     WriterLease.withWrite(spark, indexDir, "compact") {
@@ -422,8 +422,7 @@ object Maintenance {
       // dropped from both tables here, then meta folds the sidecar's
       // (count, xor) and the sidecar clears — the physical half of
       // the deletion lifecycle (see IndexStore's deletion section)
-      val dropIds = StoreKernel.tombstoneFrame(spark, indexDir)
-        .map(_.select(col("vec_id")).distinct())
+      val dropIds = tombs.getOrElse(IndexStore.tombsOf(spark, indexDir))
       final class Table(val name: String) {
         val dir = s"$indexDir/$name"
         // ONE delta listing (reaping TTL-expired absorbed files — this
@@ -440,8 +439,7 @@ object Maintenance {
           * no row survives — the shadow is then deleted. */
         def rewrite(): Option[String] = {
           val df0 = IndexStore.withDeltaOf(spark, indexDir, name)(identity)
-          val df = dropIds.fold(df0)(t =>
-            df0.join(t.hint("broadcast"), Seq("vec_id"), "left_anti"))
+          val df = dropIds.drop(df0)
           val shadow = Generations.shadowFor(spark, dir)
           if (!writeCells(spark, df, shadow, distinctCells(base))) {
             dropShadow(spark, shadow)
@@ -487,8 +485,8 @@ object Maintenance {
           Generations.commit(spark, rcodes.dir, rs)
           // AFTER both commits: meta folds the sidecar and the sidecar
           // clears
-          if (dropIds.nonEmpty)
-            IndexStore.foldTombstonesIntoMeta(spark, indexDir, tombs)
+          if (!dropIds.isEmpty)
+            IndexStore.foldTombstonesIntoMeta(spark, indexDir, Some(dropIds))
           (before,
             Seq(codes, rcodes).map(t => cellFiles(spark, t.dir).size).sum)
         case (cs, rs) =>

@@ -6,10 +6,12 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode,
   SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Similarity
 
@@ -38,11 +40,12 @@ object StoreKernel {
   /** One store's facts for a token, heal or [[ensure]] call: where it
     * lives, the corpus table it indexes (and the corpus dir whose
     * writer lease guards that table), the corpus key its tombstones
-    * carry, which tombstones fold into the identity, the dial line the
+    * carry, the boolean sidecar column selecting the tombstones that
+    * fold into the identity (None: every one), the dial line the
     * digest folds in, and the parser of the meta fields of its token.
     * `tag` prefixes every stderr line the kernel prints for it. */
   final case class Store[M <: StoreMeta](tag: String, dir: String,
-      corpusDir: String, corpus: String, key: String, valid: Column,
+      corpusDir: String, corpus: String, key: String, valid: Option[String],
       dials: String, parse: IndexedSeq[String] => M)
 
   /** A parsed token: the digest it was stamped under, the meta copy and
@@ -83,33 +86,71 @@ object StoreKernel {
     * per table just to read that footer. For the tables the stores
     * write themselves, all files of one table under one schema (meta,
     * tombstones, trained tables, codes, lists, postings): user tables
-    * keep Spark's inference. No data file (an absent path, a dir
+    * go through [[readTable]]. No data file (an absent path, a dir
     * holding only `_SUCCESS` or hidden debris) or an unreadable footer:
     * the plain read, which fails exactly as it always did. */
   def readStore(spark: SparkSession, paths: String*): DataFrame =
-    dataFiles(spark, paths).headOption.flatMap { f =>
+    footerSchema(spark, dataFiles(leafFiles(spark, paths)))
+      .fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+
+  /** A user table (a corpus, the documents) at `path` — a single
+    * parquet file or a directory — read as `spark.read.parquet(path)`
+    * reads it. Spark's inference (schema merging off) converts one
+    * footer: a `_common_metadata` or `_metadata` summary file when the
+    * table has one, else the first data file by path. In that last
+    * case, and only there, the same footer is read on the driver
+    * ([[readStore]]'s route), so building the frame runs no Spark job.
+    * The plain read (with its one-task inference job) stays for a table
+    * with a summary file, for schema merging on (the session conf
+    * `spark.sql.parquet.mergeSchema`; this reader takes no read
+    * options), and for a data column that is also a partition column of
+    * the path (Spark then types it from the path). */
+  def readTable(spark: SparkSession, path: String): DataFrame = {
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean)
+      return spark.read.parquet(path)
+    val leaves = leafFiles(spark, Seq(path))
+    val (fs, root) = graft.Scratch.fs(spark, path)
+    val base = fs.makeQualified(root).toString
+    val partCols = leaves.flatMap(_.getPath.getParent.toString
+        .stripPrefix(base).split('/').filter(_.contains('=')))
+      .map(_.takeWhile(_ != '=').toLowerCase).toSet
+    footerSchema(spark, if (leaves.exists(summary)) Nil else dataFiles(leaves))
+      .filterNot(_.fieldNames.exists(f => partCols(f.toLowerCase)))
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The schema of the first of `files`' footers, None without a file
+    * or with an unreadable footer. */
+  private def footerSchema(spark: SparkSession,
+      files: Seq[FileStatus]): Option[StructType] =
+    files.headOption.flatMap { f =>
       try GraftFooterSchema.read(spark, f)
       catch { case NonFatal(_) => None }
-    }.fold(spark.read.parquet(paths: _*))(
-      spark.read.schema(_).parquet(paths: _*))
+    }
 
-  /** The data files under `paths` by path: the leaves of Spark's file
-    * index (hidden names skipped; parquet summary files are not data
-    * files). The first is the file Spark's parquet inference reads the
-    * schema of (its `ParquetUtils.splitFiles` choice). */
-  private def dataFiles(spark: SparkSession,
+  /** Parquet summary files: listed by Spark, never data files. */
+  private def summary(st: FileStatus): Boolean =
+    Set("_common_metadata", "_metadata")(st.getPath.getName)
+
+  /** The leaf files of Spark's file index under `paths` by path
+    * (hidden names skipped, parquet summary files kept). */
+  private def leafFiles(spark: SparkSession,
       paths: Seq[String]): Seq[FileStatus] = {
     def leaves(fs: FileSystem, p: Path): Seq[FileStatus] =
       fs.listStatus(p).toSeq
         .filterNot(st => GraftFooterSchema.hidden(st.getPath.getName))
         .flatMap(st => if (st.isDirectory) leaves(fs, st.getPath) else Seq(st))
-    val summaries = Set("_common_metadata", "_metadata")
     paths.flatMap { path =>
       val (fs, p) = graft.Scratch.fs(spark, path)
       try leaves(fs, p) catch { case _: java.io.FileNotFoundException => Nil }
-    }.filterNot(st => summaries(st.getPath.getName))
-      .sortBy(_.getPath.toString)
+    }.sortBy(_.getPath.toString)
   }
+
+  /** The data files among `leaves`. The first is the file Spark's
+    * parquet inference reads the schema of when no summary file
+    * exists (its `ParquetUtils.splitFiles` choice). */
+  private def dataFiles(leaves: Seq[FileStatus]): Seq[FileStatus] =
+    leaves.filterNot(summary)
 
   // --- meta ------------------------------------------------------------------
 
@@ -135,14 +176,14 @@ object StoreKernel {
       tag: String): Option[M] =
     readPromotedMeta(spark, s"$dir/meta", tag) {
       val path = s"$dir/meta"
-      val files = dataFiles(spark, Seq(path))
+      val files = dataFiles(leafFiles(spark, Seq(path)))
       val schema = files.headOption.flatMap(GraftFooterSchema.read(spark, _))
         .getOrElse(throw new java.io.FileNotFoundException(
           s"no parquet data file under $path"))
       val decode = ExpressionEncoder[M]()
         .resolveAndBind(DataTypeUtils.toAttributes(schema))
         .createDeserializer()
-      files.iterator.flatMap(GraftFooterSchema.rows(spark, _, schema))
+      GraftFooterSchema.rows(spark, files, schema)
         .nextOption().map(decode)
         .getOrElse(throw new NoSuchElementException(s"no row in $path"))
     }
@@ -312,8 +353,8 @@ object StoreKernel {
   def restamp[M <: StoreMeta : TypeTag](spark: SparkSession,
       s: Store[M]): Unit =
     readMeta[M](spark, s.dir, s.tag).foreach { m =>
-      val (_, tombN, tombXor) = tombAggregates(spark, s.dir, s.valid)
-      stamp(spark, s, m, tombN, tombXor)
+      val t = tombs(spark, s)
+      stamp(spark, s, m, t.validN, t.xor)
     }
 
   /** Best-effort: a failed, torn or garbled token write degrades to a
@@ -356,8 +397,9 @@ object StoreKernel {
 
   private[graft] def tombDirOf(dir: String): String = s"$dir/tombstones"
 
-  /** Tombstone rows, None when the sidecar is absent or holds no data
-    * files (driver-side probe). */
+  /** Tombstone rows as a Spark frame, None when the sidecar is absent
+    * or holds no data files (driver-side probe). The lifecycle itself
+    * reads the sidecar with [[tombs]]. */
   def tombstoneFrame(spark: SparkSession, dir: String): Option[DataFrame] = {
     val root = tombDirOf(dir)
     val (fs, p) = graft.Scratch.fs(spark, root)
@@ -369,22 +411,68 @@ object StoreKernel {
     if (!hasData) None else Some(readStore(spark, root))
   }
 
-  /** (rows, valid rows, xor of valid rowfps) of the sidecar — the fold
-    * terms of every tombstone-aware validation: the corpus reads meta.n
-    * minus the valid rows and meta.fp xor their rowfps. `valid` selects
-    * the tombstones of rows the identity ever counted (the ANN store's
-    * `valid` column: invalid-norm rows were never fingerprinted). One
-    * small-table agg; (0,0,0) without a sidecar (driver-side probe
-    * only). */
-  def tombAggregates(spark: SparkSession, dir: String,
-      valid: Column = lit(true)): (Long, Long, Long) =
-    tombstoneFrame(spark, dir) match {
-      case None => (0L, 0L, 0L)
-      case Some(t) =>
-        val r = t.agg(count(lit(1)), count(when(valid, lit(1))),
-          bit_xor(when(valid, col("rowfp")))).head()
-        (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
+  /** A store's tombstone sidecar as read on the driver by [[tombs]]:
+    * its rows, its valid rows and the xor of their non-null rowfps —
+    * the fold terms of every tombstone-aware validation (the corpus
+    * reads meta.n minus the valid rows and meta.fp xor their rowfps) —
+    * and the distinct non-null tombstoned keys. The keys are held on
+    * the driver and applied as a predicate on `key` ([[hit]], [[drop]],
+    * [[pending]]): no consumer joins the sidecar or re-`distinct`s it
+    * through a shuffle. The sidecar is bounded by the fold cadence, the
+    * same memory bound the broadcast anti-join of the sidecar had (a
+    * broadcast is collected on the driver too); the predicate travels
+    * with each task of the plans that apply it. */
+  final case class Tombs(rows: Long, validN: Long, xor: Long, key: String,
+      ids: Seq[Any]) {
+    def isEmpty: Boolean = rows == 0
+
+    /** Is a row's `key` tombstoned? A null key is not — as in a join. */
+    def hit: Column =
+      if (ids.isEmpty) lit(false) else col(key).isin(ids: _*)
+
+    /** `d` minus its tombstoned rows: `d` left-anti-joined on `key`. */
+    def drop(d: DataFrame): DataFrame =
+      if (ids.isEmpty) d else d.filter(col(key).isNull || !hit)
+
+    /** `d`'s tombstoned rows: `d` left-semi-joined on `key`. */
+    def pending(d: DataFrame): DataFrame = d.filter(hit)
+  }
+
+  /** The sidecar under `dir` read on the driver, no Spark job: the
+    * footer schema of its first data file ([[readStore]]'s), then the
+    * `key`, `rowfp` and `valid` columns of every data file by Spark's
+    * own parquet reader ([[GraftFooterSchema.rows]], one reader for all
+    * files). `valid`: the boolean column selecting the tombstones of
+    * rows the identity ever counted (the ANN store's: invalid-norm rows
+    * were never fingerprinted); None counts every row. The aggregates
+    * equal `count(1)`, `count(when(valid, 1))` and `bit_xor(when(valid,
+    * rowfp))` over the sidecar. No sidecar or no data file: empty. */
+  def tombs(spark: SparkSession, dir: String, key: String,
+      valid: Option[String]): Tombs = {
+    val files = dataFiles(leafFiles(spark, Seq(tombDirOf(dir))))
+    val schema = files.headOption.flatMap(GraftFooterSchema.read(spark, _))
+    val empty = Tombs(0L, 0L, 0L, key, Nil)
+    schema.fold(empty) { sc =>
+      val read = StructType((key +: "rowfp" +: valid.toSeq)
+        .map(f => sc(f).copy(nullable = true)))
+      val toKey = CatalystTypeConverters.createToScalaConverter(read(0).dataType)
+      var rows, validN, xor = 0L
+      val ids = scala.collection.mutable.LinkedHashSet.empty[Any]
+      GraftFooterSchema.rows(spark, files, read).foreach { r =>
+        rows += 1
+        if (!r.isNullAt(0)) ids += toKey(r.get(0, read(0).dataType))
+        if (valid.isEmpty || (!r.isNullAt(2) && r.getBoolean(2))) {
+          validN += 1
+          if (!r.isNullAt(1)) xor ^= r.getLong(1)
+        }
+      }
+      Tombs(rows, validN, xor, key, ids.toSeq)
     }
+  }
+
+  /** `s`'s sidecar ([[tombs]] under its key and valid column). */
+  def tombs(spark: SparkSession, s: Store[_ <: StoreMeta]): Tombs =
+    tombs(spark, s.dir, s.key, s.valid)
 
   def clearTombstones(spark: SparkSession, dir: String): Unit = {
     val (fs, p) = graft.Scratch.fs(spark, tombDirOf(dir))
@@ -393,19 +481,19 @@ object StoreKernel {
 
   // --- corpus rewrite --------------------------------------------------------
 
-  private def readTable(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(Generations.resolve(spark, table))
+  private def readCorpus(spark: SparkSession, table: String): DataFrame =
+    readTable(spark, Generations.resolve(spark, table))
 
-  /** Rewrite `table` minus `ids` through a retained-generation commit —
+  /** Rewrite `table` to `drop(table)` — the table minus the rows a
+    * delete removes — through a retained-generation commit:
     * crash-atomic (a crash leaves either the old or the new table
     * complete, never a half-rewrite). Refuses to EMPTY the table: a
     * zero-row parquet write emits no schema-bearing part files and
     * every later read of the corpus would throw — deleting an entire
     * corpus is "remove the table and its index", not a delete batch. */
-  def rewriteTableMinus(spark: SparkSession, table: String, ids: DataFrame,
-      key: String): Unit = {
-    val survivors = readTable(spark, table)
-      .join(ids.select(col(key)).hint("broadcast"), Seq(key), "left_anti")
+  def rewriteTableMinus(spark: SparkSession, table: String,
+      drop: DataFrame => DataFrame): Unit = {
+    val survivors = drop(readCorpus(spark, table))
     require(!survivors.isEmpty,
       s"delete batch would remove EVERY row of $table — deleting a " +
         "whole corpus is table+index removal, not a delete batch")
@@ -419,7 +507,8 @@ object StoreKernel {
   }
 
   /** Drop EVERY tombstoned id still in `s`'s corpus — a delete batch's
-    * and any crashed predecessor's — probing the `corpus` frame the
+    * and any crashed predecessor's, `t` being the sidecar read after
+    * the batch's tombstones landed — probing the `corpus` frame the
     * caller read. A delete gets the pending row count back;
     * [[ensure]]'s crashed-delete `heal` only probes for emptiness (1
     * when rows were pending, else 0). The rewrite holds the CORPUS-DIR
@@ -434,29 +523,25 @@ object StoreKernel {
     * removed the ids — no O(corpus) no-op swap that churns every
     * token). */
   def dropTombstoned(spark: SparkSession, s: Store[_ <: StoreMeta],
-      corpus: DataFrame, heal: Boolean): Long =
-    tombstoneFrame(spark, s.dir) match {
-      case None => 0L
-      case Some(t) =>
-        val tids = t.select(col(s.key)).distinct()
-        def pending(c: DataFrame): DataFrame =
-          c.join(tids.hint("broadcast"), Seq(s.key), "left_semi")
-        val pendingN =
-          if (!heal) pending(corpus).count()
-          else if (pending(corpus).isEmpty) 0L
-          else 1L
-        if (pendingN > 0) {
-          if (heal) System.err.println(s"[${s.tag}] completing a crashed " +
-            s"delete's corpus rewrite at ${s.corpusDir}")
-          WriterLease.withWrite(spark, s.corpusDir,
-              if (heal) "delete-heal" else "corpus-rewrite") {
-            WriterLease.verify(spark, s.dir)
-            val still = pending(readTable(spark, s.corpus))
-            if (if (heal) !still.isEmpty else still.limit(1).count() > 0)
-              rewriteTableMinus(spark, s.corpus, tids, s.key)
-          }
+      corpus: DataFrame, t: Tombs, heal: Boolean): Long =
+    if (t.isEmpty) 0L
+    else {
+      val pendingN =
+        if (!heal) t.pending(corpus).count()
+        else if (t.pending(corpus).isEmpty) 0L
+        else 1L
+      if (pendingN > 0) {
+        if (heal) System.err.println(s"[${s.tag}] completing a crashed " +
+          s"delete's corpus rewrite at ${s.corpusDir}")
+        WriterLease.withWrite(spark, s.corpusDir,
+            if (heal) "delete-heal" else "corpus-rewrite") {
+          WriterLease.verify(spark, s.dir)
+          val still = t.pending(readCorpus(spark, s.corpus))
+          if (if (heal) !still.isEmpty else still.limit(1).count() > 0)
+            rewriteTableMinus(spark, s.corpus, t.drop)
         }
-        pendingN
+      }
+      pendingN
     }
 
   // --- build promote ---------------------------------------------------------
@@ -527,13 +612,14 @@ object StoreKernel {
           readMeta[M](spark, s.dir, s.tag) match {
             case None => build(None)
             case Some(m) =>
-              val (tombRows, tombN, tombXor) =
-                tombAggregates(spark, s.dir, s.valid)
+              // the sidecar read on the driver, once: its fold terms and
+              // the keys the heal probes
+              val t = tombs(spark, s)
+              val tombN = t.validN
               def healAndScan(): (Long, Long) = {
-                val corpus = readTable(spark, s.corpus)
-                val healed = tombRows > 0 &&
-                  dropTombstoned(spark, s, corpus, heal = true) > 0
-                identity(if (healed) readTable(spark, s.corpus) else corpus)
+                val corpus = readCorpus(spark, s.corpus)
+                val healed = dropTombstoned(spark, s, corpus, t, heal = true) > 0
+                identity(if (healed) readCorpus(spark, s.corpus) else corpus)
               }
               // `intact` reads only store tables, which neither the heal
               // (a corpus rewrite) nor the scan touches: it runs beside
@@ -547,15 +633,14 @@ object StoreKernel {
               val (n, fp) =
                 intactT.fold(healAndScan())(_.guarded(healAndScan()))
               val isIntact = intactT.exists(_())
-              if (ok && m.n - tombN == n && (m.fp ^ tombXor) == fp &&
+              if (ok && m.n - tombN == n && (m.fp ^ t.xor) == fp &&
                   isIntact) {
                 // validation scans only READ — but the heal above may
                 // have rewritten the corpus, so re-digest when
                 // tombstones are present (rare path; the digest is
                 // driver-side listing work)
                 writeToken(spark, s, tokenLine(
-                  if (tombRows > 0) digest(spark, s) else d, m, tombN,
-                  tombXor))
+                  if (t.isEmpty) d else digest(spark, s), m, tombN, t.xor))
                 serve(m, tombN)
               } else build(Some((n, fp)))
           }

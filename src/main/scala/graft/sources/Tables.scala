@@ -15,8 +15,10 @@ object Tables {
     if (name == "events") events(spark, sfDir)
     // generation-resolved (identity for never-swapped tables): a
     // corpus table that retention/compaction has rewritten serves its
-    // newest committed generation — see [[Generations]]
-    else spark.read.parquet(
+    // newest committed generation — see [[Generations]]. Its schema is
+    // read from the footer Spark's inference would read, on the driver
+    // (no Spark job — see StoreKernel.readTable)
+    else StoreKernel.readTable(spark,
       Generations.resolve(spark, s"$sfDir/$name.parquet"))
 
   /** The events table carries a parquet TIMESTAMP(NANOS) column, which

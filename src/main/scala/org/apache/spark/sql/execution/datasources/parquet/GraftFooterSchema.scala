@@ -40,20 +40,24 @@ object GraftFooterSchema {
     ParquetFileFormat.readSchema(Seq(new Footer(file.getPath, footer)), spark)
   }
 
-  /** Every row of `file` under `schema`, read on the driver by the
-    * reader a scan task builds (`buildReaderWithPartitionValues`, row
-    * at a time): the values a `spark.read` of the file returns, without
-    * a Spark job. Materialized (rows copied, the reader drained and so
-    * closed) — for the stores' one-row tables, never bulk data. */
-  def rows(spark: SparkSession, file: FileStatus,
-      schema: StructType): Seq[InternalRow] = {
+  /** Every row of `files` under `schema`, file by file, read on the
+    * driver by the reader a scan task builds
+    * (`buildReaderWithPartitionValues`, row at a time, built once for
+    * all files): the values a `spark.read` of the files returns, without
+    * a Spark job. Each file is materialized when reached (rows copied,
+    * its reader drained and so closed) — for the stores' small tables
+    * (a one-row meta, a tombstone sidecar), never bulk data. */
+  def rows(spark: SparkSession, files: Seq[FileStatus],
+      schema: StructType): Iterator[InternalRow] = {
     val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
       spark, schema, new StructType(), schema, Nil,
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       new Configuration(spark.sparkContext.hadoopConfiguration))
-    reader(PartitionedFile(InternalRow.empty,
-        SparkPath.fromPath(file.getPath), 0L, file.getLen,
-        fileSize = file.getLen))
-      .map(_.copy()).toList
+    files.iterator.flatMap { file =>
+      reader(PartitionedFile(InternalRow.empty,
+          SparkPath.fromPath(file.getPath), 0L, file.getLen,
+          fileSize = file.getLen))
+        .map(_.copy()).toList
+    }
   }
 }

@@ -571,11 +571,11 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("serve job counts on a warm store: the token-path ensure runs 0 " +
-    "jobs, building a query frame runs exactly 1 (the corpus schema " +
-    "read) — every store table is planned without a job") {
-    // pins the planning cost of a serve: any store-table read that
-    // falls back to Spark's schema inference (one job per table) or a
-    // second corpus read shows up here as an extra job
+    "jobs, building a query frame runs 0 — the corpus and every store " +
+    "table are planned without a job") {
+    // pins the planning cost of a serve: any table read that falls back
+    // to Spark's schema inference (one job per table) or a sidecar read
+    // through Spark shows up here as a job
     val all = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val corpus = writeCorpus(all.filter(col("vec_id") < 300))
     val idxDir = IndexStore.dirFor(spark, corpus)
@@ -583,8 +583,8 @@ class IndexStoreSpec extends SparkSpec {
       var info = IndexStore.ensure(spark, corpus)
       assert(info.builtNow)
       assert(jobsDuring { info = IndexStore.ensure(spark, corpus) } === 0)
-      assert(jobsDuring { IndexStore.queryIvfPq(spark, corpus, info) } === 1)
-      assert(jobsDuring { IndexStore.queryIvfPqRes(spark, corpus, info) } === 1)
+      assert(jobsDuring { IndexStore.queryIvfPq(spark, corpus, info) } === 0)
+      assert(jobsDuring { IndexStore.queryIvfPqRes(spark, corpus, info) } === 0)
       // the same with a delta buffer and a tombstone sidecar to read
       val batch = all.filter(col("vec_id") >= 300 && col("vec_id") < 320)
       IndexStore.appendBatch(spark, idxDir, batch)
@@ -601,8 +601,8 @@ class IndexStoreSpec extends SparkSpec {
       assert(jobsDuring {
         info = IndexStore.ensure(spark, corpus, policy) } === 0)
       assert(!info.builtNow)
-      assert(jobsDuring { IndexStore.queryIvfPq(spark, corpus, info) } === 1)
-      assert(jobsDuring { IndexStore.queryIvfPqRes(spark, corpus, info) } === 1)
+      assert(jobsDuring { IndexStore.queryIvfPq(spark, corpus, info) } === 0)
+      assert(jobsDuring { IndexStore.queryIvfPqRes(spark, corpus, info) } === 0)
     } finally {
       deleteDir(idxDir)
       deleteDir(corpus)
@@ -660,8 +660,9 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("a policied ensure that validates and then compacts runs at most " +
-    "23 jobs: zero-job meta reads, the integrity probe beside the corpus " +
-    "scan, both codes tables written at once") {
+    "12 jobs: zero-job meta, sidecar and corpus-schema reads, the " +
+    "integrity probe beside the corpus scan, both codes tables written " +
+    "at once") {
     // the compacting serve of the store benchmark, on a small corpus:
     // a delta batch to fold, tombstones at the policy threshold, and a
     // corpus rewrite that moved the token's digest (full validation)
@@ -684,9 +685,48 @@ class IndexStoreSpec extends SparkSpec {
       assert(graft.sources.Generations.resolve(spark, s"$idxDir/codes") != gen,
         "the policy did not compact")
       assert(graft.sources.StoreKernel.tombstoneFrame(spark, idxDir).isEmpty)
-      assert(jobs <= 23, s"$jobs jobs")
+      assert(jobs <= 12, s"$jobs jobs")
       // folded and re-stamped: the next policied ensure takes the token
       assert(jobsDuring { IndexStore.ensure(spark, corpus, policy) } === 0)
+    } finally {
+      deleteDir(idxDir)
+      deleteDir(corpus)
+    }
+  }
+
+  test("store request job budget: a 20-id deleteBatch runs at most 14 " +
+    "jobs, the sidecar read and infoFromMeta under pending tombstones run " +
+    "0, and a warm fast-path q69 serve runs at most 10") {
+    val all = graft.sources.Tables.load(spark, sfDir, "embeddings")
+    val corpus = writeCorpus(all.filter(col("vec_id") < 300))
+    val idxDir = IndexStore.dirFor(spark, corpus)
+    try {
+      assert(IndexStore.ensure(spark, corpus).builtNow)
+      val kills = (100L until 120L)
+      val delJobs = jobsDuring {
+        IndexStore.deleteBatch(spark, corpus, kills.toDF("vec_id"))
+      }
+      var tombs: graft.sources.StoreKernel.Tombs = null
+      var meta: Option[IndexStore.BuildInfo] = None
+      assert(jobsDuring {
+        tombs = IndexStore.tombsOf(spark, idxDir)
+        meta = IndexStore.infoFromMeta(spark, corpus)
+      } === 0, "a sidecar read ran a Spark job")
+      assert(tombs.validN === 20 && tombs.ids.toSet === kills.toSet)
+      assert(meta.map(_.n) === Some(280L))
+      // the first ensure after the delete validates; the next is warm
+      assert(!IndexStore.ensure(spark, corpus).builtNow)
+      var got = Seq.empty[(Long, Long)]
+      val serveJobs = jobsDuring {
+        got = IndexStore.queryIvfPq(spark, corpus,
+            IndexStore.ensure(spark, corpus))
+          .select(col("query_id"), col("neighbor_id"))
+          .as[(Long, Long)].collect().toSeq
+      }
+      assert(got.size === Similarity.knnQueries * Similarity.k)
+      assert(!got.exists(p => kills.contains(p._2)), "served a deleted id")
+      assert(delJobs <= 14, s"$delJobs jobs")
+      assert(serveJobs <= 10, s"$serveJobs jobs")
     } finally {
       deleteDir(idxDir)
       deleteDir(corpus)
@@ -802,11 +842,7 @@ class IndexStoreSpec extends SparkSpec {
       graft.sources.GenScanGate.reset()
       val scan = IndexStore.withDeltaOf(spark, idxDir, "codes")(identity)
         .select(col("vec_id")).as[Long]
-        .mapPartitions { it =>
-          graft.sources.GenScanGate.started.countDown()
-          graft.sources.GenScanGate.proceed.await(60, TimeUnit.SECONDS)
-          it
-        }
+        .mapPartitions { it => graft.sources.GenScanGate.hold(); it }
       val fut = scala.concurrent.Future {
         scan.count()
       }(scala.concurrent.ExecutionContext.global)
@@ -814,6 +850,8 @@ class IndexStoreSpec extends SparkSpec {
         .await(60, TimeUnit.SECONDS), "scan never started")
       val (before, after) =
         graft.sources.Maintenance.compactAnnIndex(spark, idxDir)
+      assert(graft.sources.GenScanGate.stillShut(fut),
+        "the fold ran only after the gate released the scan")
       assert(after < before)
       graft.sources.GenScanGate.proceed.countDown()
       val got = scala.concurrent.Await.result(fut,

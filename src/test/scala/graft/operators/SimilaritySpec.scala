@@ -244,4 +244,22 @@ class SimilaritySpec extends SparkSpec {
     assert(pq.filter(col("neighbor_id") >= 999998L).isEmpty)
     assert(pq.filter(isnan(col("cosine"))).isEmpty)
   }
+
+  test("rerankTopK returns one partition ordered by (query_id, rank) " +
+    "and plans no range exchange") {
+    import Similarity.{emb, k, knnQueries, rerankTopK}
+    val e = emb(spark, sfDir)
+    val q = e.filter(col("vec_id") < knnQueries)
+      .select(col("vec_id").as("query_id"))
+    val cand = q.crossJoin(e.select(col("vec_id").as("neighbor_id")))
+      .filter(col("query_id") =!= col("neighbor_id"))
+    val out = rerankTopK(e, cand)
+    val got = out.collect().toSeq
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")))
+    assert(got.nonEmpty && got === got.sorted)
+    assert(got.size === got.map(_._1).distinct.size * k)
+    assert(out.rdd.getNumPartitions === 1)
+    val plan = out.queryExecution.executedPlan.toString.toLowerCase
+    assert(!plan.contains("rangepartitioning"), plan)
+  }
 }

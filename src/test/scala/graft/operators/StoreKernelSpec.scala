@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -190,6 +190,113 @@ class StoreKernelSpec extends SparkSpec {
         assert(got.getClass === want.getClass, p)
         assert(got.getMessage === want.getMessage, p)
       }
+    } finally deleteDir(root)
+  }
+
+  test("the tombstone sidecar read on the driver gives the Spark " +
+    "aggregate's fold terms and distinct keys with zero jobs, over 200 " +
+    "batch files with invalid, null-valid and null-rowfp rows") {
+    val dir = tempDir("kernel_tombs")
+    // 1000 rows in 200 files (one per delete batch, as deleteBatch
+    // appends them), keys repeating across files, every null class
+    spark.range(1000).select(
+        when(col("id") % 97 === 0, lit(null)).otherwise(col("id") % 400)
+          .as("vec_id"),
+        when(col("id") % 11 === 0, lit(null))
+          .otherwise(xxhash64(col("id"))).as("rowfp"),
+        when(col("id") % 13 === 0, lit(null))
+          .otherwise(col("id") % 5 =!= 0).as("valid"),
+        (col("id") % 16).cast("int").as("cell"))
+      .repartition(200).write.parquet(StoreKernel.tombDirOf(dir))
+    try {
+      val sidecar = spark.read.parquet(StoreKernel.tombDirOf(dir))
+      assert(sidecar.inputFiles.length === 200)
+      def sparkAgg(valid: Column): (Long, Long, Long) = {
+        val r = sidecar.agg(count(lit(1)), count(when(valid, lit(1))),
+          bit_xor(when(valid, col("rowfp")))).head()
+        (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
+      }
+      import spark.implicits._
+      val keys = sidecar.select(col("vec_id")).distinct()
+        .filter(col("vec_id").isNotNull).as[Long].collect().toSet
+      var ann, lex: StoreKernel.Tombs = null
+      assert(jobsDuring {
+        ann = StoreKernel.tombs(spark, dir, "vec_id", Some("valid"))
+      } === 0, "the sidecar read ran a Spark job")
+      val t0 = System.nanoTime()
+      assert(jobsDuring {
+        lex = StoreKernel.tombs(spark, dir, "vec_id", None)
+      } === 0)
+      // jobsDuring settles for 0.5 s after its body
+      info(f"driver read: ${((System.nanoTime() - t0) / 1e6 - 500) / 200}%.2f" +
+        " ms per sidecar file")
+      assert((ann.rows, ann.validN, ann.xor) === sparkAgg(col("valid")))
+      assert((lex.rows, lex.validN, lex.xor) === sparkAgg(lit(true)))
+      assert(ann.validN < ann.rows && ann.xor != lex.xor)
+      assert(ann.ids.toSet === keys && ann.ids.size === keys.size)
+      // the key predicates are the anti- and semi-join, nulls included
+      val probe = spark.range(-5, 450).select(
+        when(col("id") < 0, lit(null)).otherwise(col("id")).as("vec_id"))
+      val keyFrame = sidecar.select(col("vec_id"))
+      assert(sortedRows(ann.drop(probe)) ===
+        sortedRows(probe.join(keyFrame, Seq("vec_id"), "left_anti")))
+      assert(sortedRows(ann.pending(probe)) ===
+        sortedRows(probe.join(keyFrame, Seq("vec_id"), "left_semi")))
+      // no sidecar: empty, and every frame passes through
+      val none = StoreKernel.tombs(spark, tempDir("kernel_no_tombs"),
+        "vec_id", Some("valid"))
+      assert(none.isEmpty && none.ids.isEmpty && (none.drop(probe) eq probe))
+    } finally deleteDir(dir)
+  }
+
+  test("readTable takes a user table's schema from the footer Spark's " +
+    "inference reads, with zero jobs, and falls back to the plain read " +
+    "for a summary file or schema merging") {
+    val root = tempDir("kernel_user_read")
+    val (fs, _) = graft.Scratch.fs(spark, root)
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    def firstPart(dir: String) = graft.Scratch.walkFiles(fs, path(dir))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .minBy(_.toString)
+    // a directory table, a partitioned one and two schemas to merge
+    val emb = Tables.load(spark, sfDir, "embeddings")
+    emb.repartition(3).write.parquet(s"$root/dir")
+    emb.withColumn("k", col("vec_id") % 2).write.partitionBy("k")
+      .parquet(s"$root/parts")
+    spark.range(5).write.parquet(s"$root/merge/a=1")
+    spark.range(5).withColumn("extra", lit("x"))
+      .write.parquet(s"$root/merge/a=2")
+    // a summary whose schema is not the data files' (Spark reads it)
+    emb.limit(3).withColumn("only_in_summary", lit(1.5))
+      .coalesce(1).write.parquet(s"$root/other")
+    spark.range(5).coalesce(1).write.parquet(s"$root/summ")
+    fs.copyToLocalFile(firstPart(s"$root/other"),
+      path(s"$root/summ/_common_metadata"))
+    try {
+      // the testdata layout: one parquet FILE per table
+      val plainCases = Tables.all.filterNot(_ == "events")
+        .map(t => s"$sfDir/$t.parquet") ++
+        Seq(s"$root/dir", s"$root/parts")
+      var frames: Seq[DataFrame] = Nil
+      assert(jobsDuring {
+        frames = plainCases.map(StoreKernel.readTable(spark, _))
+      } === 0, "building a user-table frame ran a Spark job")
+      plainCases.zip(frames).foreach { case (p, got) =>
+        assert(got.schema === spark.read.parquet(p).schema, p)
+      }
+      assert(sortedRows(frames.last) ===
+        sortedRows(spark.read.parquet(s"$root/parts")))
+      val summ = StoreKernel.readTable(spark, s"$root/summ")
+      assert(summ.schema === spark.read.parquet(s"$root/summ").schema)
+      assert(summ.schema.fieldNames.contains("only_in_summary"))
+      spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+      try {
+        val merged = spark.read.parquet(s"$root/merge").schema
+        assert(merged.fieldNames.contains("extra"))
+        assert(StoreKernel.readTable(spark, s"$root/merge").schema === merged)
+      } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+      assert(StoreKernel.readTable(spark, s"$root/merge").schema ===
+        spark.read.parquet(s"$root/merge").schema)
     } finally deleteDir(root)
   }
 }

@@ -9,14 +9,32 @@ import graft.SparkSpec
 
 /** Cross-task gate for the mid-scan tests: local[N] executors share the
   * JVM, so static latches coordinate a scan task with the driver-side
-  * rewrite. One instance per test (reset). */
+  * rewrite. One instance per test (reset). Only the scan's first
+  * partition is held: the other tasks finish and free their cores, so
+  * the rewrite's own jobs run while the held task still has to open
+  * the files it planned. */
 object GenScanGate {
   @volatile var started: CountDownLatch = _
   @volatile var proceed: CountDownLatch = _
+  @volatile var timedOut = false
   def reset(): Unit = {
     started = new CountDownLatch(1)
     proceed = new CountDownLatch(1)
+    timedOut = false
   }
+
+  /** Called at the start of each scan task: partition 0 waits for
+    * `proceed` (60 s at most, recorded in `timedOut`). */
+  def hold(): Unit =
+    if (org.apache.spark.TaskContext.getPartitionId() == 0) {
+      started.countDown()
+      if (!proceed.await(60, TimeUnit.SECONDS)) timedOut = true
+    }
+
+  /** Did the maintenance call that just returned run while the held
+    * task was still waiting, i.e. does the scan straddle its commit? */
+  def stillShut(scan: scala.concurrent.Future[_]): Boolean =
+    !timedOut && !scan.isCompleted
 }
 
 class GenerationsSpec extends SparkSpec {
@@ -115,11 +133,7 @@ class GenerationsSpec extends SparkSpec {
     GenScanGate.reset()
     val scan = spark.read.parquet(Generations.resolve(spark, dir))
       .select(col("id")).as[Long]
-      .mapPartitions { it =>
-        GenScanGate.started.countDown()
-        GenScanGate.proceed.await(60, TimeUnit.SECONDS)
-        it
-      }
+      .mapPartitions { it => GenScanGate.hold(); it }
     val fut = scala.concurrent.Future {
       scan.reduce(_ + _)
     }(scala.concurrent.ExecutionContext.global)
@@ -127,6 +141,8 @@ class GenerationsSpec extends SparkSpec {
       "scan never started")
     // the rewrite lands mid-scan; default TTL retains the scanned files
     val (before, after) = Maintenance.compact(spark, dir, 1000)
+    assert(GenScanGate.stillShut(fut),
+      "the compaction ran only after the gate released the scan")
     assert(before === 8 && after === 1)
     assert(Generations.resolve(spark, dir).endsWith("/_gen_1"))
     GenScanGate.proceed.countDown()
@@ -239,17 +255,15 @@ class GenerationsSpec extends SparkSpec {
     val scan = spark.read
       .parquet(Generations.resolve(spark, docsTable))
       .select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        GenScanGate.started.countDown()
-        GenScanGate.proceed.await(60, TimeUnit.SECONDS)
-        it
-      }
+      .mapPartitions { it => GenScanGate.hold(); it }
     val fut = scala.concurrent.Future {
       scan.collect().sorted
     }(scala.concurrent.ExecutionContext.global)
     assert(GenScanGate.started.await(60, TimeUnit.SECONDS))
     val st = graft.operators.Retention.forget(spark, corpus,
       docIds = Some(spark.range(50).select(col("id").as("doc_id"))))
+    assert(GenScanGate.stillShut(fut),
+      "the forget ran only after the gate released the scan")
     assert(st.docsRemovedFromCorpus === 50)
     GenScanGate.proceed.countDown()
     val got = scala.concurrent.Await.result(fut,
