@@ -5,18 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{Maintenance, StoreKernel, StoreMeta, Tables}
 
-/** [[IndexStore.appendBatch]]'s refusal of a batch that re-adds a
-  * TOMBSTONED (deleted, not yet folded) vec_id. Its prescribed
-  * recovery differs from every other refusal — the FOLD
-  * ([[graft.sources.Maintenance.compactAnnIndex]]), not an ensure()
-  * that would validate the refusing state and hand a retry the same
-  * refusal forever — so the streaming sinks dispatch on this TYPE;
-  * a message-substring dispatch broke silently on any rewording
-  * (review r17). Extends IllegalStateException so existing catch
-  * clauses keep working. */
-final class TombstonedReAddException(msg: String)
-  extends IllegalStateException(msg)
-
 /** One row of `<indexDir>/meta` — corpus identity + the dial values
   * the persisted artifacts were built under (see
   * [[IndexStore.ensure]]'s freshness contract). Top-level, not nested
@@ -213,38 +201,37 @@ object IndexStore {
 
   // --- corpus identity -------------------------------------------------------
 
-  /** (indexable row count, xor fingerprint) in ONE corpus scan.
-    * Indexable = [[Similarity.validNorm]] (positive AND finite norm),
-    * the same rows q65/q68 train on and the same
-    * rows [[appendBatch]] appends — zero/NaN/Inf-norm rows are
-    * invisible to the index and so must be invisible to its
-    * fingerprint, or a
-    * replayed append containing one would xor it in twice (= out).
-    * xor, not sum: order-independent, overflow-free under ANSI, and
-    * incrementally maintainable (fp_new = fp_old ⊕ fp_batch). */
-  private def countAndFingerprint(raw: DataFrame): (Long, Long) = {
+  /** `raw`'s vec_id and embedding with the columns
+    * [[Similarity.validNorm]] reads: `v` (the embedding as doubles) and
+    * its norm `nrm`. */
+  private def normed(raw: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.dotD
     val v = col("embedding").cast("array<double>")
-    // v is selected because validNorm's r19 length guard reads it
-    val r = raw.select(col("vec_id"), col("embedding"), v.as("v"),
-        sqrt(dotD(v, v)).as("nrm"))
-      .filter(Similarity.validNorm)
-      .agg(count(lit(1)), expr("bit_xor(xxhash64(vec_id, embedding))"),
-        countDistinct(col("vec_id")))
-      .head()
-    // vec_id is the index key — refuse a duplicate-keyed corpus loudly
-    // (same discipline as appendBatch). Silently proceeding would set
-    // meta.n to the ROW count while codes hold DISTINCT ids, failing
-    // the integrity probe's count leg on every ensure: an infinite
-    // silent rebuild loop instead of one actionable error. (Identical
-    // duplicate rows also xor-cancel OUT of the fingerprint, so the
-    // fingerprint alone cannot see them.)
-    require(r.getLong(2) == r.getLong(0),
-      s"embeddings corpus contains ${r.getLong(0) - r.getLong(2)} " +
-        "duplicate vec_id rows — vec_id is the index key; deduplicate " +
-        "the corpus before indexing")
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    raw.select(col("vec_id"), col("embedding"), v.as("v"),
+      sqrt(dotD(v, v)).as("nrm"))
   }
+
+  /** The indexable rows of `raw` — the one definition: [[normed]]
+    * filtered by [[Similarity.validNorm]] (positive, finite norm, full
+    * length), the rows q65/q68 train on, [[countAndFingerprint]]
+    * counts, [[appendBatch]] and [[IngestScreen.appendLists]] append
+    * and a delete's tombstone marks `valid`. Zero/NaN/Inf-norm and
+    * short rows are invisible to the index and so must be invisible to
+    * its fingerprint, or a replayed append containing one would xor it
+    * in twice (= out). */
+  private[operators] def indexable(raw: DataFrame): DataFrame =
+    normed(raw).filter(Similarity.validNorm)
+
+  /** (indexable row count, xor fingerprint) in ONE corpus scan. A
+    * duplicate-keyed corpus is refused loudly (same discipline as
+    * appendBatch): proceeding would set meta.n to the ROW count while
+    * codes hold DISTINCT ids, failing the integrity probe's count leg
+    * on every ensure — an infinite silent rebuild loop instead of one
+    * actionable error. */
+  private def countAndFingerprint(raw: DataFrame): (Long, Long) =
+    StoreKernel.keyedFingerprint(indexable(raw), "vec_id", "embedding")(
+      d => s"embeddings corpus contains $d duplicate vec_id rows — " +
+        "vec_id is the index key; deduplicate the corpus before indexing")
 
   // --- meta ------------------------------------------------------------------
 
@@ -500,56 +487,37 @@ object IndexStore {
       serve = (m, tombN) => (BuildInfo(dir, m.n - tombN, m.nl,
         builtNow = false, buildSec = 0.0), tombN),
       build = known => (build(spark, sfDir, dir, knownIdentity = known), 0L))
-    // layout-policy compaction AFTER the monitor releases, so the
-    // compaction path takes lease → monitor like every other public
-    // mutator (compactAnnIndex's own order). Running it inside
-    // serve() under the monitor inverted that order against a
-    // concurrent direct compactAnnIndex (lease held, blocked on the
-    // monitor) — a bounded ABBA stall that threw LeaseHeldException
-    // out of a SERVE path after waitMs. Content-preserving either
-    // way, so info (computed pre-compaction) stays valid: effective
-    // n, nl and the dir don't move.
+    // layout-policy compaction AFTER the monitor releases
+    // (StoreKernel.compactWhenDue). Content-preserving, so info
+    // (computed pre-compaction) stays valid: effective n, nl and the
+    // dir don't move.
     if (!info.builtNow)
       compactIfPolicied(spark, sfDir, info.dir, policy, pending)
     info
   }
 
   /** [[RebuildPolicy.compactAtFilesPerCell]] + [[RebuildPolicy
-    * .foldAtTombstones]] enforcement: glob the two codes tables'
-    * `cell=` dirs / read the tombstone sidecar (driver-side, no Spark
-    * job) and run [[graft.sources.Maintenance
-    * .compactAnnIndex]] at a threshold, then re-stamp the token (the
-    * rewrite is content-preserving — only layout moves and tombstones
-    * fold — and the index was JUST validated by the caller).
-    *
-    * Called OUTSIDE the store monitor: the compaction takes lease →
-    * monitor (compactAnnIndex's own order, re-entered per thread), so
-    * this never inverts against a concurrent direct compactAnnIndex.
-    * The trigger is probed twice — once unguarded (cheap, skips the
-    * lease entirely on the quiet path) and again INSIDE the lease
-    * (a racing policied ensure may have just compacted; the rewrite
-    * must not run twice). The unguarded probe takes its pending
-    * tombstone count from `tombHint` — the valid tombN the ensure just
-    * validated or read from its token — instead of aggregating the
-    * sidecar again; a delete landing in between is seen by the next
-    * ensure. The in-lease probe reads the sidecar itself. */
+    * .foldAtTombstones]] enforcement through [[StoreKernel
+    * .compactWhenDue]]: glob the two codes tables' `cell=` dirs and
+    * count the pending tombstones (driver-side, no Spark job), and run
+    * [[graft.sources.Maintenance.compactAnnIndex]] at a threshold,
+    * re-stamping the token the ensure just vouched for. The cheap probe
+    * takes its pending count from `tombHint` — the valid tombN the
+    * ensure just validated or read from its token — instead of reading
+    * the sidecar again; a delete landing in between is seen by the next
+    * ensure. The in-lease re-probe reads the sidecar and hands it on to
+    * the compaction's id drop and meta fold: deleteBatch takes the same
+    * lease, so the sidecar cannot change in between. */
   private def compactIfPolicied(spark: SparkSession, sfDir: String,
       dir: String, policy: Option[RebuildPolicy], tombHint: Long): Unit = {
-    // LOCK-ORDER GUARD (ADVICE r16): this path takes lease → monitor.
-    // A caller that wraps a POLICIED ensure() in IndexStore
-    // .synchronized would enter here monitor-first and re-create the
-    // ABBA stall the post-monitor call site exists to avoid (a
-    // concurrent compactAnnIndex holds the lease and blocks on the
-    // monitor). No current monitor-holding caller passes a policy;
-    // refuse loudly if one ever does rather than deadlock-by-timeout.
-    require(policy.isEmpty || (!Thread.holdsLock(IndexStore) &&
-        !Thread.holdsLock(StoreKernel.monitorFor(dir))),
+    // the global monitor would be taken before the lease as well
+    require(policy.isEmpty || !Thread.holdsLock(IndexStore),
       "policied ensure()/compactIfPolicied must not be called while " +
-        "holding the IndexStore monitor (global or this store's) — " +
-        "lease-then-monitor is the required order (see compactAnnIndex)")
-    policy.filter(p => p.compactAtFilesPerCell < Int.MaxValue ||
-        p.foldAtTombstones < Long.MaxValue).foreach { p =>
-      def triggered(tombN: => Long): (Boolean, Long) = {
+        "holding the IndexStore monitor — lease-then-monitor is the " +
+        "required order (see StoreKernel.mutate)")
+    policy.foreach { p =>
+      // the pending tombstone count when a threshold is reached
+      def triggered(tombN: Long): Option[Long] = {
         val worst =
           if (p.compactAtFilesPerCell == Int.MaxValue) Nil
           else Seq("codes", "rcodes").flatMap { t =>
@@ -565,29 +533,23 @@ object IndexStore {
           }
         val pendingTombs =
           if (p.foldAtTombstones == Long.MaxValue) 0L else tombN
-        ((worst.nonEmpty && worst.max >= p.compactAtFilesPerCell) ||
-          pendingTombs >= p.foldAtTombstones, pendingTombs)
+        Option.when((worst.nonEmpty &&
+            worst.max >= p.compactAtFilesPerCell) ||
+          pendingTombs >= p.foldAtTombstones)(pendingTombs)
       }
-      if (triggered(tombHint)._1)
-        graft.sources.WriterLease.withWrite(spark, dir, "policy-compact") {
-          // tombstone-cadence axis: the sidecar read is handed on to
-          // the compaction's id drop and meta fold: deleteBatch takes
-          // this same lease, so the sidecar cannot change in between
-          val tombs = tombsOf(spark, dir)
-          val (go, pendingTombs) = triggered(tombs.validN)
-          if (go) {
-            val (before, after) =
-              Maintenance.compactAnnIndex(spark, dir, Some(tombs))
-            System.err.println(s"[annidx] policy compaction at $dir: " +
-              s"$before part files -> $after" +
-              (if (pendingTombs >= p.foldAtTombstones)
-                s" (folded $pendingTombs pending tombstones)" else ""))
-            // the compaction may have FOLDED tombstones (meta
-            // changed) — re-read meta and the (now empty) sidecar
-            // for the restamp rather than vouching for stale copies
-            StoreKernel.restamp(spark, kernelStore(sfDir, dir))
-          }
+      StoreKernel.compactWhenDue(spark, dir)(triggered(tombHint).nonEmpty) {
+        val tombs = tombsOf(spark, dir)
+        triggered(tombs.validN).map((tombs, _))
+      } { case (tombs, pendingTombs) =>
+        StoreKernel.preserving(spark, kernelStore(sfDir, dir)) {
+          val (before, after) =
+            Maintenance.compactAnnIndex(spark, dir, Some(tombs))
+          System.err.println(s"[annidx] policy compaction at $dir: " +
+            s"$before part files -> $after" +
+            (if (pendingTombs >= p.foldAtTombstones)
+              s" (folded $pendingTombs pending tombstones)" else ""))
         }
+      }
     }
   }
 
@@ -619,8 +581,7 @@ object IndexStore {
     * the pre-append centroids/codebooks (that amortization is the
     * point) and is gated by recall floors instead. */
   def appendedRows(spark: SparkSession, dir: String): Option[Long] =
-    try meta(spark, dir).map(_.appended_n)
-    catch { case scala.util.control.NonFatal(_) => None }
+    appendState(spark, dir).map(_._1)
 
   /** (appended_n, n) from meta. Verify's twin-exemption reads BOTH so
     * it can refuse an implausible self-report: legit state always has
@@ -666,21 +627,7 @@ object IndexStore {
     * replay) must keep the default, measured path. */
   def appendBatch(spark: SparkSession, dir: String,
       batch: DataFrame, corpusScreened: Boolean = false): AppendStats =
-    // lease OUTSIDE the monitor: a foreign holder's bounded wait must
-    // never block this JVM's readers (ensure/serve ride the monitor).
-    // PER-STORE monitor (StoreKernel.monitorFor): appends to different
-    // stores — the sharded ingest's K shard bodies — run concurrently
-    graft.sources.WriterLease.withWrite(spark, dir,
-        "append") { StoreKernel.monitorFor(dir).synchronized {
-    import graft.functions.VectorFunctions.dotD
-    // dev-only phase timer (-Dgraft.prof.append=true): stderr deltas
-    val profT = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    def prof(tag: String): Unit =
-      if (java.lang.Boolean.getBoolean("graft.prof.append")) {
-        val now = System.nanoTime()
-        System.err.println(
-          f"[appprof] $tag%-8s ${(now - profT.getAndSet(now)) / 1e9}%6.2f")
-      } else profT.set(System.nanoTime())
+    StoreKernel.mutate(spark, dir, "append") {
     val m = meta(spark, dir).getOrElse(throw new IllegalStateException(
       s"no index at $dir — build() before appendBatch()"))
     // the FULL dial/format guard, not just the version: encoding the
@@ -701,25 +648,10 @@ object IndexStore {
     require(m.n > 0,
       s"index at $dir was trained on an empty corpus (n=0) and has no " +
         "cells to assign into — run ensure() once the corpus has rows")
-    // DELETION CONTRACT (see the deletion section): a tombstoned id
-    // must not re-enter before compaction folds its ghost codes rows —
-    // appending would double-key the id and the serve-side anti-join
-    // would then hide BOTH copies. Driver-side sidecar read on the
-    // healthy (no-pending-deletes) path; one batch-sized probe when
-    // tombstones exist.
-    val tombs = tombsOf(spark, dir)
-    if (!tombs.isEmpty) {
-      val hit = tombs.pending(batch.select(col("vec_id"))).limit(1).count()
-      if (hit > 0) throw new TombstonedReAddException(
-        s"batch re-adds tombstoned (deleted) vec_id(s) at $dir — " +
-          "re-adding a deleted id is legal only after a compaction " +
-          "folds its tombstone (Maintenance.compactAnnIndex)")
-    }
-    val v = col("embedding").cast("array<double>")
-    val pe0 = batch
-      .select(col("vec_id"), col("embedding"), v.as("v"),
-        sqrt(dotD(v, v)).as("nrm"))
-      .filter(Similarity.validNorm)
+    // DELETION CONTRACT (see the deletion section)
+    tombsOf(spark, dir).refuseReAdd(batch, dir, "a compaction folds " +
+      "its tombstone (Maintenance.compactAnnIndex)")
+    val pe0 = indexable(batch)
     // Home cells FIRST (cost ∝ batch): the trained centroids never
     // change on an append, so a replayed row maps to the SAME cell —
     // which is what licenses the cell-pruned membership scan below.
@@ -749,13 +681,11 @@ object IndexStore {
     // inconsistency — never compound it through the pruned path).
     // (Re-sent ids: see the RE-KEY CONTRACT in the scaladoc and the
     // matched-id verify guard below.)
-    prof("entry")
     // MEASURED DETECTION (the pre-marker path, and every fallback):
     // torn-probe counts, membership scan, per-class union + one agg.
     def legacyDetect(): (DataFrame, Long, Long, Long, Long, Long, Long) = {
       val codesCnt = withDeltaOf(spark, dir, "codes")(identity).count()
       val rcodesCnt = withDeltaOf(spark, dir, "rcodes")(identity).count()
-      prof("counts")
       val (tornIds, knownIds) =
         if (codesCnt == rcodesCnt &&
             codesCnt == m.n * Similarity.pqSubspaces) {
@@ -813,7 +743,6 @@ object IndexStore {
           count(when(col("cls") === "m", lit(1))),
           expr("bit_xor(xxhash64(vec_id, embedding))"))
         .head()
-      prof("peagg")
       // duplicate vec_ids WITHIN one batch would double-insert codes
       // rows (16 instead of 8 per vector — the ADC sum then
       // double-counts that vector's subspaces and corrupts the
@@ -836,17 +765,10 @@ object IndexStore {
     val vouched: Option[(Long, Long)] =
       if (!corpusScreened) None
       else {
-        val idRow = pe0
-          .agg(count(lit(1)), countDistinct(col("vec_id")),
-            expr("bit_xor(xxhash64(vec_id, embedding))"))
-          .head()
-        val bn = idRow.getLong(0)
+        val (bn, bfp) = StoreKernel.keyedFingerprint(pe0, "vec_id",
+          "embedding")(d => s"batch contains duplicate vec_id rows " +
+            s"($d extras) — deduplicate on vec_id before appendBatch")
         if (bn == 0) return AppendStats(0L, 0L, None)
-        require(idRow.getLong(1) == bn,
-          s"batch contains duplicate vec_id rows " +
-            s"(${bn - idRow.getLong(1)} extras) — deduplicate on " +
-            "vec_id before appendBatch")
-        val bfp = idRow.getLong(2)
         readCommit(spark, dir) match {
           case Some(c) if c.lastN == bn && c.lastFp == bfp =>
             // one-deep replay ledger hit: this exact batch already
@@ -868,10 +790,8 @@ object IndexStore {
     val (pe, freshN, allN, matchedN, allFp, batchN, batchFp) =
       vouched match {
         case Some((bn, bfp)) =>
-          prof("counts")
-          val peF = graft.Materialize(pe0.withColumn("cls", lit("f")))
-          prof("peagg")
-          (peF, bn, bn, 0L, bfp, bn, bfp)
+          (graft.Materialize(pe0.withColumn("cls", lit("f"))),
+            bn, bn, 0L, bfp, bn, bfp)
         case None => legacyDetect()
       }
     // RE-KEY GUARD (see scaladoc): a matched id claims to be a replay —
@@ -910,7 +830,6 @@ object IndexStore {
           "not an update API (re-key contract); rebuild via ensure() " +
           "after correcting the corpus instead")
     }
-    prof("guard")
     def stampCommit(newN: Long): Unit =
       writeCommit(spark, dir, AnnCommit(newN, batchN, batchFp,
         annListing(spark, dir, "codes"), annListing(spark, dir, "rcodes")))
@@ -948,7 +867,6 @@ object IndexStore {
       codes.repartition(1).write
         .mode(SaveMode.Append).parquet(deltaDirOf(dir, "codes"))
     }
-    prof("codes")
     // rcodes carry fresh AND repaired rows (torn ids are already in
     // codes — re-deriving their cell/rcodes from the same centroids is
     // deterministic, so the repair matches what the crashed append
@@ -961,13 +879,10 @@ object IndexStore {
     val rcodes = Similarity
       .pqAssign(rsv, StoreKernel.readStore(spark, s"$dir/rcodebook"))
       .select(col("vec_id"), col("cell"), col("sub"), col("code"))
-    prof("rsv")
     val batchRes = meanResNorm(rsv)
-    prof("resnorm")
 
     rcodes.repartition(1).write
       .mode(SaveMode.Append).parquet(deltaDirOf(dir, "rcodes"))
-    prof("rcodes")
     StoreKernel.writeMeta(spark, dir, m.copy(n = m.n + allN, fp = m.fp ^ allFp,
       appended_n = m.appended_n + allN,
       app_res_sum = m.app_res_sum + batchRes * allN))
@@ -976,7 +891,7 @@ object IndexStore {
     stampCommit(m.n + allN)
     AppendStats(freshN, tornN,
       if (m.res_norm > 0) Some(batchRes / m.res_norm) else None)
-  } }
+  }
 
   // --- query-only paths ------------------------------------------------------
 
@@ -1182,9 +1097,9 @@ object IndexStore {
   //    expectation: corpus count must read meta.n − |valid tombstones|
   //    and corpus fp must read meta.fp XOR xor(valid rowfps) — no
   //    rescan of the deleted rows, no rebuild on the healthy path.
-  //    `valid` mirrors [[countAndFingerprint]]'s validNorm filter:
-  //    invalid-norm rows were never counted or fingerprinted, so their
-  //    deletion must not fold either.
+  //    `valid` is [[indexable]]'s predicate: rows it excludes were
+  //    never counted or fingerprinted, so their deletion must not fold
+  //    either.
   //  - [[build]] CLEARS the sidecar at promote: a fresh index derives
   //    from the (already rewritten) corpus, so every tombstone is moot
   //    — and leaving them would fold a stale xor into the new meta's
@@ -1247,45 +1162,24 @@ object IndexStore {
   def deleteBatch(spark: SparkSession, sfDir: String,
       kills: DataFrame): DeleteStats = {
     val dir = dirFor(spark, sfDir)
-    // lease outside the monitor — same ordering note as appendBatch
-    graft.sources.WriterLease.withWrite(spark, dir, "delete") {
-    StoreKernel.monitorFor(dir).synchronized {
-    import graft.functions.VectorFunctions.dotD
-    require(meta(spark, dir).nonEmpty,
-      s"no index at $dir — ensure() before deleteBatch (deletion is " +
-        "index maintenance; an index-less corpus is a plain filter)")
-    val raw = Tables.load(spark, sfDir, "embeddings")
-    val killIds = kills.select(col("vec_id")).distinct()
-    val present = raw.join(killIds.hint("broadcast"),
-      Seq("vec_id"), "left_semi")
-    val fresh = tombsOf(spark, dir).drop(present)
-    val v = col("embedding").cast("array<double>")
-    val nrm = sqrt(dotD(v, v))
-    // home cell from the INDEX's own sub-0 rows (the one definition of
-    // home), not recomputed from centroids: compaction prunes its
-    // rewrite by these cells, so they must name where the rows
-    // actually sit. Invalid-norm rows were never indexed → cell null.
-    val homes = withDeltaOf(spark, dir, "codes")(
-      _.filter(col("sub") === 0)).select(col("vec_id"), col("cell"))
-    val cap = graft.Materialize(fresh
-      .select(col("vec_id"),
-        xxhash64(col("vec_id"), col("embedding")).as("rowfp"),
-        (nrm > 0 && nrm < Double.PositiveInfinity).as("valid"))
-      .join(homes, Seq("vec_id"), "left"))
-    val freshN = cap.count()
-    // fence before the tombstone append — the commit point: serving
-    // excludes the ids from the instant these rows land
-    graft.sources.WriterLease.verify(spark, dir)
-    if (freshN > 0)
-      cap.repartition(1).write.mode(SaveMode.Append)
-        .parquet(StoreKernel.tombDirOf(dir))
-    // corpus rewrite: drop EVERY tombstoned id still present — this
-    // batch's and any crashed predecessor's (the replay IS the heal),
-    // the sidecar read again now that this batch's rows landed
-    val removed = StoreKernel.dropTombstoned(spark,
-      kernelStore(sfDir, dir), raw, tombsOf(spark, dir), heal = false)
-    DeleteStats(freshN, removed)
-  } } }
+    val (tombstoned, removed) = StoreKernel.delete(spark,
+        kernelStore(sfDir, dir), kills,
+        s"no index at $dir — ensure() before deleteBatch",
+        Seq("vec_id", "rowfp", "valid", "cell")) { fresh =>
+      // home cell from the INDEX's own sub-0 rows (the one definition
+      // of home), not recomputed from centroids: compaction prunes its
+      // rewrite by these cells, so they must name where the rows
+      // actually sit. Never-indexed rows (not `valid`) get cell null.
+      val homes = withDeltaOf(spark, dir, "codes")(
+        _.filter(col("sub") === 0)).select(col("vec_id"), col("cell"))
+      normed(fresh)
+        .select(col("vec_id"),
+          xxhash64(col("vec_id"), col("embedding")).as("rowfp"),
+          Similarity.validNorm.as("valid"))
+        .join(homes, Seq("vec_id"), "left")
+    }
+    DeleteStats(tombstoned, removed)
+  }
 
   // --- append commit marker (zero-job fast path for screened sinks) ---------
   //
@@ -1509,7 +1403,6 @@ object IndexStore {
       shardDir: String, info: BuildInfo, queries: DataFrame,
       kk: Int = Similarity.k,
       maxQuery: Long = Similarity.knnQueries): DataFrame = {
-    import graft.functions.VectorFunctions.dotD
     require(maxQuery <= Similarity.knnQueries,
       "queryIvfPqFrom: maxQuery beyond the shared pqLut query filter")
     val qRaw = queries.filter(col("vec_id") < maxQuery)
@@ -1521,10 +1414,7 @@ object IndexStore {
         col("vec_id").as("neighbor_id"), lit(0.0).as("cosine"),
         lit(0).cast("int").as("rank"))
     val dir = info.dir
-    val v = col("embedding").cast("array<double>")
-    val qe = qRaw
-      .select(col("vec_id"), v.as("v"), sqrt(dotD(v, v)).as("nrm"))
-      .filter(Similarity.validNorm)
+    val qe = Similarity.prepped(qRaw).filter(Similarity.validNorm)
     val cents = StoreKernel.readStore(spark, s"$dir/centroids")
     val probes = Similarity.topCells(qe, cents,
         Similarity.nprobeFor(info.nl))

@@ -137,15 +137,16 @@ object IngestScreen {
     * long-lived stream accumulates them exactly where the DPP-pruned
     * screen opens files — when any cell's part-file count reaches the
     * threshold, [[graft.sources.Maintenance.compactVecLists]] rewrites
-    * to one file per cell (content-preserving, marker untouched). The
-    * probe is a driver-side glob, no Spark job. */
+    * to one file per cell (content-preserving, marker untouched),
+    * after the lists monitor is released ([[StoreKernel
+    * .compactWhenDue]]). The probe is a driver-side glob, no Spark job. */
   def ensureLists(spark: SparkSession, sfDir: String,
       info: IndexStore.BuildInfo,
       compactAtFilesPerCell: Int = 0): Double = {
     val dir = listsDir(spark, sfDir)
     // per-store monitor: veclists stores of different corpora never
-    // serialize in-JVM
-    StoreKernel.monitorFor(dir).synchronized {
+    // serialize in-JVM. None: the lists validated
+    val built = StoreKernel.monitorFor(dir).synchronized {
     val m = StoreKernel.readMeta[AnnIndexMeta](spark, info.dir, "annidx")
       .getOrElse(throw new IllegalStateException(
         s"no index meta at ${info.dir} — ensure() the index first"))
@@ -163,27 +164,27 @@ object IngestScreen {
       vm.n == 0 || fs.exists(new org.apache.hadoop.fs.Path(s"$dir/lists"))
     StoreKernel.readMeta[VecListsMeta](spark, dir, "annvl") match {
       case Some(vm) if listsCurrent(vm, m) && dataIntact(vm) &&
-          !fs.exists(pending) =>
-        if (compactAtFilesPerCell > 0 && vm.n > 0) {
-          // current generation only (see compactVecLists)
-          val worst = graft.sources.Maintenance.cellFiles(spark, s"$dir/lists")
-            .groupBy(_.getPath.getParent).values.map(_.length)
-            .maxOption.getOrElse(0)
-          if (worst >= compactAtFilesPerCell) {
-            val (before, after) =
-              graft.sources.Maintenance.compactVecLists(spark, dir)
-            System.err.println(
-              s"[annvl] policy compaction at $dir: $before part " +
-                s"files -> $after")
-          }
-        }
-        0.0
+          !fs.exists(pending) => None
       case _ =>
         val t0 = System.nanoTime()
         rebuildLists(spark, sfDir, info, m)
-        (System.nanoTime() - t0) / 1e9
-    }
-  } }
+        Some((System.nanoTime() - t0) / 1e9)
+    } }
+    // a build writes one file per cell: only validated lists compact
+    def due = compactAtFilesPerCell > 0 &&
+      // current generation only (see compactVecLists)
+      graft.sources.Maintenance.cellFiles(spark, s"$dir/lists")
+        .groupBy(_.getPath.getParent).values.map(_.length)
+        .maxOption.exists(_ >= compactAtFilesPerCell)
+    if (built.isEmpty)
+      StoreKernel.compactWhenDue(spark, dir)(due)(Option.when(due)(())) { _ =>
+        val (before, after) =
+          graft.sources.Maintenance.compactVecLists(spark, dir)
+        System.err.println(
+          s"[annvl] policy compaction at $dir: $before part files -> $after")
+      }
+    built.getOrElse(0.0)
+  }
 
   /** In-flight-append sentinel under the lists dir: stamped BEFORE the
     * append's data writes, cleared after the marker — the window where
@@ -247,20 +248,12 @@ object IngestScreen {
   def appendLists(spark: SparkSession, sfDir: String,
       batch: DataFrame): Long = {
     val dir = listsDir(spark, sfDir)
-    // lease OUTSIDE the monitor (see IndexStore.appendBatch's note);
-    // per-store monitor — see ensureLists
-    graft.sources.WriterLease.withWrite(spark, dir, "append") {
-    StoreKernel.monitorFor(dir).synchronized {
-    import graft.functions.VectorFunctions.dotD
+    StoreKernel.mutate(spark, dir, "append") {
     val vm = StoreKernel.readMeta[VecListsMeta](spark, dir, "annvl")
       .getOrElse(throw new IllegalStateException(
         s"no veclists at $dir — ensureLists() before appendLists()"))
     val idxDir = IndexStore.dirFor(spark, sfDir)
-    val v = col("embedding").cast("array<double>")
-    val pe = batch
-      .select(col("vec_id"), col("embedding"), v.as("v"),
-        sqrt(dotD(v, v)).as("nrm"))
-      .filter(Similarity.validNorm)
+    val pe = IndexStore.indexable(batch)
     val cents = StoreKernel.readStore(spark, s"$idxDir/centroids")
     val home = Similarity.homeCells(
       pe.select(col("vec_id"), col("v"), col("nrm")), cents)
@@ -279,16 +272,10 @@ object IngestScreen {
           .select(col("vec_id"))
         withCell.join(existing, Seq("vec_id"), "left_anti")
       })
-    val fpRow = fresh
-      .agg(count(lit(1)), expr("bit_xor(xxhash64(vec_id, embedding))"),
-        countDistinct(col("vec_id")))
-      .head()
-    val n = fpRow.getLong(0)
-    if (n == 0) return 0L
-    require(fpRow.getLong(2) == n,
-      s"batch contains duplicate vec_id rows (${n - fpRow.getLong(2)} " +
+    val (n, fp) = StoreKernel.keyedFingerprint(fresh, "vec_id",
+      "embedding")(d => s"batch contains duplicate vec_id rows ($d " +
         "extras) — deduplicate on vec_id before appendLists")
-    val fp = fpRow.getLong(1)
+    if (n == 0) return 0L
     // pending sentinel around the data+marker pair (see [[pendingName]]):
     // any crash inside this window leaves it behind, and the next
     // ensureLists rebuilds instead of trusting a possibly-ghosted table
@@ -309,7 +296,7 @@ object IngestScreen {
         "completed append — the next ensureLists will rebuild " +
         "(conservative, never wrong)")
     n
-  } } }
+  } }
 
   /** Disk partition columns come back as the inferred type; pin `cell`
     * to its written long (same caveat as [[IndexStore.readCodes]]).
@@ -384,15 +371,10 @@ object IngestScreen {
     * the streaming sink selects by the batch count it already has. */
   def screenBatch(spark: SparkSession, sfDir: String,
       info: IndexStore.BuildInfo, batch: DataFrame,
-      smallBatch: Boolean = true): DataFrame = {
-    import graft.functions.VectorFunctions.dotD
-    val v = col("embedding").cast("array<double>")
-    val pe = batch
-      .select(col("vec_id"), v.as("v"), sqrt(dotD(v, v)).as("nrm"))
-      .filter(Similarity.validNorm)
-    screenRejects(spark, sfDir, info, pe, screenNprobeFor(info.nl),
-      broadcastProbes = smallBatch)
-  }
+      smallBatch: Boolean = true): DataFrame =
+    screenRejects(spark, sfDir, info,
+      Similarity.prepped(batch).filter(Similarity.validNorm),
+      screenNprobeFor(info.nl), broadcastProbes = smallBatch)
 
   /** The broadcast-probes batch bound for [[screenBatch]]'s default
     * shape (probe rows ≈ batch × nprobe wide vector rows ≲ a few
@@ -407,15 +389,9 @@ object IngestScreen {
     * corpus screen deterministic — admitted rows are mutually
     * non-duplicate, so finding themselves already in the lists on
     * replay can never reject them. */
-  def withinBatchDrops(batch: DataFrame): DataFrame = {
-    import graft.functions.VectorFunctions.dotD
-    val v = col("embedding").cast("array<double>")
-    val pe = batch
-      .select(col("vec_id"), v.as("v"), sqrt(dotD(v, v)).as("nrm"))
-      .filter(Similarity.validNorm)
-    Similarity.exactPairs(pe)
+  def withinBatchDrops(batch: DataFrame): DataFrame =
+    Similarity.exactPairs(Similarity.prepped(batch).filter(Similarity.validNorm))
       .select(col("vec_b").as("vec_id")).distinct()
-  }
 
   // --- the gated query -------------------------------------------------------
 

@@ -102,20 +102,11 @@ object LexIndex {
     StoreKernel.readStore(spark, cur(spark, path))
 
   /** (row count, xor fingerprint) of the documents corpus in one scan
-    * — same xor rationale as [[IndexStore]] (order-independent,
-    * incrementally maintainable). doc_id is the posting key, so a
-    * duplicate-keyed corpus is refused loudly. */
-  private def countAndFingerprint(docs: DataFrame): (Long, Long) = {
-    val r = docs
-      .agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, text))"),
-        countDistinct(col("doc_id")))
-      .head()
-    require(r.getLong(2) == r.getLong(0),
-      s"documents corpus contains ${r.getLong(0) - r.getLong(2)} " +
-        "duplicate doc_id rows — doc_id keys the posting table; " +
-        "deduplicate before indexing")
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+    * ([[StoreKernel.keyedFingerprint]]); doc_id is the posting key. */
+  private def countAndFingerprint(docs: DataFrame): (Long, Long) =
+    StoreKernel.keyedFingerprint(docs, "doc_id", "text")(d =>
+      s"documents corpus contains $d duplicate doc_id rows — doc_id " +
+        "keys the posting table; deduplicate before indexing")
 
   private def meta(spark: SparkSession, dir: String) =
     StoreKernel.readMeta[LexIndexMeta](spark, dir, "lexidx")
@@ -210,49 +201,31 @@ object LexIndex {
   def deleteDocs(spark: SparkSession, sfDir: String,
       kills: DataFrame): DeleteDocsStats = {
     val dir = dirFor(spark, sfDir)
-    // lease OUTSIDE the monitor (see IndexStore.appendBatch's note)
-    graft.sources.WriterLease.withWrite(spark, dir, "delete") {
-    StoreKernel.monitorFor(dir).synchronized {
-    require(meta(spark, dir).nonEmpty,
-      s"no lexical index at $dir — ensure() before deleteDocs " +
-        "(deletion is index maintenance; an index-less corpus is a " +
-        "plain filter)")
-    val docs = docsOf(spark, sfDir)
-    val killIds = kills.select(col("doc_id")).distinct()
-    val present = docs.join(killIds.hint("broadcast"),
-      Seq("doc_id"), "left_semi")
-    val fresh = graft.Materialize(tombsOf(spark, dir).drop(present))
-    val freshN = fresh.count()
-    // fence before the commit point below
-    graft.sources.WriterLease.verify(spark, dir)
-    if (freshN > 0) {
-      // 1. tombstones (the commit point — serving's tf leg excludes
-      //    these ids from this instant)
-      fresh.select(col("doc_id"),
-          xxhash64(col("doc_id"), col("text")).as("rowfp"))
-        .repartition(1).write.mode(SaveMode.Append)
-        .parquet(StoreKernel.tombDirOf(dir))
-      // 2. negative partials — the exact subtraction. A crash between
-      //    1 and 2 under-subtracts df/stats, which the stats-sum
-      //    integrity leg catches on the next ensure (→ rebuild).
-      val tfB = graft.Materialize(
-        Retrieval.termFreqs(fresh).withColumn("pfx", pfxOf(col("token"))))
-      if (!tfB.isEmpty)
-        tfB.groupBy(col("pfx"), col("token"))
-          .agg((-count(lit(1))).as("df"))
-          .repartition(col("pfx")).write.mode(SaveMode.Append)
-          .partitionBy("pfx").parquet(cur(spark, s"$dir/df"))
-      Retrieval.corpusStatsLong(fresh)
-        .select((-col("n_docs")).as("n_docs"), (-col("sum_dl")).as("sum_dl"))
-        .coalesce(1).write.mode(SaveMode.Append)
-        .parquet(cur(spark, s"$dir/stats"))
-    }
-    // 3. corpus rewrite: drop EVERY tombstoned id still present —
-    //    this batch's and any crashed predecessor's (replay = heal)
-    val removed = StoreKernel.dropTombstoned(spark,
-      kernelStore(spark, sfDir, dir), docs, tombsOf(spark, dir), heal = false)
-    DeleteDocsStats(freshN, removed)
-  } } }
+    val (tombstoned, removed) = StoreKernel.delete(spark,
+        kernelStore(spark, sfDir, dir), kills,
+        s"no lexical index at $dir — ensure() before deleteDocs",
+        Seq("doc_id", "rowfp"))(
+      _.select(col("doc_id"),
+        xxhash64(col("doc_id"), col("text")).as("rowfp"), col("text")),
+      // negative partials — the exact subtraction, after the
+      // tombstones (the commit point). A crash between the two
+      // under-subtracts df/stats, which the stats-sum integrity leg
+      // catches on the next ensure (→ rebuild).
+      fresh => {
+        val tfB = graft.Materialize(
+          Retrieval.termFreqs(fresh).withColumn("pfx", pfxOf(col("token"))))
+        if (!tfB.isEmpty)
+          tfB.groupBy(col("pfx"), col("token"))
+            .agg((-count(lit(1))).as("df"))
+            .repartition(col("pfx")).write.mode(SaveMode.Append)
+            .partitionBy("pfx").parquet(cur(spark, s"$dir/df"))
+        Retrieval.corpusStatsLong(fresh)
+          .select((-col("n_docs")).as("n_docs"), (-col("sum_dl")).as("sum_dl"))
+          .coalesce(1).write.mode(SaveMode.Append)
+          .parquet(cur(spark, s"$dir/stats"))
+      })
+    DeleteDocsStats(tombstoned, removed)
+  }
 
   def build(spark: SparkSession, sfDir: String, dir: String,
       knownIdentity: Option[(Long, Long)] = None): BuildInfo =
@@ -320,41 +293,35 @@ object LexIndex {
       serve = (m, tombN) =>
         BuildInfo(dir, m.n - tombN, m.np, builtNow = false, buildSec = 0.0),
       build = known => build(spark, sfDir, dir, knownIdentity = known))
-    // policy fold AFTER the monitor releases (lease → monitor, the
-    // order compact itself takes) — folding inside the synchronized
-    // serve inverted it against a concurrent direct compact (lease
-    // held, blocked on the monitor): a bounded ABBA stall that threw
-    // LeaseHeldException out of a SERVE path after waitMs. Probed
-    // cheaply first (tombstone-free corpora skip everything), then
-    // GUARDED against the blank-survivor corner: compact skips its
-    // fold when every surviving posting row would vanish, so an
-    // unguarded trigger would re-run the full three-table rewrite on
-    // EVERY ensure of such a corpus forever — pre-probe the survivor
-    // count (the same probe compact runs) and stand down loudly
-    // instead. A racing fold is absorbed by the re-probe: tombN
-    // re-reads as 0 and nothing reruns.
-    if (foldAtTombstones != Long.MaxValue && !info.builtNow) {
-      val tombs = tombsOf(spark, dir)
-      val tombN = tombs.rows
-      if (tombN > 0 && tombN >= foldAtTombstones) {
-        val survivors =
-          tombs.drop(readCur(spark, s"$dir/tf")).limit(1).count()
-        if (survivors == 0)
-          System.err.println(s"[lexidx] policy fold at $dir stood " +
-            "down: blank survivors (compact would skip the fold); " +
-            "the anti-join + negative partials keep serving exactly")
-        else {
-          System.err.println(s"[lexidx] policy fold at $dir: $tombN " +
-            "pending tombstone(s) at/over the threshold")
-          compact(spark, sfDir)
-          val m2 = meta(spark, dir)
-          val tN2 = tombsOf(spark, dir).rows
-          return m2.map(m => BuildInfo(dir, m.n - tN2, m.np,
-            builtNow = false, buildSec = 0.0)).getOrElse(info)
-        }
-      }
+    if (foldAtTombstones == Long.MaxValue || info.builtNow) return info
+    // policy fold AFTER the monitor releases (StoreKernel
+    // .compactWhenDue). The cheap probe is GUARDED against the
+    // blank-survivor corner: compact skips its fold when every
+    // surviving posting row would vanish, so an unguarded trigger
+    // would re-run the full three-table rewrite on EVERY ensure of
+    // such a corpus forever — pre-probe the survivor count (the same
+    // probe compact runs) and stand down loudly instead. A racing fold
+    // is absorbed by the re-probe: the sidecar re-reads empty and
+    // nothing reruns.
+    def due(t: StoreKernel.Tombs) = t.rows > 0 && t.rows >= foldAtTombstones
+    val tombs = tombsOf(spark, dir)
+    def blank = {
+      val survivors = tombs.drop(readCur(spark, s"$dir/tf")).limit(1).count()
+      if (survivors == 0)
+        System.err.println(s"[lexidx] policy fold at $dir stood " +
+          "down: blank survivors (compact would skip the fold); " +
+          "the anti-join + negative partials keep serving exactly")
+      survivors == 0
     }
-    info
+    StoreKernel.compactWhenDue(spark, dir)(due(tombs) && !blank)(
+        Some(tombsOf(spark, dir)).filter(due)) { t =>
+      System.err.println(s"[lexidx] policy fold at $dir: ${t.rows} " +
+        "pending tombstone(s) at/over the threshold")
+      compact(spark, sfDir)
+      meta(spark, dir).map(m => BuildInfo(dir,
+        m.n - tombsOf(spark, dir).rows, m.np, builtNow = false,
+        buildSec = 0.0))
+    }.flatten.getOrElse(info)
   }
 
   /** BM25 scores for `qterms` served from a VALIDATED index — the
@@ -461,26 +428,17 @@ object LexIndex {
   def appendBatch(spark: SparkSession, sfDir: String,
       batch: DataFrame): AppendInfo = {
     val dir = dirFor(spark, sfDir)
-    // lease OUTSIDE the monitor (see IndexStore.appendBatch's note)
-    graft.sources.WriterLease.withWrite(spark, dir, "append") {
-    StoreKernel.monitorFor(dir).synchronized {
+    StoreKernel.mutate(spark, dir, "append") {
     val m = meta(spark, dir).getOrElse(throw new IllegalStateException(
       s"no lexical index at $dir — ensure() before appendBatch()"))
     require(dialsOk(m),
       s"index at $dir was built under different dials/format " +
         s"(meta: v${m.version}, pfx=${m.pfx_parts}) — rebuild before " +
         "appending")
-    // deletion contract: a tombstoned doc_id must not re-enter before
-    // compact folds its ghost postings (the tf anti-join would hide
-    // BOTH copies) — same refusal as the ANN appendBatch
-    val tombs = tombsOf(spark, dir)
-    if (!tombs.isEmpty) {
-      val hit = tombs.pending(batch.select(col("doc_id"))).limit(1).count()
-      if (hit > 0) throw new IllegalStateException(
-        s"batch re-adds tombstoned (deleted) doc_id(s) at $dir — " +
-          "re-adding a deleted id is legal only after compact() folds " +
-          "its tombstone")
-    }
+    // deletion contract: no re-add before compact folds the ghost
+    // postings (see the deletion section)
+    tombsOf(spark, dir).refuseReAdd(batch, dir,
+      "compact() folds its tombstone")
     val (bn, bfp) = countAndFingerprint(batch)
     if (bn == 0) return AppendInfo(0, 0, replayed = false)
     val ledger = s"$dir/batches/${java.lang.Long.toHexString(bfp)}_$bn"
@@ -508,7 +466,7 @@ object LexIndex {
     // NO token stamp — see the scaladoc; the next ensure validates
     // m2 against the live corpus before any zero-job serving
     AppendInfo(bn, npB, replayed = false)
-  } } }
+  } }
 
   /** Consolidate append debris: one file per pfx dir again, df
     * partials merged back to one row per term, stats partials to one
@@ -522,24 +480,16 @@ object LexIndex {
     * per applied batch. @return (part files before, after) */
   def compact(spark: SparkSession, sfDir: String): (Int, Int) = {
     val dir = dirFor(spark, sfDir)
-    // lease OUTSIDE the monitor (see IndexStore.appendBatch's note)
-    graft.sources.WriterLease.withWrite(spark, dir, "compact") {
-    StoreKernel.monitorFor(dir).synchronized {
+    // the token is re-stamped only when it vouched for the state before
+    // (StoreKernel.preserving); "content-preserving" includes the
+    // tombstone fold below: the folded tables serve byte-identically
+    // to what the anti-join + negative partials served before it
+    StoreKernel.mutate(spark, dir, "compact") {
+    StoreKernel.preserving(spark, kernelStore(spark, sfDir, dir)) {
       val m = meta(spark, dir).getOrElse(return (0, 0))
       if (m.np == 0) return (0, 0)
-      // a content-preserving rewrite may EXTEND a voucher, never
-      // create one: re-stamp the token after the rewrite only if the
-      // pre-compact state held a valid one (appendBatch leaves none —
-      // compacting unvalidated appends must not skip their ensure).
-      // "Content-preserving" includes the tombstone fold below: the
-      // folded tables serve byte-identically to what the anti-join +
-      // negative partials served before it.
       val tombs = tombsOf(spark, dir)
       val (tombN, tombXor) = (tombs.rows, tombs.xor)
-      val st = kernelStore(spark, sfDir, dir)
-      val vouchedAtEntry = StoreKernel.readToken(spark, st).exists(t =>
-        t.digest == StoreKernel.digest(spark, st) && t.meta == m &&
-          t.tombN == tombN && t.tombXor == tombXor)
       def files(): Int = {
         // current generations only: retired copies awaiting their TTL
         // are storage, not layout
@@ -607,9 +557,6 @@ object LexIndex {
           m.copy(n = m.n - tombN, fp = m.fp ^ tombXor, np = np2.get))
         StoreKernel.clearTombstones(spark, dir)
       }
-      // re-reads meta and the fold terms rather than assuming the fold
-      // ran — the blank-survivor edge above leaves the sidecar in place
-      if (vouchedAtEntry) StoreKernel.restamp(spark, st)
       (before, files())
     } }
   }

@@ -391,15 +391,14 @@ object Maintenance {
     * wait on its own caller), and [[WriterLease.verify]] fences only
     * the lease-holding thread.
     *
-    * Concurrency contract: the store's writer lease, then its per-store
-    * monitor ([[StoreKernel.monitorFor]]) — the order every public
-    * mutator takes — so same-store readers and appends serialize
-    * against the rewrite and other stores' maintenance proceeds. A
-    * crash between the two commits leaves `codes` folded and `rcodes`
-    * not (both complete and readable); the integrity probe's count leg
-    * sees the difference when tombstones were dropped and the next
-    * ensure rebuilds, so the index self-heals instead of serving a torn
-    * pair. A crash between the commits and the meta fold converges the
+    * Concurrency contract: [[StoreKernel.mutate]] (the store's writer
+    * lease, then its monitor), so same-store readers and appends
+    * serialize against the rewrite and other stores' maintenance
+    * proceeds. A crash between the two commits leaves `codes` folded
+    * and `rcodes` not (both complete and readable); the integrity
+    * probe's count leg sees the difference when tombstones were
+    * dropped and the next ensure rebuilds, so the index self-heals
+    * instead of serving a torn pair. A crash between the commits and the meta fold converges the
     * same way (see [[graft.operators.IndexStore.foldTombstonesIntoMeta]]).
     *
     * @return (part files before, part files after) across both tables */
@@ -412,10 +411,7 @@ object Maintenance {
     * cannot change in between); None reads it here. */
   private[graft] def compactAnnIndex(spark: SparkSession, indexDir: String,
       tombs: Option[StoreKernel.Tombs]): (Int, Int) =
-    // lease OUTSIDE the monitor: a foreign holder's bounded wait must
-    // never block this JVM's readers on the store monitor
-    WriterLease.withWrite(spark, indexDir, "compact") {
-      StoreKernel.monitorFor(indexDir).synchronized {
+    StoreKernel.mutate(spark, indexDir, "compact") {
       import graft.operators.{IndexStore, Similarity}
       // deletion fold rides the same rewrite: tombstoned ids (ghost
       // rows excluded by every reader since their deleteBatch) are
@@ -506,7 +502,6 @@ object Maintenance {
             "serving exact until a rebuild")
           (before, before)
       }
-      }
     }
 
   /** Reap EXPIRED retired generations across every store of a corpus —
@@ -578,12 +573,10 @@ object Maintenance {
     * where the DPP-pruned screen read opens files. Content-preserving
     * rewrite to one file per cell ([[writeCells]]); the identity marker
     * (fp/n vs the index meta) is untouched because no ROW moved. Same
-    * lease → monitor contract as [[compactAnnIndex]]. Returns (files
-    * before, files after) for the `lists` table. */
+    * [[StoreKernel.mutate]] contract as [[compactAnnIndex]]. Returns
+    * (files before, files after) for the `lists` table. */
   def compactVecLists(spark: SparkSession, listsDir: String): (Int, Int) =
-    WriterLease.withWrite(spark, listsDir, "compact") {
-      // per-store monitor — see compactAnnIndex's note
-      StoreKernel.monitorFor(listsDir).synchronized {
+    StoreKernel.mutate(spark, listsDir, "compact") {
       val dir = s"$listsDir/lists"
       val files = cellFiles(spark, dir)
       val before = files.size
@@ -613,7 +606,6 @@ object Maintenance {
           Generations.commit(spark, dir, shadow)
           (before, cellFiles(spark, dir).size)
         }
-      }
       }
     }
 }

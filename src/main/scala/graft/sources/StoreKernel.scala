@@ -23,15 +23,30 @@ trait StoreMeta extends Product {
   def fp: Long
 }
 
+/** A store append's refusal of a batch that re-adds a TOMBSTONED
+  * (deleted, not yet folded) key ([[StoreKernel.Tombs.refuseReAdd]]).
+  * Its prescribed recovery differs from every other refusal — the FOLD
+  * (a compaction), not an ensure() that would validate the refusing
+  * state and hand a retry the same refusal forever — so the streaming
+  * sinks dispatch on this TYPE; a message-substring dispatch broke
+  * silently on any rewording. Extends IllegalStateException so
+  * existing catch clauses keep working. */
+final class TombstonedReAddException(msg: String)
+  extends IllegalStateException(msg)
+
 /** The one lifecycle under the persisted stores — the ANN
   * [[graft.operators.IndexStore]], the lexical [[graft.operators
-  * .LexIndex]] and, for meta and monitor only, the veclists
-  * [[graft.operators.IngestScreen]] — next to [[WriterLease]] (who may
-  * write) and [[Generations]] (which table copy readers see). A store
-  * passes in only what differs ([[Store]], and the checks, `serve` and
-  * `build` of [[ensure]]); the kernel owns the monitor, the meta
-  * promote, the validation token, the tombstone sidecar, the
-  * crashed-delete heal and the validate-or-build skeleton. The token
+  * .LexIndex]] and the veclists [[graft.operators.IngestScreen]] —
+  * next to [[WriterLease]] (who may write) and [[Generations]] (which
+  * table copy readers see). A store passes in only what differs
+  * ([[Store]], the checks, `serve` and `build` of [[ensure]], the
+  * capture and hook of [[delete]], the probes and compaction of
+  * [[compactWhenDue]]); the kernel owns the monitor, the lock order of
+  * every mutation ([[mutate]]), the meta promote, the validation
+  * token, the tombstone sidecar and its re-add guard, the
+  * crashed-delete heal, the delete skeleton, the policy compaction and
+  * the validate-or-build skeleton. The veclists store uses the
+  * monitor, the meta, [[mutate]] and [[compactWhenDue]]. The token
   * line, meta schemas and sidecar layout are persisted formats:
   * changing one makes every deployed store revalidate or rebuild (the
   * token bytes are pinned by StoreKernelSpec). */
@@ -72,6 +87,40 @@ object StoreKernel {
 
   private val storeMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Run `body`, a mutation of the store at `dir`, holding the store's
+    * writer lease and then its monitor — the one lock order of every
+    * store mutation (append, delete, compaction). The lease comes
+    * first, so a foreign holder's bounded wait never blocks this JVM's
+    * readers, which take the monitor alone ([[ensure]]); the per-store
+    * monitor lets mutations of different stores (the sharded ingest's K
+    * shard bodies) run at once. Both are reentrant per thread. A thread
+    * holding the monitor must never wait for the lease: a concurrent
+    * mutator holds the lease and waits for the monitor, and the pair
+    * stalls until the lease wait throws — so a policy compaction runs
+    * after the monitor is released ([[compactWhenDue]]). */
+  def mutate[T](spark: SparkSession, dir: String, op: String)(body: => T): T =
+    WriterLease.withWrite(spark, dir, op)(monitorFor(dir).synchronized(body))
+
+  /** A policy compaction, run after [[ensure]] released the store
+    * monitor: `due`, a cheap probe (false skips the lease entirely on
+    * the quiet path); the writer lease; `recheck`, a re-probe from
+    * driver-side reads only (a racing policied ensure may have just
+    * compacted — the rewrite must not run twice), whose answer
+    * `compact` gets; then `compact`, which takes the monitor through
+    * [[mutate]] (re-entering the lease) and, in a store with a token,
+    * re-stamps it when it vouched for the state before ([[preserving]]).
+    * Refuses a caller holding the store monitor: it would take the
+    * monitor before the lease. Returns the compaction's result, None
+    * when it did not run. */
+  def compactWhenDue[P, R](spark: SparkSession, dir: String)(due: => Boolean)(
+      recheck: => Option[P])(compact: P => R): Option[R] = {
+    require(!Thread.holdsLock(monitorFor(dir)),
+      s"a policy compaction of $dir must not run while holding the " +
+        "store's monitor — lease-then-monitor is the required order")
+    if (!due) None
+    else WriterLease.withWrite(spark, dir, "policy-compact")(recheck.map(compact))
+  }
 
   // --- store-table reads -----------------------------------------------------
 
@@ -151,6 +200,23 @@ object StoreKernel {
     * exists (its `ParquetUtils.splitFiles` choice). */
   private def dataFiles(leaves: Seq[FileStatus]): Seq[FileStatus] =
     leaves.filterNot(summary)
+
+  // --- identity --------------------------------------------------------------
+
+  /** (row count, xor of `xxhash64(key, content)`) of `rows` in one
+    * scan: order-independent, overflow-free under ANSI and
+    * incrementally maintainable (fp_new = fp_old ⊕ fp_batch). `key`
+    * keys the store, so `rows` holding a key twice is refused loudly
+    * with `refusal(extra rows)`: identical duplicates xor-cancel out of
+    * the fingerprint, which alone cannot see them. */
+  def keyedFingerprint(rows: DataFrame, key: String, content: String)(
+      refusal: Long => String): (Long, Long) = {
+    val r = rows.agg(count(lit(1)),
+        expr(s"bit_xor(xxhash64($key, $content))"), countDistinct(col(key)))
+      .head()
+    require(r.getLong(2) == r.getLong(0), refusal(r.getLong(0) - r.getLong(2)))
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
 
   // --- meta ------------------------------------------------------------------
 
@@ -346,16 +412,28 @@ object StoreKernel {
       tombN: Long, tombXor: Long): Unit =
     writeToken(spark, s, tokenLine(digest(spark, s), m, tombN, tombXor))
 
-  /** Re-stamp `s`'s token from its current meta and sidecar after a
-    * content-preserving rewrite of a store the caller had just
-    * validated (a compaction, which may also have folded tombstones
-    * into meta). Nothing is stamped without a readable meta. */
-  def restamp[M <: StoreMeta : TypeTag](spark: SparkSession,
-      s: Store[M]): Unit =
-    readMeta[M](spark, s.dir, s.tag).foreach { m =>
+  /** Run `rewrite`, a content-preserving rewrite of `s` under its
+    * writer lease (a compaction, which may also fold tombstones into
+    * meta), and re-stamp the token after it only if the token vouched
+    * for the state before it: a rewrite may extend a voucher, never
+    * create one (an append stamps no token, and compacting unvalidated
+    * appends must not skip their validation). Driver-side reads only. */
+  def preserving[M <: StoreMeta : TypeTag, T](spark: SparkSession,
+      s: Store[M])(rewrite: => T): T = {
+    val vouched = readMeta[M](spark, s.dir, s.tag).exists { m =>
+      val t = tombs(spark, s)
+      readToken(spark, s).exists(k => k.digest == digest(spark, s) &&
+        k.meta == m && k.tombN == t.validN && k.tombXor == t.xor)
+    }
+    val r = rewrite
+    // re-read: the rewrite may have folded tombstones into meta, or
+    // (a skipped fold) left them in place
+    if (vouched) readMeta[M](spark, s.dir, s.tag).foreach { m =>
       val t = tombs(spark, s)
       stamp(spark, s, m, t.validN, t.xor)
     }
+    r
+  }
 
   /** Best-effort: a failed, torn or garbled token write degrades to a
     * full validation on the next ensure (digest or parse mismatch),
@@ -436,6 +514,17 @@ object StoreKernel {
 
     /** `d`'s tombstoned rows: `d` left-semi-joined on `key`. */
     def pending(d: DataFrame): DataFrame = d.filter(hit)
+
+    /** Refuse an append `batch` that re-adds a tombstoned key: the
+      * deleted row's ghost store rows stay until a fold, so the re-add
+      * would double-key it and [[drop]] would then hide BOTH copies.
+      * `fold` says what makes a re-add legal. Driver-side on an empty
+      * sidecar (the healthy path); one batch-sized probe otherwise. */
+    def refuseReAdd(batch: DataFrame, dir: String, fold: String): Unit =
+      if (!isEmpty && pending(batch.select(col(key))).limit(1).count() > 0)
+        throw new TombstonedReAddException(
+          s"batch re-adds tombstoned (deleted) $key(s) at $dir — " +
+            s"re-adding a deleted id is legal only after $fold")
   }
 
   /** The sidecar under `dir` read on the driver, no Spark job: the
@@ -542,6 +631,44 @@ object StoreKernel {
         }
       }
       pendingN
+    }
+
+  /** Delete the rows `kills` names (a frame with `s.key`) from `s`'s
+    * corpus and store, under [[mutate]] — replay-idempotent, and every
+    * crash window converges (see the stores' deletion sections):
+    *  1. the store must exist (`refusal` says what to run first);
+    *  2. the distinct kill keys are semi-joined to the corpus, minus
+    *     the keys already tombstoned: this batch's victims;
+    *  3. `capture` of the victims is materialized once and counted;
+    *  4. the fence, then the capture's `tombCols` are appended to the
+    *     sidecar — the commit point: every serve excludes the keys
+    *     from this instant;
+    *  5. `hook` of the capture runs (the lexical negative partials);
+    *  6. the corpus drops every tombstoned key on a fresh sidecar read
+    *     ([[dropTombstoned]]) — this batch's and any crashed
+    *     predecessor's, so the replay is the heal.
+    * @return (tombstones written, corpus rows removed) */
+  def delete[M <: StoreMeta : TypeTag](spark: SparkSession, s: Store[M],
+      kills: DataFrame, refusal: String, tombCols: Seq[String])(
+      capture: DataFrame => DataFrame, hook: DataFrame => Unit = _ => ())
+      : (Long, Long) =
+    mutate(spark, s.dir, "delete") {
+      require(readMeta[M](spark, s.dir, s.tag).nonEmpty, s"$refusal " +
+        "(deletion is index maintenance; an index-less corpus is a " +
+        "plain filter)")
+      val corpus = readCorpus(spark, s.corpus)
+      val present = corpus.join(
+        kills.select(col(s.key)).distinct().hint("broadcast"),
+        Seq(s.key), "left_semi")
+      val cap = graft.Materialize(capture(tombs(spark, s).drop(present)))
+      val n = cap.count()
+      WriterLease.verify(spark, s.dir)
+      if (n > 0) {
+        cap.select(tombCols.map(col): _*).repartition(1).write
+          .mode(SaveMode.Append).parquet(tombDirOf(s.dir))
+        hook(cap)
+      }
+      (n, dropTombstoned(spark, s, corpus, tombs(spark, s), heal = false))
     }
 
   // --- build promote ---------------------------------------------------------

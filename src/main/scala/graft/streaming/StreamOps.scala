@@ -657,7 +657,7 @@ object StreamOps {
               // recovery is the FOLD; a message-substring match broke
               // silently on any rewording — and routed to ensure(),
               // which validates the refusing state, it crash-loops
-              if (e.isInstanceOf[graft.operators.TombstonedReAddException])
+              if (e.isInstanceOf[graft.sources.TombstonedReAddException])
                 graft.sources.Maintenance.compactAnnIndex(spark, idxDir)
               else IndexStore.ensure(spark, corpusDir)
               IndexStore.appendBatch(spark, idxDir, fresh,
@@ -863,7 +863,7 @@ object StreamOps {
                 System.err.println(s"[vecingest] appendBatch refused " +
                   s"(${e.getMessage}); recovering once and retrying")
                 // typed dispatch — see the unscreened sink's note
-                if (e.isInstanceOf[graft.operators.TombstonedReAddException])
+                if (e.isInstanceOf[graft.sources.TombstonedReAddException])
                   graft.sources.Maintenance.compactAnnIndex(spark, idxDir)
                 else IndexStore.ensure(spark, corpusDir)
                 IndexStore.appendBatch(spark, idxDir, admitted)

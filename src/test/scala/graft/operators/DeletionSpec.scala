@@ -113,6 +113,35 @@ class DeletionSpec extends SparkSpec {
     assert(st.appended == 1)
   }
 
+  test("ANN delete of a never-indexed short (63-element) embedding " +
+    "folds nothing: ensure validates without a rebuild and the " +
+    "compaction keeps meta.n") {
+    val dir = java.nio.file.Files.createTempDirectory("del_short").toString
+    val fixture = Tables.load(spark, sfDir, "embeddings")
+    val short = fixture.filter(col("vec_id") === 0)
+      .withColumn("vec_id", lit(100000L))
+      .withColumn("embedding", slice(col("embedding"), 1, 63))
+    fixture.unionByName(short).write.parquet(s"$dir/embeddings.parquet")
+    val idxDir = IndexStore.dirFor(spark, dir)
+    deleteDir(idxDir)
+    try {
+      assert(IndexStore.ensure(spark, dir).n == 500,
+        "the short row must not be indexed")
+      val st = IndexStore.deleteBatch(spark, dir, Seq(100000L).toDF("vec_id"))
+      assert(st.tombstoned == 1 && st.removedFromCorpus == 1)
+      val info = IndexStore.ensure(spark, dir)
+      assert(!info.builtNow, "the tombstone of a never-fingerprinted " +
+        "row folded into the identity and forced a rebuild")
+      assert(info.n == 500)
+      graft.sources.Maintenance.compactAnnIndex(spark, idxDir)
+      assert(IndexStore.appendState(spark, idxDir).exists(_._2 == 500),
+        "the compaction folded a never-counted row out of meta.n")
+    } finally {
+      deleteDir(idxDir)
+      deleteDir(dir)
+    }
+  }
+
   test("foldAtTombstones policy: ensure folds the sidecar once at the " +
     "threshold, serving is bit-identical across the policy fold, and " +
     "the next policied ensure is a no-op") {

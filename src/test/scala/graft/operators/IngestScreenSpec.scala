@@ -261,4 +261,73 @@ class IngestScreenSpec extends SparkSpec {
     assert(ids(streamShape) === ids(gateShape),
       "the two join shapes must reject identical id sets")
   }
+
+  /** A 200-vector corpus with its index and lists built, then one
+    * append sliver landed in the index, the lists and the corpus:
+    * (corpus dir, the grown index's info, the appendLists job
+    * count). */
+  private def listsWithSliver(): (String, IndexStore.BuildInfo, Int) = {
+    val base = graft.sources.Tables.load(spark, sfDir, "embeddings")
+    val corpus = writeCorpus(base.filter(col("vec_id") < 200))
+    IngestScreen.ensureLists(spark, corpus, IndexStore.ensure(spark, corpus))
+    val batch = base.filter(col("vec_id") >= 200 && col("vec_id") < 220)
+    IndexStore.appendBatch(spark, IndexStore.dirFor(spark, corpus), batch)
+    val appendJobs = jobsDuring {
+      assert(IngestScreen.appendLists(spark, corpus, batch) === 20L) }
+    batch.write.mode("append").parquet(s"$corpus/embeddings.parquet")
+    (corpus, IndexStore.ensure(spark, corpus), appendJobs)
+  }
+
+  private def listsFiles(corpus: String): Int =
+    graft.sources.Maintenance.cellFiles(spark,
+      s"${IngestScreen.listsDir(spark, corpus)}/lists").size
+
+  private def dropStores(corpus: String): Unit = {
+    deleteDir(IndexStore.dirFor(spark, corpus))
+    deleteDir(IngestScreen.listsDir(spark, corpus))
+    deleteDir(corpus)
+  }
+
+  test("request job budgets: appendLists and a policied ensureLists " +
+    "that compacts run a pinned number of Spark jobs") {
+    val (corpus, grown, appendJobs) = listsWithSliver()
+    try {
+      val before = listsFiles(corpus)
+      val compactJobs = jobsDuring {
+        assert(IngestScreen.ensureLists(spark, corpus, grown,
+          compactAtFilesPerCell = 2) == 0.0) }
+      assert(listsFiles(corpus) < before, "the policy did not compact")
+      assert((appendJobs, compactJobs) === ((13, 2)))
+    } finally dropStores(corpus)
+  }
+
+  test("a policied ensureLists compacts after releasing the lists " +
+    "monitor: a concurrent holder of the lease, then the monitor (the " +
+    "compactVecLists order), never stalls it into LeaseHeldException") {
+    import graft.sources.{StoreKernel, WriterLease}
+    val (corpus, grown, _) = listsWithSliver()
+    val vlDir = IngestScreen.listsDir(spark, corpus)
+    val oldW = System.getProperty("graft.lease.waitMs")
+    System.setProperty("graft.lease.waitMs", "2000")
+    try {
+      val before = listsFiles(corpus)
+      val leased = new java.util.concurrent.CountDownLatch(1)
+      val holder = new Thread(() => WriterLease.withWrite(spark, vlDir,
+          "compact") {
+        leased.countDown()
+        Thread.sleep(500)
+        StoreKernel.monitorFor(vlDir).synchronized(Thread.sleep(100))
+      })
+      holder.start()
+      leased.await()
+      assert(IngestScreen.ensureLists(spark, corpus, grown,
+        compactAtFilesPerCell = 2) == 0.0)
+      holder.join()
+      assert(listsFiles(corpus) < before, "the policy did not compact")
+    } finally {
+      if (oldW == null) System.clearProperty("graft.lease.waitMs")
+      else System.setProperty("graft.lease.waitMs", oldW)
+      dropStores(corpus)
+    }
+  }
 }

@@ -269,4 +269,31 @@ class LexIndexSpec extends SparkSpec {
       deleteDir(corpus)
     }
   }
+
+  test("request job budgets: appendBatch, deleteDocs and a policied " +
+    "ensure that folds run a pinned number of Spark jobs") {
+    val base = graft.sources.Tables.load(spark, sfDir, "documents")
+    val corpus = writeCorpus(base.filter(col("doc_id") < 300))
+    val idxDir = LexIndex.dirFor(spark, corpus)
+    try {
+      assert(LexIndex.ensure(spark, corpus).builtNow)
+      val batch = base.filter(col("doc_id") >= 300 && col("doc_id") < 320)
+      batch.write.mode("append").parquet(s"$corpus/documents.parquet")
+      val appendJobs = jobsDuring { LexIndex.appendBatch(spark, corpus, batch) }
+      assert(!LexIndex.ensure(spark, corpus).builtNow)
+      val kills = base.filter(col("doc_id") >= 100 && col("doc_id") < 110)
+        .select(col("doc_id"))
+      val deleteJobs = jobsDuring { LexIndex.deleteDocs(spark, corpus, kills) }
+      var info: LexIndex.BuildInfo = null
+      val foldJobs = jobsDuring {
+        info = LexIndex.ensure(spark, corpus, foldAtTombstones = 10L) }
+      assert(!info.builtNow && info.n === 310)
+      assert(graft.sources.StoreKernel.tombstoneFrame(spark, idxDir).isEmpty,
+        "the policied ensure did not fold")
+      assert((appendJobs, deleteJobs, foldJobs) === ((15, 21, 18)))
+    } finally {
+      deleteDir(idxDir)
+      deleteDir(corpus)
+    }
+  }
 }
