@@ -4,9 +4,14 @@
 Usage: python3 scripts/store_requests.py <trace.json> [--top N]
            [--budget KIND=JOBS,...]
 
-<trace.json> is the record a traced run keeps, e.g.
+<trace.json> is the record a traced run of either workload keeps, e.g.
 `.bench_build/perfbench/traces/store-7.json` after
-`python3 perfbench/run.py --workload store --seed 7 --seconds 20 --trace 1`.
+`python3 perfbench/run.py --workload store --seed 7 --seconds 20 --trace 1`,
+or `.bench_build/perfbench/traces/load-7.json` after the same command
+with `--workload load`. Request kinds are the workload's own: `serve`,
+`append`, `delete` on `store`; `sql.create`, `sql.append`,
+`sql.upsert`, `parquet.create`, `parquet.append`, `parquet.upsert` on
+`load`.
 
 For every request of the traced window (only traced requests carry
 spans) it prints the request's kind, wall time, job count, job wall
@@ -25,8 +30,9 @@ gaps is a frame of driver-side planning or bookkeeping.
 
 A job belongs to the request whose window holds its start time.
 
-`--budget serve=25,delete=18,append=36` gives each request kind a job
-budget: every traced request over its kind's budget is listed on
+`--budget serve=25,delete=18,append=36` (a `store` trace) or
+`--budget sql.upsert=2,sql.create=3,parquet.upsert=8` (a `load` trace)
+gives each request kind a job budget: every traced request over its kind's budget is listed on
 stderr and the script exits 1. Kinds without a budget are not checked.
 """
 import argparse

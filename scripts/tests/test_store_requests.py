@@ -74,5 +74,51 @@ class BudgetTest(unittest.TestCase):
             store_requests.over_budget(record(), {"compact": 0}), [])
 
 
+class LoadTraceTest(unittest.TestCase):
+    """A `load` trace: dotted kinds, jobs from the sinks' frames."""
+
+    def record(self):
+        probe = "graft.checks.Validations$.probe(Validations.scala:1)"
+        merge = "graft.sources.ParquetSink$.upsert(ParquetSink.scala:1)"
+        return {
+            "spans": [request(1, "sql.upsert", 0, 100),
+                      request(2, "parquet.upsert", 200, 300)],
+            "jobs": [job(1, 10, 20, probe), job(2, 25, 30, probe),
+                     job(3, 40, 60, "graft.sql.SqlSink$.jdbcAppend(x:1)"),
+                     job(4, 210, 220, probe), job(5, 225, 230, probe),
+                     job(6, 240, 250, merge), job(7, 255, 260, merge),
+                     job(8, 265, 290, merge)],
+            "plans": [],
+        }
+
+    def run_main(self, *args):
+        with tempfile.NamedTemporaryFile("w", suffix=".json") as f:
+            json.dump(self.record(), f)
+            f.flush()
+            out, err = io.StringIO(), io.StringIO()
+            with contextlib.redirect_stdout(out), \
+                    contextlib.redirect_stderr(err):
+                code = store_requests.main([f.name, *args])
+        return code, out.getvalue(), err.getvalue()
+
+    def test_report_groups_load_jobs_by_sink_frame(self):
+        code, out, _ = self.run_main()
+        self.assertEqual(code, 0)
+        self.assertIn("request 1 sql.upsert: 3 jobs", out)
+        self.assertIn("request 2 parquet.upsert: 5 jobs", out)
+        self.assertIn("2   0.015   0.015  graft.checks.Validations$.probe", out)
+
+    def test_dotted_kind_budget(self):
+        self.assertEqual(
+            store_requests.parse_budget("sql.upsert=3,parquet.upsert=6"),
+            {"sql.upsert": 3, "parquet.upsert": 6})
+        code, _, err = self.run_main("--budget", "sql.upsert=3,parquet.upsert=4")
+        self.assertEqual(code, 1)
+        self.assertEqual(err.splitlines(), [
+            "over budget: request 2 parquet.upsert: 5 jobs > 4"])
+        self.assertEqual(
+            self.run_main("--budget", "sql.upsert=3,parquet.upsert=5")[0], 0)
+
+
 if __name__ == "__main__":
     unittest.main()

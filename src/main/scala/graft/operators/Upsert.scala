@@ -31,7 +31,10 @@ import graft.checks.UpsertError
   * target and delta are both large, and AQE converts to a broadcast join
   * at runtime when the delta turns out small. The null-probe in
   * [[upsert]] is a short-circuiting `take(1)` on a pushed-down filter,
-  * not a full scan.
+  * not a full scan. A caller that already knows the answer (the parquet
+  * sink reads it off its one input probe,
+  * [[graft.checks.Validations.probe]]) dispatches through [[dispatch]]
+  * and skips that probe.
   */
 object Upsert {
 
@@ -58,6 +61,12 @@ object Upsert {
     }
   private def missing(df: DataFrame, c: String): Column =
     missingCol(df.schema(c).dataType, graft.checks.Validations.qcol(c))
+
+  /** "This row of `df` has a missing non-key cell", by [[missingCol]]'s
+    * rule; None when every column is a key. The dispatch predicate of
+    * [[upsert]], shared with the sinks' input probe. */
+  private[graft] def missingRow(df: DataFrame, keys: Seq[String]): Option[Column] =
+    df.columns.filterNot(keys.contains).map(missing(df, _)).reduceOption(_ || _)
 
   /** Column `c` of alias `a`, with `c` backtick-quoted: a dotted or
     * otherwise-special column name must parse as one identifier under
@@ -97,13 +106,16 @@ object Upsert {
     * in a non-key column of the NEW frame → row-level, else cell-level.
     * (Column-set equality is validated by the branch this dispatches
     * to — once, not twice.) */
-  def upsert(newDf: DataFrame, oldDf: DataFrame, keys: Seq[String]): DataFrame = {
-    val nonKeys = newDf.columns.filterNot(keys.contains).toSeq
-    val anyMissing = nonKeys.nonEmpty &&
-      !newDf.filter(nonKeys.map(missing(newDf, _)).reduce(_ || _)).isEmpty
+  def upsert(newDf: DataFrame, oldDf: DataFrame, keys: Seq[String]): DataFrame =
+    dispatch(newDf, oldDf, keys,
+      missingRow(newDf, keys).exists(m => !newDf.filter(m).isEmpty))
+
+  /** [[upsert]] with its dispatch answer given: `anyMissing` must be
+    * whether some row of `newDf` satisfies [[missingRow]]. */
+  private[graft] def dispatch(newDf: DataFrame, oldDf: DataFrame,
+      keys: Seq[String], anyMissing: Boolean): DataFrame =
     if (anyMissing) rowReplace(newDf, oldDf, keys)
     else combineFirst(newDf, oldDf, keys)
-  }
 
   /** Append semantics (reference export.py:355-356, O13/O17): plain
     * multiset union — the parquet path lands a new timestamped file, the

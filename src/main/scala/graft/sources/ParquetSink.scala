@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.max
 
 import graft.checks.Validations
 import graft.checks.Validations.Method
@@ -29,11 +30,19 @@ import graft.operators.Upsert
   *  - **append**: land additional part files (the reference's
   *    timestamp-suffixed per-call file becomes Spark's unique part
   *    files — same contract: never rewrites existing data);
-  *  - **upsert**: read existing, apply [[Upsert.upsert]] (the
-  *    reference's two-branch combine_first/row-replace semantics),
-  *    write to a shadow directory, then swap via [[swapInto]] — the
-  *    live directory is never an input and an output of the same job,
-  *    and a crash mid-swap always leaves a complete copy on disk.
+  *  - **upsert**: read existing, apply [[Upsert.upsert]]'s semantics
+  *    (the reference's two-branch combine_first/row-replace), write to
+  *    a shadow directory, then swap via [[swapInto]] — the live
+  *    directory is never an input and an output of the same job, and a
+  *    crash mid-swap always leaves a complete copy on disk. The input
+  *    is probed once ([[Validations.probe]]: emptiness, key
+  *    uniqueness, the row/cell dispatch). On the directory layouts the
+  *    live table's schema comes from a footer read on the driver, and
+  *    the existing table's keys are checked in full only when its
+  *    `_graft_unique_keys` marker does not vouch for its current files
+  *    (see [[keysVouched]]): every committed upsert stamps it inside
+  *    the writer lease, and any other write to the table outdates it.
+  *    The single-file layout has no marker and always checks.
   */
 object ParquetSink {
 
@@ -202,26 +211,21 @@ object ParquetSink {
     Validations.requireIdField(cfg.method, cfg.idField)
     require(!(cfg.singleFile && cfg.partitionBy.nonEmpty),
       "singleFile layout cannot carry hive partition directories")
+    if (cfg.method == Method.Upsert) return upsert(df, cfg)
     if (Validations.isEmpty(df)) return false
     val spark = df.sparkSession
     val path = tablePath(cfg)
-    def writer(d: org.apache.spark.sql.DataFrame, mode: SaveMode) = {
-      val w = d.write.mode(mode)
-      (if (cfg.partitionBy.nonEmpty) w.partitionBy(cfg.partitionBy: _*) else w)
-    }
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     cfg.method match {
       case Method.Create if cfg.singleFile =>
         writeSingleFile(df, new Path(path))
       case Method.Create =>
-        writer(df, SaveMode.Overwrite).parquet(path)
+        writer(df, cfg, SaveMode.Overwrite).parquet(path)
       case Method.Append if cfg.singleFile =>
         // reference append layout: schema/table/table_<stamp>.parquet
         writeSingleFile(df, new Path(
           s"${cfg.base}/${cfg.schema}/${cfg.table}/${cfg.table}_${appendStamp()}.parquet"),
           overwrite = false)
-      case Method.Append =>
+      case _ => // Method.Append (an upsert returned above)
         // generation-resolved INSIDE the table's writer lease (the
         // Generations appender contract — same lease key Maintenance
         // .compact uses, so a concurrent compaction serializes): a
@@ -230,71 +234,160 @@ object ParquetSink {
         // physically reaped at the TTL. Identity (and one uncontended
         // acquire) for a never-compacted table.
         WriterLease.withWrite(spark, leaseDirOf(path), "append") {
-          writer(df, SaveMode.Append).parquet(
+          writer(df, cfg, SaveMode.Append).parquet(
             Generations.resolve(spark, path))
-        }
-      case Method.Upsert =>
-        Validations.requireUniqueKeys(df, cfg.idField)
-        if (!fs.exists(new Path(path))) {
-          if (cfg.singleFile) writeSingleFile(df, new Path(path))
-          else writer(df, SaveMode.Overwrite).parquet(path)
-        } else if (!cfg.singleFile) {
-          // read-merge-commit under the SAME lease (see Append): the
-          // read of the live generation and the commit of the next
-          // one must not straddle a concurrent compaction
-          WriterLease.withWrite(spark, leaseDirOf(path), "upsert") {
-          val old = spark.read.parquet(Generations.resolve(spark, path))
-          // the OLD side must be key-unique too (the reference checks
-          // only the new frame, utils.py:87-89 at export.py:412 — but
-          // a prior append can land duplicate keys on disk, and the
-          // full-outer join would then silently emit one output row
-          // PER old copy, multiplying rows in a sink whose contract
-          // is unique keys). One column-pruned key scan — small next
-          // to the full-outer join + rewrite the upsert already pays.
-          try Validations.requireUniqueKeys(old, cfg.idField)
-          catch { case e: graft.checks.UpsertError =>
-            throw graft.checks.UpsertError(
-              s"existing table at $path violates key uniqueness — a " +
-                "prior append landed duplicate keys; deduplicate " +
-                s"before upserting (${e.getMessage})")
-          }
-          val merged = Upsert.upsert(df, old, cfg.idField)
-          if (Generations.hasGens(spark, path)) {
-            // the table is already generational (a maintenance
-            // compaction migrated it): keep the retained-generation
-            // discipline — a bare swapInto here would read stale
-            // generation-0 rows and DELETE the live generation with
-            // the root it renames aside
-            val shadow = Generations.shadowFor(spark, path)
-            writer(merged, SaveMode.Overwrite).parquet(shadow)
-            Generations.commit(spark, path, shadow)
-          } else {
-            // reference-compatible layout: the legacy recoverable swap
-            // (old copy deleted, not retained — the documented blob
-            // overwrite semantics of this sink)
-            val shadow = new Path(path + "__swap")
-            writer(merged, SaveMode.Overwrite).parquet(shadow.toString)
-            swapInto(fs, shadow, new Path(path))
-          }
-          }
-        } else {
-          // single-file (blob) layout: one OBJECT, no generations —
-          // the reference's single-writer blob semantics; the old-side
-          // uniqueness check matches the directory path above
-          val old = spark.read.parquet(path)
-          try Validations.requireUniqueKeys(old, cfg.idField)
-          catch { case e: graft.checks.UpsertError =>
-            throw graft.checks.UpsertError(
-              s"existing table at $path violates key uniqueness — a " +
-                "prior append landed duplicate keys; deduplicate " +
-                s"before upserting (${e.getMessage})")
-          }
-          // writeSingleFile stages into a tmp dir first, so the read
-          // of `path` completes before the one-file replace
-          writeSingleFile(Upsert.upsert(df, old, cfg.idField),
-            new Path(path))
         }
     }
     true
   }
+
+  private def writer(d: DataFrame, cfg: Config, mode: SaveMode) = {
+    val w = d.write.mode(mode)
+    if (cfg.partitionBy.nonEmpty) w.partitionBy(cfg.partitionBy: _*) else w
+  }
+
+  /** Keyed upsert. One probe of `df` ([[Validations.probe]]) answers
+    * emptiness, key uniqueness and the row/cell dispatch
+    * ([[Upsert.dispatch]]); on the directory layouts the live table's
+    * schema comes from its footer on the driver
+    * ([[StoreKernel.readTable]]), and the whole-table key check is
+    * skipped when the table's uniqueness marker ([[keysVouched]])
+    * still vouches for it. */
+  private def upsert(df: DataFrame, cfg: Config): Boolean = {
+    val keys = cfg.idField
+    // a null key never matches in the merge's joins, so a null-keyed
+    // delta row can sit beside an old null-keyed row: two rows of one
+    // key group by the uniqueness check's grouping. Such a result is
+    // not stamped as key-unique
+    val probe = Validations.probe(df, keys,
+      Seq(max(keys.map(k => Validations.qcol(k).isNull).reduce(_ || _))
+        .as("nullKey")))
+    if (probe.isEmpty) return false
+    probe.requireUniqueKeys(keys)
+    val spark = df.sparkSession
+    val path = tablePath(cfg)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def merged(old: DataFrame) = Upsert.dispatch(df, old, keys, probe.anyMissing)
+    if (!fs.exists(new Path(path))) {
+      if (cfg.singleFile) writeSingleFile(df, new Path(path))
+      else writer(df, cfg, SaveMode.Overwrite).parquet(path)
+    } else if (!cfg.singleFile) {
+      // read-merge-commit under the SAME lease as append: the read of
+      // the live generation and the commit of the next one must not
+      // straddle a concurrent compaction
+      WriterLease.withWrite(spark, leaseDirOf(path), "upsert") {
+        val live = Generations.resolve(spark, path)
+        val old = StoreKernel.readTable(spark, live)
+        if (!keysVouched(fs, new Path(live), keys))
+          requireUniqueLive(old, path, keys)
+        if (Generations.hasGens(spark, path)) {
+          // the table is already generational (a maintenance
+          // compaction migrated it): keep the retained-generation
+          // discipline — a bare swapInto here would read stale
+          // generation-0 rows and DELETE the live generation with
+          // the root it renames aside
+          val shadow = Generations.shadowFor(spark, path)
+          writer(merged(old), cfg, SaveMode.Overwrite).parquet(shadow)
+          Generations.commit(spark, path, shadow)
+        } else {
+          // reference-compatible layout: the legacy recoverable swap
+          // (old copy deleted, not retained — the documented blob
+          // overwrite semantics of this sink)
+          val shadow = new Path(path + "__swap")
+          writer(merged(old), cfg, SaveMode.Overwrite).parquet(shadow.toString)
+          swapInto(fs, shadow, new Path(path))
+        }
+        // the committed data dir is a fresh one (the swapped-in shadow,
+        // or the new generation), so it holds no marker until this
+        // stamp: a crash before it leaves the next upsert to check
+        beforeStamp(path)
+        if (probe.extra("nullKey") == false)
+          stampKeys(fs, new Path(Generations.resolve(spark, path)), keys)
+      }
+    } else {
+      // single-file (blob) layout: one OBJECT, no generations, no
+      // marker — the reference's single-writer blob semantics, with
+      // the old side checked in full on every upsert
+      val old = spark.read.parquet(path)
+      requireUniqueLive(old, path, keys)
+      // writeSingleFile stages into a tmp dir first, so the read
+      // of `path` completes before the one-file replace
+      writeSingleFile(merged(old), new Path(path))
+    }
+    true
+  }
+
+  /** The OLD side must be key-unique too (the reference checks only
+    * the new frame, utils.py:87-89 at export.py:412 — but a prior
+    * append can land duplicate keys on disk, and the full-outer join
+    * would then silently emit one output row PER old copy, multiplying
+    * rows in a sink whose contract is unique keys). One column-pruned
+    * key scan. */
+  private def requireUniqueLive(old: DataFrame, path: String,
+      keys: Seq[String]): Unit =
+    try Validations.requireUniqueKeys(old, keys)
+    catch { case e: graft.checks.UpsertError =>
+      throw graft.checks.UpsertError(
+        s"existing table at $path violates key uniqueness — a " +
+          "prior append landed duplicate keys; deduplicate " +
+          s"before upserting (${e.getMessage})")
+    }
+
+  // --- key-uniqueness marker -------------------------------------------------
+
+  /** Hidden file in a directory table's live data dir (the table root,
+    * or its newest generation) vouching that the data files listed
+    * there hold no two rows with equal keys. Spark and pyarrow readers
+    * skip `_` names. */
+  private[sources] val KeysMarker = "_graft_unique_keys"
+
+  /** Test seam: runs between an upsert's commit and its marker stamp,
+    * given the table path. */
+  @volatile private[sources] var beforeStamp: String => Unit = _ => ()
+
+  /** The marker's content for `dir` now: the key columns, then a
+    * SHA-256 over the listing of every file a reader of `dir` reads
+    * (relative path, length, mtime — [[StoreKernel.digest]]'s trust
+    * class: any Spark write lands new part-file names, any rewrite new
+    * lengths or mtimes). */
+  private def keysLine(fs: FileSystem, dir: Path, keys: Seq[String]): String = {
+    def walk(p: Path, rel: String): Seq[String] =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (org.apache.spark.sql.execution.datasources.parquet
+            .GraftFooterSchema.hidden(name)) Nil
+        else if (st.isDirectory) walk(st.getPath, s"$rel$name/")
+        else Seq(s"$rel$name|${st.getLen}|${st.getModificationTime}")
+      }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    walk(dir, "").sorted.foreach(e => md.update((e + "\n").getBytes("UTF-8")))
+    val enc = keys.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(",")
+    s"keys=$enc\nfiles=${md.digest().map("%02x".format(_)).mkString}\n"
+  }
+
+  /** Does `dir`'s marker vouch for its current files under `keys`? Any
+    * append, create, compaction, foreign file or replaced file since
+    * the stamp changes the listing, and then it does not. */
+  private[sources] def keysVouched(fs: FileSystem, dir: Path,
+      keys: Seq[String]): Boolean =
+    try {
+      val marker = new Path(dir, KeysMarker)
+      fs.getFileStatus(dir).isDirectory && fs.exists(marker) &&
+        new String(graft.Scratch.readSmallFile(fs, marker), "UTF-8") ==
+          keysLine(fs, dir, keys)
+    } catch { case scala.util.control.NonFatal(_) => false }
+
+  /** Stamp `dir`'s marker for its current files. Best-effort: a failed
+    * or torn stamp only brings the full check back on the next upsert.
+    * Caller holds the table's writer lease, so no other writer of the
+    * table lands files between the commit and this listing. */
+  private def stampKeys(fs: FileSystem, dir: Path, keys: Seq[String]): Unit =
+    try {
+      val out = fs.create(new Path(dir, KeysMarker), true)
+      try out.write(keysLine(fs, dir, keys).getBytes("UTF-8"))
+      finally out.close()
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[parquet-sink] could not stamp $KeysMarker in " +
+        s"$dir (${e.getMessage}); the next upsert re-checks its keys")
+    }
 }

@@ -22,6 +22,17 @@ import graft.types.SqlTypeMapper.SqlType
   *    index on the `idField` columns ([[ensureKeyIndex]]), run the
   *    generated MERGE text, then drop staging (`cleanStaging`).
   *
+  * Every method that writes DDL (create, upsert, exactly-once append)
+  * asks its questions of the input in ONE probe
+  * ([[graft.checks.Validations.probe]]): emptiness, key uniqueness
+  * (upsert) and the column types' data refinement
+  * ([[graft.types.SqlTypeMapper.refineAggs]]). Every DDL of the call —
+  * the target on create, staging on upsert and exactly-once append —
+  * is built from that probe, so a small upsert runs two Spark jobs:
+  * the probe (one task for a small input) and the staging write. A
+  * plain append writes no DDL and keeps the cheaper `take(1)`
+  * emptiness probe.
+  *
   * Side effect of upsert: the target is left with a NON-unique index
   * `<table>__graft_key` on the key columns, so the MERGE seeks each
   * staged key instead of reading the whole target. An existing index
@@ -72,26 +83,26 @@ object SqlSink {
       numPartitions: Option[Int] = None,
       exactlyOnceAppend: Boolean = false)
 
-  /** DDL text for CREATE TABLE from inferred types. */
-  def createTableSql(df: DataFrame, cfg: Config, schema: String): String = {
-    val types = SqlTypeMapper.inferColumnTypes(
-      df, cfg.textLength, cfg.decimalPrecision, cfg.dtypes)
+  /** DDL text for CREATE TABLE of `cfg.table` under `schema`. */
+  def createTableSql(types: Seq[(String, SqlType)], cfg: Config,
+      schema: String): String = {
     val cols = types.map { case (name, t) =>
       s"${cfg.dialect.quote(name)} ${cfg.dialect.ddlType(t)}"
     }.mkString(", ")
     s"CREATE TABLE ${cfg.dialect.table(schema, cfg.table)} ($cols)"
   }
 
-  private def replaceTable(conn: Connection, df: DataFrame, cfg: Config,
-      schema: String): Unit = {
+  /** Drop and recreate `cfg.table` under `schema` with `types`. The
+    * types arrive already inferred: inference can throw (an unmapped
+    * dtype, a failed refine scan), and a throw after the DROP would
+    * leave the standing target destroyed with nothing created in its
+    * place — create is drop+recreate (reference export.py:169), but
+    * never drop-then-maybe-recreate. */
+  private def replaceTable(conn: Connection, types: Seq[(String, SqlType)],
+      cfg: Config, schema: String): Unit = {
     cfg.dialect.createSchemaSql(schema)
       .foreach(JdbcOps.executeIgnore(conn, _))
-    // DDL text BEFORE the DROP: inference can throw (an unmapped dtype,
-    // a failed refine scan), and a throw after the DROP would leave the
-    // standing target destroyed with nothing created in its place —
-    // create is drop+recreate (reference export.py:169), but never
-    // drop-then-maybe-recreate
-    val ddl = createTableSql(df, cfg, schema)
+    val ddl = createTableSql(types, cfg, schema)
     JdbcOps.executeIgnore(conn, cfg.dialect.dropTableSql(schema, cfg.table))
     JdbcOps.execute(conn, ddl)
   }
@@ -112,10 +123,34 @@ object SqlSink {
   private val pidCol = "__graft_pid"
   private val attCol = "__graft_att"
 
-  /** Stage `df` for an exactly-once append: every row is tagged with
-    * its Spark partition id and its task ATTEMPT id (unique per
-    * attempt, constant within one), then written to a DDL-replaced
-    * `staging.<table>__append`. The partition-transaction property of
+  /** `types` (the untagged frame's) plus the attempt tags, declared by
+    * what [[tagAttempts]] writes: the partition id is a Spark int, the
+    * task attempt id a Spark long. Never inferred from a scan — a
+    * scan's attempt ids are not the ids the staging write will carry,
+    * so a refined `INT` would overflow once a long-running session's
+    * attempt ids pass 2^31. */
+  private def stagingTypes(types: Seq[(String, SqlType)]): Seq[(String, SqlType)] =
+    types ++ Seq(pidCol -> SqlTypeMapper.SqlInt, attCol -> SqlTypeMapper.SqlBigInt)
+
+  /** (pid, att)-tagged copy of `norm` — the attempt-identity scheme of
+    * every staged load (see [[stageForAppend]]'s doc). Repartitions
+    * FIRST (the tags must describe the partitions actually written),
+    * so callers pass `numPartitions = None` onward. */
+  private def tagAttempts(norm: DataFrame, cfg: Config): DataFrame = {
+    import org.apache.spark.sql.functions.spark_partition_id
+    require(!norm.columns.exists(c => c == pidCol || c == attCol),
+      s"staged writes reserve column names $pidCol/$attCol")
+    val repart = cfg.numPartitions.map(norm.repartition(_)).getOrElse(norm)
+    repart
+      .withColumn(pidCol, spark_partition_id())
+      .withColumn(attCol, org.apache.spark.sql.graftbridge.Bridge.column(
+        graft.functions.TaskAttemptId()))
+  }
+
+  /** Stage `norm` (column types `types`) for an exactly-once append:
+    * every row is tagged with its Spark partition id and its task
+    * ATTEMPT id (unique per attempt, constant within one), then written
+    * to a DDL-replaced `staging.<table>__append`. The partition-transaction property of
     * the JDBC writer means each (pid, att) group present in staging is
     * a COMPLETE copy of partition pid — an attempt that died mid-write
     * rolled back and left nothing, an attempt that committed left all
@@ -142,29 +177,21 @@ object SqlSink {
     * serialization of concurrent independent writers; external
     * coordination (a scheduler lock per target) owns the latter, as
     * it does for the reference's ADF pipeline-per-table model. */
-  /** (pid, att)-tagged copy of `norm` — the attempt-identity scheme of
-    * every staged load (see [[stageForAppend]]'s doc). Repartitions
-    * FIRST (the tags must describe the partitions actually written),
-    * so callers pass `numPartitions = None` onward. */
-  private def tagAttempts(norm: DataFrame, cfg: Config): DataFrame = {
-    import org.apache.spark.sql.functions.spark_partition_id
-    require(!norm.columns.exists(c => c == pidCol || c == attCol),
-      s"staged writes reserve column names $pidCol/$attCol")
-    val repart = cfg.numPartitions.map(norm.repartition(_)).getOrElse(norm)
-    repart
-      .withColumn(pidCol, spark_partition_id())
-      .withColumn(attCol, org.apache.spark.sql.graftbridge.Bridge.column(
-        graft.functions.TaskAttemptId()))
-  }
-
-  private[sql] def stageForAppend(conn: Connection, norm: DataFrame,
-      cfg: Config): Unit = {
+  private def stageForAppend(conn: Connection, norm: DataFrame, cfg: Config,
+      types: Seq[(String, SqlType)]): Unit = {
     val tagged = tagAttempts(norm, cfg)
     val scfg = cfg.copy(table = appendStagingTable(cfg),
       numPartitions = None) // already repartitioned under the tags
-    replaceTable(conn, tagged, scfg, cfg.stagingSchema)
+    replaceTable(conn, stagingTypes(types), scfg, cfg.stagingSchema)
     jdbcAppend(tagged, scfg, cfg.stagingSchema)
   }
+
+  /** The staging step on its own, `norm`'s column types from its own
+    * inference pass (one more job than [[write]]'s probe). */
+  private[sql] def stageForAppend(conn: Connection, norm: DataFrame,
+      cfg: Config): Unit =
+    stageForAppend(conn, norm, cfg, SqlTypeMapper.inferColumnTypes(
+      norm, cfg.textLength, cfg.decimalPrecision, cfg.dtypes))
 
   private[sql] def appendStagingTable(cfg: Config): String =
     s"${cfg.table}__append"
@@ -259,42 +286,52 @@ object SqlSink {
     val cfg = cfg0.copy(idField = cfg0.idField.map(_.trim),
       dtypes = cfg0.dtypes.map { case (k, v) => k.trim -> v })
     Validations.requireIdField(cfg.method, cfg.idField)
-    if (Validations.isEmpty(dfT)) return false
     val norm = SqlTypeMapper.normalizeIntervals(dfT)
-    if (cfg.method == Method.Append && !cfg.exactlyOnceAppend)
+    if (cfg.method == Method.Append && !cfg.exactlyOnceAppend) {
+      if (Validations.isEmpty(norm)) return false
       jdbcAppend(norm, cfg, cfg.schema) // no driver-side statement
-    else JdbcOps.withConnection(cfg.url) { conn =>
+      return true
+    }
+    val upsert = cfg.method == Method.Upsert
+    val probe = Validations.probe(norm, if (upsert) cfg.idField else Nil,
+      SqlTypeMapper.refineAggs(norm))
+    if (probe.isEmpty) return false
+    if (upsert) {
+      // staging under the TARGET's own name: equal schemas would
+      // make replaceTable drop the target itself and the MERGE
+      // self-merge — every pre-existing row silently lost
+      require(cfg.schema != cfg.stagingSchema,
+        s"upsert stages under '${cfg.stagingSchema}.${cfg.table}' — " +
+          "stagingSchema must differ from the target schema, or the " +
+          "staging DDL replaces the target itself")
+      probe.requireUniqueKeys(cfg.idField)
+    }
+    val types = SqlTypeMapper.columnTypes(norm, probe.extra, cfg.textLength,
+      cfg.decimalPrecision, cfg.dtypes)
+    JdbcOps.withConnection(cfg.url) { conn =>
       cfg.method match {
         case Method.Create =>
-          replaceTable(conn, norm, cfg, cfg.schema)
+          replaceTable(conn, types, cfg, cfg.schema)
           if (cfg.exactlyOnceAppend) {
             // the freshly-created target deserves the same retry
             // discipline as an exactly-once append: the direct JDBC
             // write commits per partition, so a post-commit task retry
             // would double that partition's rows in a table whose
             // content should be exactly `df`
-            stageForAppend(conn, norm, cfg)
+            stageForAppend(conn, norm, cfg, types)
             finalizeAppend(conn, norm, cfg)
           } else jdbcAppend(norm, cfg, cfg.schema)
         case Method.Append =>
-          stageForAppend(conn, norm, cfg)
+          stageForAppend(conn, norm, cfg, types)
           finalizeAppend(conn, norm, cfg)
         case Method.Upsert =>
-          // staging under the TARGET's own name: equal schemas would
-          // make replaceTable drop the target itself and the MERGE
-          // self-merge — every pre-existing row silently lost
-          require(cfg.schema != cfg.stagingSchema,
-            s"upsert stages under '${cfg.stagingSchema}.${cfg.table}' — " +
-              "stagingSchema must differ from the target schema, or the " +
-              "staging DDL replaces the target itself")
-          Validations.requireUniqueKeys(norm, cfg.idField)
           // staging rides the (pid, att) tags so a post-commit task
           // retry (at-least-once JDBC writer) cannot leave two copies
           // of a partition for the MERGE to double-insert under new
           // keys; dedupStagedUpsert collapses to one attempt per pid
           val tagged = tagAttempts(norm, cfg)
           val scfg = cfg.copy(numPartitions = None)
-          replaceTable(conn, tagged, scfg, cfg.stagingSchema)
+          replaceTable(conn, stagingTypes(types), scfg, cfg.stagingSchema)
           jdbcAppend(tagged, scfg, cfg.stagingSchema)
           dedupStagedUpsert(conn, cfg)
           ensureKeyIndex(conn, cfg)

@@ -23,10 +23,13 @@ import graft.checks.Validations.qcol
   *  - timedelta → float seconds BEFORE mapping (export.py:202-216) —
   *    ordering preserved by [[normalizeIntervals]].
   *
-  * Scale note: both data scans (O6+O7) are fused into ONE aggregate job
-  * ([[refine]]) — a single map-side-combinable pass over the input instead
-  * of the reference's one pandas scan per column. At 100 TB that is one
-  * parquet read with only the scanned columns in ReadSchema.
+  * Scale note: both data scans (O6+O7) are fused into ONE aggregate pass
+  * ([[refineAggs]]) — a single map-side-combinable pass over the input
+  * instead of the reference's one pandas scan per column. At 100 TB that
+  * is one parquet read with only the scanned columns in ReadSchema. The
+  * SQL sink does not even pay that pass on its own: it hands
+  * [[refineAggs]] to its input probe ([[graft.checks.Validations.probe]])
+  * and refines from the values that probe returns.
   */
 object SqlTypeMapper {
 
@@ -85,56 +88,73 @@ object SqlTypeMapper {
         throw UnknownDtypeError(s"Unknown dtype for SQL mapping: $other")
     }
 
-  /** Fused O6+O7 data scan: per string column the observed max length,
-    * per integer column the observed min/max — one aggregate pass. */
-  def refine(df: DataFrame, base: Map[String, SqlType]): Map[String, SqlType] = {
-    val strCols = df.schema.fields.collect {
-      case f if f.dataType == StringType => f.name
-    }.toSeq
-    val intCols = df.schema.fields.collect {
-      case f if Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType) => f.name
-    }.toSeq
-    if (strCols.isEmpty && intCols.isEmpty) return base
+  private def strCols(df: DataFrame): Seq[String] = df.schema.fields.collect {
+    case f if f.dataType == StringType => f.name
+  }.toSeq
+  private def intCols(df: DataFrame): Seq[String] = df.schema.fields.collect {
+    case f if Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType) => f.name
+  }.toSeq
 
-    val aggs: Seq[Column] =
-      strCols.map(c => max(length(qcol(c))).as(s"__len__$c")) ++
-      intCols.flatMap(c => Seq(
-        min(qcol(c)).cast(LongType).as(s"__min__$c"),
-        max(qcol(c)).cast(LongType).as(s"__max__$c")))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+  /** The fused O6+O7 aggregates over `df`: per string column the
+    * observed max length, per integer column the observed min/max.
+    * Empty when `df` has neither kind of column. */
+  def refineAggs(df: DataFrame): Seq[Column] =
+    strCols(df).map(c => max(length(qcol(c))).as(s"__len__$c")) ++
+    intCols(df).flatMap(c => Seq(
+      min(qcol(c)).cast(LongType).as(s"__min__$c"),
+      max(qcol(c)).cast(LongType).as(s"__max__$c")))
 
-    val widened = strCols.flatMap { c =>
-      val len = Option(row.getAs[Any](s"__len__$c"))
-        .map(_.asInstanceOf[Number].intValue).getOrElse(0)
+  /** `base` refined by `observed`, the values of [[refineAggs]]`(df)` by
+    * alias (null for a column without a non-null value). */
+  def refine(df: DataFrame, base: Map[String, SqlType],
+      observed: Map[String, Any]): Map[String, SqlType] = {
+    def long(alias: String): Long =
+      Option(observed(alias)).fold(0L)(_.asInstanceOf[Number].longValue)
+    val widened = strCols(df).flatMap { c =>
+      val len = long(s"__len__$c")
       // Reference thresholds are literal 255/8000 (export.py:258-263).
       if (len > 8000) Some(c -> SqlVarchar(None))
-      else if (len > 255) Some(c -> SqlVarchar(Some(len)))
+      else if (len > 255) Some(c -> SqlVarchar(Some(len.toInt)))
       else None
     }.toMap
-    val promoted = intCols.flatMap { c =>
-      val lo = if (row.isNullAt(row.fieldIndex(s"__min__$c"))) 0L
-        else row.getAs[Long](s"__min__$c")
-      val hi = if (row.isNullAt(row.fieldIndex(s"__max__$c"))) 0L
-        else row.getAs[Long](s"__max__$c")
-      if (lo < Int.MinValue.toLong || hi > Int.MaxValue.toLong) Some(c -> SqlBigInt)
+    val promoted = intCols(df).flatMap { c =>
+      if (long(s"__min__$c") < Int.MinValue.toLong ||
+          long(s"__max__$c") > Int.MaxValue.toLong) Some(c -> SqlBigInt)
       else None
     }.toMap
     // Later update wins, same order as the reference (export.py:156-163).
     base ++ widened ++ promoted
   }
 
-  /** Full inference pipeline: intervals → static map → data refinement →
-    * user overrides (last wins). Returns types in df column order. */
+  /** `norm`'s static types (O5), refined by `observed` (the values of
+    * [[refineAggs]]`(norm)`), then the user overrides (last wins). Types
+    * in column order. Call on the interval-normalized frame. */
+  def columnTypes(norm: DataFrame, observed: Map[String, Any],
+      textLength: Int, decimalPrecision: Int,
+      overrides: Map[String, SqlType]): Seq[(String, SqlType)] = {
+    val static = norm.schema.fields.map { f =>
+      f.name -> staticType(f.dataType, textLength, decimalPrecision)
+    }.toMap
+    val refined = refine(norm, static, observed) ++ overrides
+    norm.columns.toSeq.map(c => c -> refined(c))
+  }
+
+  /** Full inference pipeline: intervals → static map → data refinement
+    * (its own [[refineAggs]] pass: one aggregate job, none when there is
+    * no string or integer column) → user overrides (last wins). Returns
+    * types in df column order. */
   def inferColumnTypes(
       df: DataFrame,
       textLength: Int = 255,
       decimalPrecision: Int = 2,
       overrides: Map[String, SqlType] = Map.empty): Seq[(String, SqlType)] = {
     val norm = normalizeIntervals(df)
-    val static = norm.schema.fields.map { f =>
-      f.name -> staticType(f.dataType, textLength, decimalPrecision)
-    }.toMap
-    val refined = refine(norm, static) ++ overrides
-    norm.columns.toSeq.map(c => c -> refined(c))
+    val observed = refineAggs(norm) match {
+      case Seq() => Map.empty[String, Any]
+      case aggs =>
+        val row = norm.agg(aggs.head, aggs.tail: _*).head()
+        row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+    }
+    columnTypes(norm, observed, textLength, decimalPrecision, overrides)
   }
 }

@@ -580,4 +580,74 @@ class SqlSinkDerbySpec extends SparkSpec {
       targetPlans)
     assert(readBack("t_kx_plan").count() === n + 1L)
   }
+
+  // --- one input probe per request ---
+
+  /** Column name -> SQL type name of schema.table, from Derby's metadata. */
+  private def columnTypes(table: String, schema: String): Map[String, String] =
+    JdbcOps.withConnection(url) { conn =>
+      val rs = conn.getMetaData.getColumns(null, schema, table, null)
+      val out = Map.newBuilder[String, String]
+      try while (rs.next())
+        out += rs.getString("COLUMN_NAME") -> rs.getString("TYPE_NAME")
+      finally rs.close()
+      out.result()
+    }
+
+  test("staging declares the attempt tags pid INT and att BIGINT, on " +
+    "upsert and on exactly-once append staging") {
+    SqlSink.write(Seq((1, "a")).toDF("id", "v"), cfg("t_tags", Method.Create))
+    SqlSink.write(Seq((1, "A"), (2, "b")).toDF("id", "v"),
+      cfg("t_tags", Method.Upsert, Seq("id")).copy(cleanStaging = false))
+    SqlSink.write(Seq((3, "c")).toDF("id", "v"),
+      cfg("t_tags", Method.Append).copy(exactlyOnceAppend = true,
+        cleanStaging = false))
+    for (staging <- Seq("t_tags", "t_tags__append")) {
+      val types = columnTypes(staging, "staging")
+      assert(types("__graft_pid") === "INTEGER", staging)
+      assert(types("__graft_att") === "BIGINT", staging)
+      assert(types("id") === "INTEGER" && types("v") === "VARCHAR", staging)
+    }
+    assert(readBack("t_tags").orderBy("id").as[(Int, String)].collect()
+      .toSeq === Seq((1, "A"), (2, "b"), (3, "c")))
+  }
+
+  test("job budget: an upsert of a small delta runs at most 2 Spark " +
+    "jobs, and so does a create of a small frame") {
+    // the input's own partitioning (numPartitions None, the default):
+    // a repartition would add its shuffle's map stage to the write
+    def jcfg(method: Method, ids: Seq[String] = Nil) =
+      cfg("t_jobs", method, ids).copy(numPartitions = None)
+    val target = (1 to 40).map(i => (i, s"v$i", i * 1.5)).toDF("id", "v", "x")
+    val createJobs = jobsDuring(SqlSink.write(target, jcfg(Method.Create)))
+    // the first upsert also makes the key index (JDBC only)
+    SqlSink.write(Seq((1, "w", 0.5)).toDF("id", "v", "x"),
+      jcfg(Method.Upsert, Seq("id")))
+    val delta = (38 to 53).map(i => (i, s"n$i", i * 2.0)).toDF("id", "v", "x")
+    val upsertJobs = jobsDuring(
+      SqlSink.write(delta, jcfg(Method.Upsert, Seq("id"))))
+    // the probe (one task: both inputs are small) and the write
+    assert(createJobs <= 2, s"create ran $createJobs jobs")
+    assert(upsertJobs <= 2, s"upsert ran $upsertJobs jobs")
+    assert(readBack("t_jobs").count() === 53)
+  }
+
+  test("probe errors are unchanged: a duplicate in the delta throws " +
+    "requireUniqueKeys' error, an empty delta touches nothing") {
+    SqlSink.write(Seq((1, "a")).toDF("id", "v"), cfg("t_perr", Method.Create))
+    val dup = Seq((1, "b"), (1, "c"), (2, "d")).toDF("id", "v")
+    val want = intercept[graft.checks.UpsertError] {
+      graft.checks.Validations.requireUniqueKeys(dup, Seq("id"))
+    }
+    val got = intercept[graft.checks.UpsertError] {
+      SqlSink.write(dup, cfg("t_perr", Method.Upsert, Seq("id")))
+    }
+    assert(got.getMessage === want.getMessage)
+    assert(!SqlSink.write(Seq.empty[(Int, String)].toDF("id", "v"),
+      cfg("t_perr", Method.Upsert, Seq("id"))))
+    assert(readBack("t_perr").as[(Int, String)].collect().toSeq ===
+      Seq((1, "a")))
+    assert(!JdbcOps.tableExists(url, "staging", "t_perr"),
+      "a refused or empty upsert staged its input")
+  }
 }
