@@ -135,10 +135,7 @@ object Validations {
     val metrics = Seq(count(lit(1)).as(rowsAlias)) ++
       graft.operators.Upsert.missingRow(df, keys).map(m => max(m).as(missingAlias)) ++
       extra
-    val in =
-      if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= singleTaskProbeBytes)
-        df.coalesce(1)
-      else df
+    val in = if (fitsOneTask(df)) df.coalesce(1) else df
     def aggregate(): Row = in.agg(metrics.head, metrics.tail: _*).head()
     val (duplicate, row) =
       if (keys.isEmpty) (None, aggregate())
@@ -155,10 +152,17 @@ object Validations {
       values -- Seq(rowsAlias, missingAlias))
   }
 
-  /** Largest estimated input [[probe]] runs in one task. On 4 local
-    * cores a one-task key probe beat the shuffled one up to about 20k
-    * narrow rows (0.9 MB estimated) and tied at 60k (2.7 MB). */
-  private[checks] val singleTaskProbeBytes = BigInt(1) << 20
+  /** Largest estimated input [[probe]] runs in one task, and the
+    * largest batch [[graft.operators.IndexStore.appendBatch]] holds on
+    * the driver (which also caps the rows it holds). On 4 local cores a
+    * one-task key probe beat the shuffled one up to about 20k narrow
+    * rows (0.9 MB estimated) and tied at 60k (2.7 MB). */
+  private[graft] val singleTaskProbeBytes = BigInt(1) << 20
+
+  /** Does `df`'s optimized plan estimate at most [[singleTaskProbeBytes]]?
+    * Plan statistics only, no Spark job. */
+  private[graft] def fitsOneTask(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= singleTaskProbeBytes
 
   private val rowsAlias = "__graft_rows"
   private val missingAlias = "__graft_missing"

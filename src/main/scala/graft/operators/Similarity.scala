@@ -706,17 +706,22 @@ object Similarity {
     * 64-double payload) AND home and sorted both for the merge join;
     * this shuffles the same heavy rows ONCE through the aggregate's
     * exchange and nothing else (guide §2.4, §8 — decide and attach in
-    * the same pass the payload already makes). */
-  private[operators] def homeCellsWithVec(e: DataFrame,
-      cents: DataFrame): DataFrame =
+    * the same pass the payload already makes).
+    *
+    * `key` is the grouping column (one output row per key value) and
+    * `payload` the columns of `e` ⋈ `cents` the winning row carries,
+    * `cell` among them: an append batch keys by a row id, so a
+    * duplicated vec_id keeps both its rows, and carries its fingerprint
+    * term and the home centroid `cv` ([[residualsAgainst]]). */
+  private[operators] def homeCellsWithVec(e: DataFrame, cents: DataFrame,
+      key: String = "vec_id",
+      payload: Seq[String] = Seq("v", "nrm", "cell")): DataFrame =
     e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"),
-        cellScore.as("cd"))
-      .groupBy(col("vec_id"))
-      .agg(maxByAgg(struct(col("v"), col("nrm"), col("cell")),
+      .select(col(key) +: payload.map(col) :+ cellScore.as("cd"): _*)
+      .groupBy(col(key))
+      .agg(maxByAgg(struct(payload.map(col): _*),
         struct(col("cd"), (-col("cell")).as("nc"))).as("k"))
-      .select(col("vec_id"), col("k.v").as("v"), col("k.nrm").as("nrm"),
-        col("k.cell").as("cell"))
+      .select(col(key) +: payload.map(c => col(s"k.$c").as(c)): _*)
 
   /** Top-`depth` cells per vector — row-identical to the old
     * `cellRanks(e, cents).filter(cr <= depth)` (same columns, same cd,
@@ -1222,9 +1227,17 @@ object Similarity {
     * pass at INDEX BUILD time only; queries never touch this path. */
   private[operators] def residualSubVectors(eh: DataFrame,
       cents: DataFrame): DataFrame =
-    // r18 (guide §2.3/§2.4): join the WHOLE 64-dim centroid array onto
-    // each vector row (cents is the bounded nl-row dim table, always
-    // broadcast) and build each 8-dim residual subvector as a direct
+    residualsAgainst(
+      eh.join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell")))
+
+  /** [[residualSubVectors]] of rows that already carry their home
+    * centroid `cv` beside (vec_id, cell, v, nrm) — an append batch
+    * whose home-cell argmax carried it ([[homeCellsWithVec]]), so the
+    * residuals need no second centroid broadcast. */
+  private[operators] def residualsAgainst(ehc: DataFrame): DataFrame =
+    // r18 (guide §2.3/§2.4): each vector row carries the WHOLE 64-dim
+    // centroid array (cents is the bounded nl-row dim table, broadcast
+    // or carried) and each 8-dim residual subvector is built as a direct
     // array() of codegen'd GetArrayItem arithmetic. The former shape
     // exploded every vector to N×dim (pos, x) rows, broadcast-joined a
     // (cell, pos, cm) table at that grain, and re-assembled subvectors
@@ -1234,13 +1247,17 @@ object Similarity {
     // subvector rows, exactly the old output grain). Per element the
     // tree is unchanged — x/nrm − cm at the same positions, assembled
     // in the same p order — so the residuals are bit-identical.
-    eh.join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("nrm"),
-        posexplode(array((0 until pqSubspaces).map(s =>
-          array((0 until pqSubDim).map(p =>
-            col("v")(s * pqSubDim + p) / col("nrm") -
-              col("cv")(s * pqSubDim + p)): _*)): _*)))
+    ehc.select(col("vec_id"), col("cell"), col("nrm"),
+        posexplode(array((0 until pqSubspaces).map(residualSub): _*)))
       .toDF("vec_id", "cell", "nrm", "sub", "sv")
+
+  /** Subvector `s` of a row's residual û − m_cell, from its `v`, `nrm`
+    * and home centroid `cv`: the one element expression of
+    * [[residualsAgainst]]. */
+  private[operators] def residualSub(s: Int): Column =
+    array((0 until pqSubDim).map(p =>
+      col("v")(s * pqSubDim + p) / col("nrm") -
+        col("cv")(s * pqSubDim + p)): _*)
 
   /** q68: IVF×PQ with RESIDUAL encoding — the classic FAISS refinement
     * over [[q65KnnIvfPq]]: instead of quantizing û directly, quantize

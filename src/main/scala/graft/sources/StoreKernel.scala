@@ -142,6 +142,13 @@ object StoreKernel {
     footerSchema(spark, dataFiles(leafFiles(spark, paths)))
       .fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
 
+  /** The row count of the store table files under `paths` (directories
+    * or single files), summed from each data file's footer on the
+    * driver: what `readStore(spark, paths: _*).count()` returns, without
+    * a Spark job. An absent path counts 0. */
+  def rowCount(spark: SparkSession, paths: String*): Long =
+    dataFiles(leafFiles(spark, paths)).map(GraftFooterSchema.rowCount(spark, _)).sum
+
   /** A user table (a corpus, the documents) at `path` — a single
     * parquet file or a directory — read as `spark.read.parquet(path)`
     * reads it. Spark's inference (schema merging off) converts one

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -39,6 +41,15 @@ object GraftFooterSchema {
       ParquetMetadataConverter.SKIP_ROW_GROUPS)
     ParquetFileFormat.readSchema(Seq(new Footer(file.getPath, footer)), spark)
   }
+
+  /** The row count `file`'s footer records: the sum of its row groups'
+    * counts, the figure a column-less `count()` of the file reads. Only
+    * the footer is read. */
+  def rowCount(spark: SparkSession, file: FileStatus): Long =
+    ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
+        ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount).sum
 
   /** Every row of `files` under `schema`, file by file, read on the
     * driver by the reader a scan task builds

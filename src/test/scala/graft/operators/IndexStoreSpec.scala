@@ -733,6 +733,222 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
+  /** The delta rows and meta the append of `batch` to `idxDir` wrote
+    * before the batch frame, computed here from the old shape: home
+    * cells by [[Similarity.homeCells]], codes joined to them, residuals
+    * of the batch joined to them. */
+  private def oldAppendShape(idxDir: String, before: AnnIndexMeta,
+      batch: DataFrame): (DataFrame, DataFrame, AnnIndexMeta) = {
+    val e = Similarity.prepped(batch).filter(Similarity.validNorm)
+    val cents = spark.read.parquet(s"$idxDir/centroids")
+    val home = Similarity.homeCells(e, cents)
+    val codes = Similarity.pqAssign(Similarity.subVectors(e),
+        spark.read.parquet(s"$idxDir/codebook"))
+      .select(col("vec_id"), col("nrm"), col("sub"), col("code"))
+      .join(home, Seq("vec_id"))
+    val rsv = Similarity.residualSubVectors(e.join(home, Seq("vec_id")), cents)
+    val rcodes = Similarity.pqAssign(rsv,
+        spark.read.parquet(s"$idxDir/rcodebook"))
+      .select(col("vec_id"), col("cell"), col("sub"), col("code"))
+    val n = e.count()
+    val fp = batch.agg(expr("bit_xor(xxhash64(vec_id, embedding))"))
+      .head().getLong(0)
+    (codes, rcodes, before.copy(n = before.n + n, fp = before.fp ^ fp,
+      appended_n = before.appended_n + n,
+      app_res_sum = before.app_res_sum + oldMeanResNorm(rsv) * n))
+  }
+
+  /** The mean residual norm of `rsv` as the store computed it before
+    * its fixed-point terms were factored out. */
+  private def oldMeanResNorm(rsv: DataFrame): Double = {
+    import graft.functions.VectorFunctions.dotD
+    val perVec = rsv
+      .groupBy(col("vec_id"))
+      .agg((sum(floor(dotD(col("sv"), col("sv")) * 1e12).cast("long"))
+        .cast("double") / 1e12).as("rn2"))
+      .select(sqrt(col("rn2")).as("rn"))
+    val r = perVec.agg(
+      (sum(floor(col("rn") * 1e9).cast("long")).cast("double") / 1e9
+        / count(lit(1))).as("m")).head()
+    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+  }
+
+  private def annMeta(idxDir: String): AnnIndexMeta =
+    graft.sources.StoreKernel.readMeta[AnnIndexMeta](spark, idxDir,
+      "annidx").get
+
+  /** `df`'s rows as a multiset, in `cols` order. */
+  private def multiset(df: DataFrame, cols: Seq[String]): Map[Seq[Any], Int] =
+    df.select(cols.map(col): _*).collect().toSeq.map(_.toSeq)
+      .groupBy(identity).map { case (r, rs) => (r, rs.size) }
+
+  /** The rows of the one delta file an append wrote to `table`. */
+  private def deltaRows(idxDir: String, table: String): DataFrame = {
+    val names = IndexStore.deltaFileNames(spark, idxDir, table)
+    assert(names.size === 1, s"$table: ${names.size} delta files")
+    spark.read.parquet(s"${IndexStore.deltaDirOf(idxDir, table)}/${names.head}")
+  }
+
+  private val codesCols = Seq("vec_id", "nrm", "sub", "code", "cell")
+  private val rcodesCols = Seq("vec_id", "cell", "sub", "code")
+
+  test("a 20-row append on a healthy index, local or read from parquet, " +
+    "runs at most 8 jobs, writes one delta file per table, and writes " +
+    "the old shape's rows and meta") {
+    val all = graft.sources.Tables.load(spark, sfDir, "embeddings")
+    val corpus = writeCorpus(all.filter(col("vec_id") < 300))
+    val idxDir = IndexStore.dirFor(spark, corpus)
+    try {
+      assert(IndexStore.ensure(spark, corpus).builtNow)
+      // the build's residual-norm baseline, by the old definition
+      val e = Similarity.prepped(spark, corpus).filter(Similarity.validNorm)
+      val cents = spark.read.parquet(s"$idxDir/centroids")
+      assert(annMeta(idxDir).res_norm === oldMeanResNorm(
+        Similarity.residualSubVectors(Similarity.homeCellsWithVec(e, cents),
+          cents)))
+      // a local batch, as the store benchmark and the streaming sinks
+      // hand in, then a parquet-filtered one
+      for ((lo, local) <- Seq((300L, true), (320L, false))) {
+        val read = all.filter(col("vec_id") >= lo && col("vec_id") < lo + 20)
+        val batch = if (local) spark.createDataFrame(
+            java.util.Arrays.asList(read.collect(): _*), read.schema)
+          else read
+        val before = annMeta(idxDir)
+        val (codes, rcodes, meta) = oldAppendShape(idxDir, before, batch)
+        val wantCodes = multiset(codes, codesCols)
+        val wantRcodes = multiset(rcodes, rcodesCols)
+        var stats: IndexStore.AppendStats = null
+        val jobs = jobsDuring {
+          stats = IndexStore.appendBatch(spark, idxDir, batch) }
+        info(s"$jobs jobs")
+        assert(stats.appended === 20L && stats.repaired === 0L)
+        assert(jobs <= 8, s"$jobs jobs")
+        assert(multiset(deltaRows(idxDir, "codes"), codesCols) === wantCodes)
+        assert(multiset(deltaRows(idxDir, "rcodes"), rcodesCols) === wantRcodes)
+        val got = annMeta(idxDir)
+        assert(got === meta, "meta differs from the old shape's")
+        // each append lands one delta file per table; fold it before the
+        // next so deltaRows reads only this append's file
+        graft.sources.Maintenance.compactAnnIndex(spark, idxDir)
+      }
+    } finally {
+      deleteDir(idxDir)
+      deleteDir(corpus)
+    }
+  }
+
+  test("a batch estimated above the one-task bound, or of more than " +
+    "2,000 rows, is checkpointed, and the first " +
+    "writes the rows and meta of the same batch held on the driver") {
+    val all = graft.sources.Tables.load(spark, sfDir, "embeddings")
+    val corpus = writeCorpus(all.filter(col("vec_id") < 300))
+    val dirA = IndexStore.dirFor(spark, corpus)
+    val dirB = s"${dirA}_held"
+    try {
+      // training is deterministic: two builds, identical artifacts
+      IndexStore.build(spark, corpus, dirA)
+      IndexStore.build(spark, corpus, dirB)
+      // six disjoint filtered reads of the whole embeddings file: each
+      // estimates at the file's size, so the union estimates above 1 MB
+      val large = (0 until 6).map { i =>
+        all.filter(col("vec_id") >= 300 + 5 * i && col("vec_id") < 305 + 5 * i)
+      }.reduce(_ union _)
+      val held = spark.createDataFrame(
+        java.util.Arrays.asList(large.collect(): _*), large.schema)
+      assert(!IndexStore.holds(IndexStore.indexable(large)))
+      assert(IndexStore.holds(IndexStore.indexable(held)))
+      // a batch whose plan knows its row count is held up to 2,000 rows,
+      // however small its estimate
+      def synthetic(n: Long) = IndexStore.indexable(spark.range(n)
+        .select(col("id").as("vec_id"),
+          array_repeat(lit(1.0f), 64).as("embedding")))
+      assert(IndexStore.holds(synthetic(2000)))
+      assert(!IndexStore.holds(synthetic(2001)))
+      assert(graft.checks.Validations.fitsOneTask(synthetic(2001)))
+      assert(IndexStore.appendBatch(spark, dirA, large).appended === 30L)
+      assert(IndexStore.appendBatch(spark, dirB, held).appended === 30L)
+      for ((t, cols) <- Seq(("codes", codesCols), ("rcodes", rcodesCols)))
+        assert(multiset(deltaRows(dirA, t), cols) ===
+          multiset(deltaRows(dirB, t), cols), t)
+      assert(annMeta(dirA) === annMeta(dirB))
+      // both paths refuse a duplicated id, and a null id (which
+      // countDistinct does not count), with the same text
+      def nullId(df: DataFrame) =
+        df.limit(1).withColumn("vec_id", lit(null).cast("long"))
+      for (bad <- Seq(large.union(large.limit(1)), held.union(held.limit(1)),
+          large.union(nullId(large)), held.union(nullId(held)))) {
+        val e = intercept[IllegalArgumentException] {
+          IndexStore.appendBatch(spark, dirB, bad) }
+        assert(e.getMessage.contains("duplicate vec_id rows (1 extras)"))
+      }
+    } finally {
+      deleteDir(dirA)
+      deleteDir(dirB)
+      deleteDir(corpus)
+    }
+  }
+
+  test("the torn-probe footer counts equal the served rows after a policy " +
+    "compaction left its absorbed delta files on disk, and a torn delta " +
+    "still reaches the full detection and its repair") {
+    val all = graft.sources.Tables.load(spark, sfDir, "embeddings")
+    val corpus = writeCorpus(all.filter(col("vec_id") < 300))
+    val idxDir = IndexStore.dirFor(spark, corpus)
+    def served(t: String): Long =
+      IndexStore.withDeltaOf(spark, idxDir, t)(identity).count()
+    try {
+      assert(IndexStore.ensure(spark, corpus).builtNow)
+      val b1 = all.filter(col("vec_id") >= 300 && col("vec_id") < 320)
+      b1.write.mode("append").parquet(s"$corpus/embeddings.parquet")
+      IndexStore.appendBatch(spark, idxDir, b1)
+      val policy = IndexStore.RebuildPolicy(driftAt = 1e9,
+        appendFractionAt = 1.0, compactAtFilesPerCell = 1)
+      assert(!IndexStore.ensure(spark, corpus, Some(policy)).builtNow)
+      // the fold absorbed the delta file and keeps it inside its TTL
+      val absorbed = IndexStore.absorbedDelta(spark, idxDir, "codes").keys
+      assert(absorbed.nonEmpty && absorbed.forall(n => new java.io.File(
+        s"${IndexStore.deltaDirOf(idxDir, "codes")}/$n").exists))
+      val (fs, _) = graft.Scratch.fs(spark, idxDir)
+      def cp(from: String, to: String): Unit =
+        org.apache.hadoop.fs.FileUtil.copy(fs,
+          new org.apache.hadoop.fs.Path(from), fs,
+          new org.apache.hadoop.fs.Path(to), false,
+          spark.sparkContext.hadoopConfiguration)
+      cp(s"$idxDir/meta", s"$idxDir/meta__snap")
+      val b2 = all.filter(col("vec_id") >= 320 && col("vec_id") < 340)
+      IndexStore.appendBatch(spark, idxDir, b2)
+      for (t <- Seq("codes", "rcodes")) {
+        var n = 0L
+        assert(jobsDuring { n = IndexStore.storedRows(spark, idxDir, t) } === 0)
+        assert(n === served(t) && n === 340L * Similarity.pqSubspaces, t)
+      }
+      // tear the last append: its rcodes delta file and meta are lost
+      // (the crash window between the codes and rcodes writes)
+      val before = annMeta(idxDir)
+      IndexStore.deltaFileNames(spark, idxDir, "rcodes")
+        .foreach(n => deleteDir(s"${IndexStore.deltaDirOf(idxDir, "rcodes")}/$n"))
+      deleteDir(s"$idxDir/meta")
+      cp(s"$idxDir/meta__snap", s"$idxDir/meta")
+      deleteDir(s"$idxDir/meta__snap")
+      assert(IndexStore.storedRows(spark, idxDir, "codes") !==
+        IndexStore.storedRows(spark, idxDir, "rcodes"))
+      val other = all.filter(col("vec_id") >= 340 && col("vec_id") < 360)
+      val e = intercept[IllegalStateException] {
+        IndexStore.appendBatch(spark, idxDir, other) }
+      assert(e.getMessage.contains("torn"))
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(b2.collect(): _*), b2.schema)
+      val replay = IndexStore.appendBatch(spark, idxDir, local)
+      assert(replay.appended === 0L && replay.repaired === 20L)
+      assert(annMeta(idxDir) === before)
+      b2.write.mode("append").parquet(s"$corpus/embeddings.parquet")
+      assert(!IndexStore.ensure(spark, corpus).builtNow)
+    } finally {
+      deleteDir(idxDir)
+      deleteDir(corpus)
+    }
+  }
+
   test("compactAnnIndex collapses per-cell append slivers; results and " +
     "fingerprint are untouched") {
     val all = graft.sources.Tables.load(spark, sfDir, "embeddings")
